@@ -11,27 +11,22 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
-/** Columnar (parquet) encoding of checkpoint parts — Delta's
-  * checkpoint format, which exists because at 10⁷ AddFiles the
-  * replay bottleneck is TEXT PARSING: a JSON checkpoint decodes every
-  * character of every field through a generic parser, while parquet
-  * decodes typed columns with dictionary/RLE encoding and snappy
-  * blocks. The log keeps the Delta shape: one row per action, one
-  * optional group per action type (`add`/`metaData`/`protocol`/
-  * `txn`), exactly one of them set per row.
+/** Columnar (parquet) encoding of checkpoint sidecars — the AddFile
+  * slices a manifest checkpoint references ([[LakeLog]]'s manifest +
+  * `_sidecars/` form). Delta's checkpoint format is parquet because at
+  * 10⁷ AddFiles the replay bottleneck is TEXT PARSING: a JSON
+  * checkpoint decodes every character of every field through a
+  * generic parser, while parquet decodes typed columns with
+  * dictionary/RLE encoding and snappy blocks. One row per AddFile, in
+  * one `add` group; the head actions (Protocol, Metadata,
+  * DomainMetadata, Txn) ride the JSON manifest, and small tables keep
+  * the single-file JSON checkpoint (human-inspectable, and parse time
+  * is irrelevant at that size).
   *
-  * Scope: MULTI-PART checkpoints only. Small tables keep the
-  * single-file JSON checkpoint (human-inspectable, trivially
-  * diffable, and parse time is irrelevant at that size); the JSON
-  * part reader stays for compatibility with logs written by earlier
-  * engine versions — [[LakeLog.readCheckpointPart]] dispatches on the
-  * file extension.
-  *
-  * Uses parquet-java's example Group API directly (the
-  * [[ParquetFooters]] precedent): the log layer stays free of Spark
-  * jobs — checkpoint parts are driver-written today, and parts
-  * decode concurrently across cores via the same `.par` replay path
-  * as JSON parts.
+  * Uses parquet-java directly (the [[ParquetFooters]] precedent): the
+  * log layer stays free of Spark jobs — sidecars are driver-written,
+  * and decode concurrently across cores in replay or as tasks of the
+  * columnar index's scans.
   */
 object CheckpointParquet {
 
@@ -70,37 +65,6 @@ object CheckpointParquet {
         optional int64 baseRowId;
         optional int64 clusterGen;
       }
-      optional group domainMetadata {
-        required binary domain (STRING);
-        repeated group configuration {
-          required binary key (STRING);
-          optional binary value (STRING);
-        }
-        required boolean removed;
-      }
-      optional group metaData {
-        required binary schemaDDL (STRING);
-        repeated binary partitionColumns (STRING);
-        required int64 createdTime;
-        repeated group constraints {
-          required binary key (STRING);
-          required binary value (STRING);
-        }
-        repeated group properties {
-          required binary key (STRING);
-          required binary value (STRING);
-        }
-      }
-      optional group protocol {
-        required int32 minReaderVersion;
-        required int32 minWriterVersion;
-        repeated binary readerFeatures (STRING);
-        repeated binary writerFeatures (STRING);
-      }
-      optional group txn {
-        required binary appId (STRING);
-        required int64 version;
-      }
     }""")
 
   private def addMap(g: Group, field: String,
@@ -111,51 +75,24 @@ object CheckpointParquet {
       if (v != null) kv.add("value", v)
     }
 
-  private def toGroup(a: Action): Group = {
+  private def toGroup(f: AddFile): Group = {
     val g = new SimpleGroup(SCHEMA)
-    a match {
-      case f: AddFile =>
-        val add = g.addGroup("add")
-        add.add("path", f.path)
-        addMap(add, "partitionValues", f.partitionValues)
-        add.add("size", f.size)
-        add.add("numRecords", f.numRecords)
-        addMap(add, "minValues", f.minValues)
-        addMap(add, "maxValues", f.maxValues)
-        f.nullCounts.foreach { case (k, v) =>
-          val kv = add.addGroup("nullCounts")
-          kv.add("key", k); kv.add("value", v)
-        }
-        f.dvPath.foreach(add.add("dvPath", _))
-        add.add("dvCardinality", f.dvCardinality)
-        f.bloomPath.foreach(add.add("bloomPath", _))
-        f.baseRowId.foreach(add.add("baseRowId", _))
-        f.clusterGen.foreach(add.add("clusterGen", _))
-      case d: DomainMetadata =>
-        val dm = g.addGroup("domainMetadata")
-        dm.add("domain", d.domain)
-        addMap(dm, "configuration", d.configuration)
-        dm.add("removed", d.removed)
-      case m: Metadata =>
-        val md = g.addGroup("metaData")
-        md.add("schemaDDL", m.schemaDDL)
-        m.partitionColumns.foreach(md.add("partitionColumns", _))
-        md.add("createdTime", m.createdTime)
-        addMap(md, "constraints", m.constraints)
-        addMap(md, "properties", m.properties)
-      case p: Protocol =>
-        val pr = g.addGroup("protocol")
-        pr.add("minReaderVersion", p.minReaderVersion)
-        pr.add("minWriterVersion", p.minWriterVersion)
-        p.readerFeatures.foreach(pr.add("readerFeatures", _))
-        p.writerFeatures.foreach(pr.add("writerFeatures", _))
-      case t: Txn =>
-        val tx = g.addGroup("txn")
-        tx.add("appId", t.appId)
-        tx.add("version", t.version)
-      case other => throw new IllegalArgumentException(
-        s"action type not valid in a checkpoint: $other")
+    val add = g.addGroup("add")
+    add.add("path", f.path)
+    addMap(add, "partitionValues", f.partitionValues)
+    add.add("size", f.size)
+    add.add("numRecords", f.numRecords)
+    addMap(add, "minValues", f.minValues)
+    addMap(add, "maxValues", f.maxValues)
+    f.nullCounts.foreach { case (k, v) =>
+      val kv = add.addGroup("nullCounts")
+      kv.add("key", k); kv.add("value", v)
     }
+    f.dvPath.foreach(add.add("dvPath", _))
+    add.add("dvCardinality", f.dvCardinality)
+    f.bloomPath.foreach(add.add("bloomPath", _))
+    f.baseRowId.foreach(add.add("baseRowId", _))
+    f.clusterGen.foreach(add.add("clusterGen", _))
     g
   }
 
@@ -170,93 +107,66 @@ object CheckpointParquet {
     }.toMap
   }
 
-  private def readStrings(g: Group, field: String): Seq[String] =
-    (0 until g.getFieldRepetitionCount(field)).map(g.getString(field, _))
-
   private def optString(g: Group, field: String): Option[String] =
     if (g.getFieldRepetitionCount(field) > 0) Some(g.getString(field, 0))
     else None
 
-  private def fromGroup(g: Group): Action =
-    if (g.getFieldRepetitionCount("add") > 0) {
-      val a = g.getGroup("add", 0)
-      // bulk decode goes through [[Interned.addFile]] (shared key
-      // arrays, interned column names / partition values, primitive
-      // null counts) — the checkpoint is the O(table) volume, and
-      // this runs on executors in the columnar index's distributed
-      // scans too (per-JVM intern tables there)
-      Interned.addFile(AddFile(
-        path = a.getString("path", 0),
-        partitionValues = readMap(a, "partitionValues"),
-        size = a.getLong("size", 0),
-        numRecords = a.getLong("numRecords", 0),
-        minValues = readMap(a, "minValues"),
-        maxValues = readMap(a, "maxValues"),
-        nullCounts = (0 until a.getFieldRepetitionCount("nullCounts"))
-          .map { i =>
-            val kv = a.getGroup("nullCounts", i)
-            kv.getString("key", 0) -> kv.getLong("value", 0)
-          }.toMap,
-        dvPath = optString(a, "dvPath"),
-        dvCardinality = a.getLong("dvCardinality", 0),
-        bloomPath = optString(a, "bloomPath"),
-        baseRowId =
-          if (a.getFieldRepetitionCount("baseRowId") > 0)
-            Some(a.getLong("baseRowId", 0))
-          else None,
-        clusterGen =
-          if (a.getFieldRepetitionCount("clusterGen") > 0)
-            Some(a.getLong("clusterGen", 0))
-          else None))
-    } else if (g.getFieldRepetitionCount("domainMetadata") > 0) {
-      val d = g.getGroup("domainMetadata", 0)
-      DomainMetadata(
-        domain = d.getString("domain", 0),
-        configuration = readMap(d, "configuration"),
-        removed = d.getBoolean("removed", 0))
-    } else if (g.getFieldRepetitionCount("metaData") > 0) {
-      val m = g.getGroup("metaData", 0)
-      Metadata(
-        schemaDDL = m.getString("schemaDDL", 0),
-        partitionColumns = readStrings(m, "partitionColumns"),
-        createdTime = m.getLong("createdTime", 0),
-        constraints = readMap(m, "constraints"),
-        properties = readMap(m, "properties"))
-    } else if (g.getFieldRepetitionCount("protocol") > 0) {
-      val p = g.getGroup("protocol", 0)
-      Protocol(
-        minReaderVersion = p.getInteger("minReaderVersion", 0),
-        minWriterVersion = p.getInteger("minWriterVersion", 0),
-        readerFeatures = readStrings(p, "readerFeatures"),
-        writerFeatures = readStrings(p, "writerFeatures"))
-    } else if (g.getFieldRepetitionCount("txn") > 0) {
-      val t = g.getGroup("txn", 0)
-      Txn(t.getString("appId", 0), t.getLong("version", 0))
-    } else throw new IllegalArgumentException(
-      "checkpoint parquet row with no action group set")
+  private def fromGroup(g: Group): AddFile = {
+    if (g.getFieldRepetitionCount("add") == 0)
+      throw new IllegalArgumentException(
+        "checkpoint parquet row with no add group set")
+    val a = g.getGroup("add", 0)
+    // bulk decode goes through [[Interned.addFile]] (shared key
+    // arrays, interned column names / partition values, primitive
+    // null counts) — the checkpoint is the O(table) volume, and
+    // this runs on executors in the columnar index's distributed
+    // scans too (per-JVM intern tables there)
+    Interned.addFile(AddFile(
+      path = a.getString("path", 0),
+      partitionValues = readMap(a, "partitionValues"),
+      size = a.getLong("size", 0),
+      numRecords = a.getLong("numRecords", 0),
+      minValues = readMap(a, "minValues"),
+      maxValues = readMap(a, "maxValues"),
+      nullCounts = (0 until a.getFieldRepetitionCount("nullCounts"))
+        .map { i =>
+          val kv = a.getGroup("nullCounts", i)
+          kv.getString("key", 0) -> kv.getLong("value", 0)
+        }.toMap,
+      dvPath = optString(a, "dvPath"),
+      dvCardinality = a.getLong("dvCardinality", 0),
+      bloomPath = optString(a, "bloomPath"),
+      baseRowId =
+        if (a.getFieldRepetitionCount("baseRowId") > 0)
+          Some(a.getLong("baseRowId", 0))
+        else None,
+      clusterGen =
+        if (a.getFieldRepetitionCount("clusterGen") > 0)
+          Some(a.getLong("clusterGen", 0))
+        else None))
+  }
 
-  /** Stream `actions` into the parquet file at `target` (written via
-    * a tmp sibling + atomic publish by the CALLER — this writes the
+  /** Stream `adds` into the parquet file at `target` (written via a
+    * tmp sibling + atomic publish by the CALLER — this writes the
     * bytes only). Memory is bounded by parquet's row-group buffer,
-    * not the action count.
+    * not the row count.
     *
-    * Encodes through a direct [[ActionWriteSupport]] (round 17): the
+    * Encodes through a direct [[AddWriteSupport]] (round 17): the
     * Group-API writer materialized ~40 boxed objects per AddFile and
     * re-walked them recursively — at a 10⁶-row sidecar write that was
     * the measured bulk of the incremental cadence once the full
     * re-serialization was gone. The emitted FORMAT is byte-compatible
-    * (same schema, same field order); readers are untouched and a
-    * differential suite pins group-writer/direct-writer read-back
-    * equality.
+    * (same schema, same field order); a differential suite pins
+    * group-writer/direct-writer read-back equality.
     */
-  def write(target: Path, actions: Iterator[Action]): Unit = {
-    val writer = new ActionWriterBuilder(
+  def write(target: Path, adds: Iterator[AddFile]): Unit = {
+    val writer = new AddWriterBuilder(
       new org.apache.hadoop.fs.Path(target.toString))
       .withConf(new Configuration())
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
       .build()
-    try actions.foreach(writer.write)
+    try adds.foreach(writer.write)
     finally writer.close()
     dropCrcSibling(target)
   }
@@ -265,7 +175,7 @@ object CheckpointParquet {
     * writer is differentially tested against.
     */
   private[lake] def writeViaGroups(
-      target: Path, actions: Iterator[Action]): Unit = {
+      target: Path, adds: Iterator[AddFile]): Unit = {
     val conf = new Configuration()
     GroupWriteSupport.setSchema(SCHEMA, conf)
     val writer = ExampleParquetWriter
@@ -274,7 +184,7 @@ object CheckpointParquet {
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
       .build()
-    try actions.foreach(a => writer.write(toGroup(a)))
+    try adds.foreach(a => writer.write(toGroup(a)))
     finally writer.close()
     dropCrcSibling(target)
   }
@@ -290,24 +200,24 @@ object CheckpointParquet {
     ()
   }
 
-  private final class ActionWriterBuilder(
+  private final class AddWriterBuilder(
       path: org.apache.hadoop.fs.Path)
       extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-        Action, ActionWriterBuilder](path) {
-    override def self(): ActionWriterBuilder = this
+        AddFile, AddWriterBuilder](path) {
+    override def self(): AddWriterBuilder = this
     override def getWriteSupport(conf: Configuration)
-        : org.apache.parquet.hadoop.api.WriteSupport[Action] =
-      new ActionWriteSupport
+        : org.apache.parquet.hadoop.api.WriteSupport[AddFile] =
+      new AddWriteSupport
   }
 
-  /** Emits each action's fields straight to the RecordConsumer in
+  /** Emits each AddFile's fields straight to the RecordConsumer in
     * [[SCHEMA]] order — no intermediate Group tree. Field indexes are
     * positional against SCHEMA; repeated groups write all their
     * occurrences inside one startField/endField pair (the
     * GroupWriter contract).
     */
-  private final class ActionWriteSupport
-      extends org.apache.parquet.hadoop.api.WriteSupport[Action] {
+  private final class AddWriteSupport
+      extends org.apache.parquet.hadoop.api.WriteSupport[AddFile] {
     import org.apache.parquet.io.api.{Binary, RecordConsumer}
 
     private var rc: RecordConsumer = _
@@ -345,108 +255,48 @@ object CheckpointParquet {
         rc.endField(name, idx)
       }
 
-    override def write(a: Action): Unit = {
+    override def write(f: AddFile): Unit = {
       rc.startMessage()
-      a match {
-        case f: AddFile =>
-          rc.startField("add", 0)
+      rc.startField("add", 0)
+      rc.startGroup()
+      str("path", 0, f.path)
+      strMap("partitionValues", 1, f.partitionValues)
+      i64("size", 2, f.size)
+      i64("numRecords", 3, f.numRecords)
+      strMap("minValues", 4, f.minValues)
+      strMap("maxValues", 5, f.maxValues)
+      if (f.nullCounts.nonEmpty) {
+        rc.startField("nullCounts", 6)
+        f.nullCounts.foreach { case (k, v) =>
           rc.startGroup()
-          str("path", 0, f.path)
-          strMap("partitionValues", 1, f.partitionValues)
-          i64("size", 2, f.size)
-          i64("numRecords", 3, f.numRecords)
-          strMap("minValues", 4, f.minValues)
-          strMap("maxValues", 5, f.maxValues)
-          if (f.nullCounts.nonEmpty) {
-            rc.startField("nullCounts", 6)
-            f.nullCounts.foreach { case (k, v) =>
-              rc.startGroup()
-              str("key", 0, k)
-              i64("value", 1, v)
-              rc.endGroup()
-            }
-            rc.endField("nullCounts", 6)
-          }
-          f.dvPath.foreach(str("dvPath", 7, _))
-          i64("dvCardinality", 8, f.dvCardinality)
-          f.bloomPath.foreach(str("bloomPath", 9, _))
-          f.baseRowId.foreach(i64("baseRowId", 10, _))
-          f.clusterGen.foreach(i64("clusterGen", 11, _))
+          str("key", 0, k)
+          i64("value", 1, v)
           rc.endGroup()
-          rc.endField("add", 0)
-        case d: DomainMetadata =>
-          rc.startField("domainMetadata", 1)
-          rc.startGroup()
-          str("domain", 0, d.domain)
-          strMap("configuration", 1, d.configuration)
-          rc.startField("removed", 2)
-          rc.addBoolean(d.removed)
-          rc.endField("removed", 2)
-          rc.endGroup()
-          rc.endField("domainMetadata", 1)
-        case m: Metadata =>
-          rc.startField("metaData", 2)
-          rc.startGroup()
-          str("schemaDDL", 0, m.schemaDDL)
-          if (m.partitionColumns.nonEmpty) {
-            rc.startField("partitionColumns", 1)
-            m.partitionColumns.foreach(c =>
-              rc.addBinary(Binary.fromString(c)))
-            rc.endField("partitionColumns", 1)
-          }
-          i64("createdTime", 2, m.createdTime)
-          strMap("constraints", 3, m.constraints)
-          strMap("properties", 4, m.properties)
-          rc.endGroup()
-          rc.endField("metaData", 2)
-        case p: Protocol =>
-          rc.startField("protocol", 3)
-          rc.startGroup()
-          rc.startField("minReaderVersion", 0)
-          rc.addInteger(p.minReaderVersion)
-          rc.endField("minReaderVersion", 0)
-          rc.startField("minWriterVersion", 1)
-          rc.addInteger(p.minWriterVersion)
-          rc.endField("minWriterVersion", 1)
-          if (p.readerFeatures.nonEmpty) {
-            rc.startField("readerFeatures", 2)
-            p.readerFeatures.foreach(x =>
-              rc.addBinary(Binary.fromString(x)))
-            rc.endField("readerFeatures", 2)
-          }
-          if (p.writerFeatures.nonEmpty) {
-            rc.startField("writerFeatures", 3)
-            p.writerFeatures.foreach(x =>
-              rc.addBinary(Binary.fromString(x)))
-            rc.endField("writerFeatures", 3)
-          }
-          rc.endGroup()
-          rc.endField("protocol", 3)
-        case t: Txn =>
-          rc.startField("txn", 4)
-          rc.startGroup()
-          str("appId", 0, t.appId)
-          i64("version", 1, t.version)
-          rc.endGroup()
-          rc.endField("txn", 4)
-        case other => throw new IllegalArgumentException(
-          s"action type not valid in a checkpoint: $other")
+        }
+        rc.endField("nullCounts", 6)
       }
+      f.dvPath.foreach(str("dvPath", 7, _))
+      i64("dvCardinality", 8, f.dvCardinality)
+      f.bloomPath.foreach(str("bloomPath", 9, _))
+      f.baseRowId.foreach(i64("baseRowId", 10, _))
+      f.clusterGen.foreach(i64("clusterGen", 11, _))
+      rc.endGroup()
+      rc.endField("add", 0)
       rc.endMessage()
     }
   }
 
-  /** All actions of the parquet checkpoint part at `p` — DIRECT
-    * materialization: converter callbacks assemble each Action
-    * straight from page values, no intermediate Group tree (the read
-    * twin of [[ActionWriteSupport]]; measured ~2-3× the Group-API
-    * decode on the checkpoint hot loop, which bounds snapshot replay
-    * and every columnar candidate scan). The Group path survives as
+  /** All AddFiles of the sidecar at `p` — DIRECT materialization:
+    * converter callbacks assemble each AddFile straight from page
+    * values, no intermediate Group tree (the read twin of
+    * [[AddWriteSupport]]; measured ~2-3× the Group-API decode on the
+    * checkpoint hot loop, which bounds snapshot replay and every
+    * columnar candidate scan). The Group path survives as
     * [[readViaGroups]], the reference the direct reader is
     * differentially tested against.
     */
-  def read(p: Path): Seq[Action] = {
-    val reader = new ActionBuilder(
+  def read(p: Path): Seq[AddFile] = {
+    val reader = new AddBuilder(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toString), new Configuration()))
       .withConf(new Configuration())
@@ -457,7 +307,7 @@ object CheckpointParquet {
   }
 
   /** Group-API reference reader (differential twin of [[read]]). */
-  private[lake] def readViaGroups(p: Path): Seq[Action] = {
+  private[lake] def readViaGroups(p: Path): Seq[AddFile] = {
     val reader = ParquetReader
       .builder(new GroupReadSupport(),
         new org.apache.hadoop.fs.Path(p.toString))
@@ -469,22 +319,22 @@ object CheckpointParquet {
   }
 
   /** [[ParquetReader.Builder]] over an [[InputFile]] with the direct
-    * Action read support.
+    * AddFile read support.
     */
-  private final class ActionBuilder(in: org.apache.parquet.io.InputFile)
-      extends ParquetReader.Builder[Action](in) {
+  private final class AddBuilder(in: org.apache.parquet.io.InputFile)
+      extends ParquetReader.Builder[AddFile](in) {
     override protected def getReadSupport()
-        : org.apache.parquet.hadoop.api.ReadSupport[Action] =
-      new ActionReadSupport()
+        : org.apache.parquet.hadoop.api.ReadSupport[AddFile] =
+      new AddReadSupport()
   }
 
   /** Direct-materialization read support: one converter tree per file
-    * schema (built from the FILE's schema, field-by-NAME, so parts
+    * schema (built from the FILE's schema, field-by-NAME, so sidecars
     * written by older engine versions — fewer optional add columns —
     * decode through the same tree with absent fields at defaults).
     */
-  private final class ActionReadSupport
-      extends org.apache.parquet.hadoop.api.ReadSupport[Action] {
+  private final class AddReadSupport
+      extends org.apache.parquet.hadoop.api.ReadSupport[AddFile] {
     import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
     override def init(context: InitContext): ReadSupport.ReadContext =
       new ReadSupport.ReadContext(context.getFileSchema)
@@ -493,14 +343,14 @@ object CheckpointParquet {
         keyValueMetaData: java.util.Map[String, String],
         fileSchema: MessageType,
         readContext: ReadSupport.ReadContext)
-        : org.apache.parquet.io.api.RecordMaterializer[Action] =
-      new ActionMaterializer(readContext.getRequestedSchema)
+        : org.apache.parquet.io.api.RecordMaterializer[AddFile] =
+      new AddMaterializer(readContext.getRequestedSchema)
   }
 
-  private final class ActionMaterializer(schema: MessageType)
-      extends org.apache.parquet.io.api.RecordMaterializer[Action] {
-    private val root = new ActionRootConverter(schema)
-    override def getCurrentRecord: Action = root.current
+  private final class AddMaterializer(schema: MessageType)
+      extends org.apache.parquet.io.api.RecordMaterializer[AddFile] {
+    private val root = new AddRootConverter(schema)
+    override def getCurrentRecord: AddFile = root.current
     override def getRootConverter
         : org.apache.parquet.io.api.GroupConverter = root
   }
@@ -528,15 +378,6 @@ object CheckpointParquet {
     new PrimitiveConverter {
       override def addLong(v: Long): Unit = set(v)
     }
-  private def intConv(set: Int => Unit): PrimitiveConverter =
-    new PrimitiveConverter {
-      override def addInt(v: Int): Unit = set(v)
-    }
-  private def boolConv(set: Boolean => Unit): PrimitiveConverter =
-    new PrimitiveConverter {
-      override def addBoolean(v: Boolean): Unit = set(v)
-    }
-
   /** Repeated {key, optional value} group → (key, value) appended to
     * `buf` per occurrence (value null when absent, the strMap write
     * contract).
@@ -635,103 +476,8 @@ object CheckpointParquet {
       clusterGen = if (hasGen) Some(clusterGen) else None)))
   }
 
-  private final class MetaConverter(g: GroupType,
-      publish: Metadata => Unit) extends GroupConverter {
-    private var schemaDDL: String = _
-    private val partCols = scala.collection.mutable.ArrayBuffer
-      .empty[String]
-    private var createdTime = 0L
-    private val constraints = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String)]
-    private val properties = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String)]
-    private val slots: Array[Converter] =
-      (0 until g.getFieldCount).map { i =>
-        g.getFieldName(i) match {
-          case "schemaDDL" => strConv(schemaDDL = _)
-          case "partitionColumns" => strConv(c => { partCols += c; () })
-          case "createdTime" => longConv(createdTime = _)
-          case "constraints" => new StrKvConverter(constraints)
-          case "properties" => new StrKvConverter(properties)
-          case _ => noopConverter
-        }
-      }.toArray
-    override def getConverter(i: Int): Converter = slots(i)
-    override def start(): Unit = {
-      schemaDDL = null; partCols.clear(); createdTime = 0L
-      constraints.clear(); properties.clear()
-    }
-    override def end(): Unit = publish(Metadata(
-      schemaDDL = schemaDDL,
-      partitionColumns = partCols.toSeq,
-      createdTime = createdTime,
-      constraints = constraints.toMap,
-      properties = properties.toMap))
-  }
-
-  private final class ProtocolConverter(g: GroupType,
-      publish: Protocol => Unit) extends GroupConverter {
-    private var minR = 0
-    private var minW = 0
-    private val rf = scala.collection.mutable.ArrayBuffer.empty[String]
-    private val wf = scala.collection.mutable.ArrayBuffer.empty[String]
-    private val slots: Array[Converter] =
-      (0 until g.getFieldCount).map { i =>
-        g.getFieldName(i) match {
-          case "minReaderVersion" => intConv(minR = _)
-          case "minWriterVersion" => intConv(minW = _)
-          case "readerFeatures" => strConv(f => { rf += f; () })
-          case "writerFeatures" => strConv(f => { wf += f; () })
-          case _ => noopConverter
-        }
-      }.toArray
-    override def getConverter(i: Int): Converter = slots(i)
-    override def start(): Unit = { minR = 0; minW = 0; rf.clear(); wf.clear() }
-    override def end(): Unit =
-      publish(Protocol(minR, minW, rf.toSeq, wf.toSeq))
-  }
-
-  private final class DomainConverter(g: GroupType,
-      publish: DomainMetadata => Unit) extends GroupConverter {
-    private var domain: String = _
-    private val cfg = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String)]
-    private var removed = false
-    private val slots: Array[Converter] =
-      (0 until g.getFieldCount).map { i =>
-        g.getFieldName(i) match {
-          case "domain" => strConv(domain = _)
-          case "configuration" => new StrKvConverter(cfg)
-          case "removed" => boolConv(removed = _)
-          case _ => noopConverter
-        }
-      }.toArray
-    override def getConverter(i: Int): Converter = slots(i)
-    override def start(): Unit = { domain = null; cfg.clear(); removed = false }
-    override def end(): Unit =
-      publish(DomainMetadata(domain, cfg.toMap, removed))
-  }
-
-  private final class TxnConverter(g: GroupType, publish: Txn => Unit)
-      extends GroupConverter {
-    private var appId: String = _
-    private var version = 0L
-    private val slots: Array[Converter] =
-      (0 until g.getFieldCount).map { i =>
-        g.getFieldName(i) match {
-          case "appId" => strConv(appId = _)
-          case "version" => longConv(version = _)
-          case _ => noopConverter
-        }
-      }.toArray
-    override def getConverter(i: Int): Converter = slots(i)
-    override def start(): Unit = { appId = null; version = 0L }
-    override def end(): Unit = publish(Txn(appId, version))
-  }
-
-  /** No-op group converter for unknown optional action groups written
-    * by a future engine version (the same forward-compat posture as
-    * the Group path's fromGroup, which skips unknown rows).
+  /** No-op group converter for unknown optional groups written by a
+    * future engine version (forward compatibility).
     */
   private final class NoopGroupConverter(g: GroupType)
       extends GroupConverter {
@@ -747,23 +493,15 @@ object CheckpointParquet {
     override def end(): Unit = ()
   }
 
-  private final class ActionRootConverter(schema: MessageType)
+  private final class AddRootConverter(schema: MessageType)
       extends GroupConverter {
-    var current: Action = _
+    var current: AddFile = _
     private val slots: Array[Converter] =
       (0 until schema.getFieldCount).map { i =>
         val ft = schema.getType(i)
         schema.getFieldName(i) match {
           case "add" =>
             new AddConverter(ft.asGroupType(), a => current = a)
-          case "metaData" =>
-            new MetaConverter(ft.asGroupType(), m => current = m)
-          case "protocol" =>
-            new ProtocolConverter(ft.asGroupType(), p => current = p)
-          case "domainMetadata" =>
-            new DomainConverter(ft.asGroupType(), d => current = d)
-          case "txn" =>
-            new TxnConverter(ft.asGroupType(), t => current = t)
           case _ => ft match {
             case gt: GroupType => new NoopGroupConverter(gt)
             case _ => noopConverter
@@ -776,22 +514,22 @@ object CheckpointParquet {
       // loud like the Group path's fromGroup: a null record would
       // falsely signal EOF to parquet's reader loop (silent truncation)
       if (current == null) throw new IllegalArgumentException(
-        "checkpoint parquet row with no action group set")
+        "checkpoint parquet row with no add group set")
   }
 
-  /** All actions of the part behind a [[LogStore]] read handle — THE
-    * entry point for executor-side checkpoint scans (and any driver
-    * read that should honor the store's GET semantics). A
+  /** All AddFiles of the sidecar behind a [[LogStore]] read handle —
+    * THE entry point for executor-side checkpoint scans (and any
+    * driver read that should honor the store's GET semantics). A
     * locally-backed handle keeps the streaming file read; a remote
     * handle GETs the object once and decodes the footer/pages from
     * the buffered body — the same one-GET cost an object-store
-    * parquet client pays, bounded by the part-size cadence
+    * parquet client pays, bounded by the slice size
     * ([[LakeLog.CHECKPOINT_PART_MAX_ACTIONS]]).
     */
-  def read(r: LogFileReader): Seq[Action] = r.localPath match {
+  def read(r: LogFileReader): Seq[AddFile] = r.localPath match {
     case Some(lp) => read(java.nio.file.Paths.get(lp))
     case None =>
-      val reader = new ActionBuilder(new BytesInputFile(r.readAllBytes()))
+      val reader = new AddBuilder(new BytesInputFile(r.readAllBytes()))
         .withConf(new Configuration())
         .build()
       try Iterator.continually(reader.read())
@@ -849,83 +587,6 @@ object CheckpointParquet {
     }
   }
 
-  /** Metadata / Protocol / DomainMetadata rows of the part at `p`,
-    * read under a PROJECTION that never decodes the add columns —
-    * the add group's 10⁶ paths and stats maps are the entire byte
-    * volume of a big checkpoint, and a caller that only needs table
-    * metadata (commit-time row-id stamping) must not pay their
-    * decode. Row iteration over the projected (near-empty) rows is
-    * microseconds per thousand.
-    */
-  private val META_SCHEMA: MessageType = MessageTypeParser
-    .parseMessageType("""message meta {
-      optional group domainMetadata {
-        required binary domain (STRING);
-        repeated group configuration {
-          required binary key (STRING);
-          optional binary value (STRING);
-        }
-        required boolean removed;
-      }
-      optional group metaData {
-        required binary schemaDDL (STRING);
-        repeated binary partitionColumns (STRING);
-        required int64 createdTime;
-        repeated group constraints {
-          required binary key (STRING);
-          required binary value (STRING);
-        }
-        repeated group properties {
-          required binary key (STRING);
-          required binary value (STRING);
-        }
-      }
-      optional group protocol {
-        required int32 minReaderVersion;
-        required int32 minWriterVersion;
-        repeated binary readerFeatures (STRING);
-        repeated binary writerFeatures (STRING);
-      }
-      optional group txn {
-        required binary appId (STRING);
-        required int64 version;
-      }
-    }""")
-
-  /** [[readMeta]] through a [[LogStore]] read handle — same dispatch
-    * as [[read(r:graft\.lake\.LogFileReader)*]]: streaming + projected
-    * when the store is locally backed, buffered GET otherwise (the
-    * projection still skips decoding the add columns either way; only
-    * the transport bytes differ).
-    */
-  def readMeta(r: LogFileReader): Seq[Action] = r.localPath match {
-    case Some(lp) => readMeta(java.nio.file.Paths.get(lp))
-    case None =>
-      val conf = new Configuration()
-      conf.set(org.apache.parquet.hadoop.api.ReadSupport
-        .PARQUET_READ_SCHEMA, META_SCHEMA.toString)
-      val reader = new GroupBuilder(new BytesInputFile(r.readAllBytes()))
-        .withConf(conf)
-        .build()
-      try Iterator.continually(reader.read())
-        .takeWhile(_ != null).flatMap(fromMetaGroup).toVector
-      finally reader.close()
-  }
-
-  def readMeta(p: Path): Seq[Action] = {
-    val conf = new Configuration()
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport
-      .PARQUET_READ_SCHEMA, META_SCHEMA.toString)
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(p.toString))
-      .withConf(conf)
-      .build()
-    try Iterator.continually(reader.read())
-      .takeWhile(_ != null).flatMap(fromMetaGroup).toVector
-    finally reader.close()
-  }
-
   /** `add.path` values only, under a projection that decodes nothing
     * else — the incremental-checkpoint writer's dirty-sidecar probe:
     * deciding WHICH sidecars a cadence must rewrite needs path
@@ -933,7 +594,7 @@ object CheckpointParquet {
     * stats/partition-map decode of every carried-forward slice per
     * cadence would put the O(table) cost back where the manifest
     * design removed it. Paths are the narrowest dictionary-encoded
-    * column of the part — a small fraction of its bytes.
+    * column of the sidecar — a small fraction of its bytes.
     */
   private val PATH_SCHEMA: MessageType = MessageTypeParser
     .parseMessageType("""message paths {
@@ -967,11 +628,11 @@ object CheckpointParquet {
 
   /** AddFile rows under a LITE projection that drops the three stats
     * maps (minValues/maxValues/nullCounts) — the byte bulk of a
-    * checkpoint part at realistic stat width (a 12-column table
+    * sidecar at realistic stat width (a 12-column table
     * carries ~24 strings + 12 longs of stats per file vs one path and
     * a handful of scalars). Parquet column pruning means the stats
     * column chunks are never read off the device, not merely not
-    * decoded — the scan pays a small fraction of the part's bytes in
+    * decoded — the scan pays a small fraction of the sidecar's bytes in
     * both I/O and CPU. Callers that only need identity/placement
     * facts (summary fold, (path, size) projections, partition tuples,
     * sidecar maps) ride this; anything that re-commits or prunes on
@@ -998,10 +659,10 @@ object CheckpointParquet {
       }
     }""")
 
-  /** The lite projection INTERSECTED with the part's own file schema:
+  /** The lite projection INTERSECTED with the sidecar's own file schema:
     * [[ADD_LITE_SCHEMA]] names every CURRENT add column, but parquet's
     * `checkContains` rejects a requested field absent from the file —
-    * a part written by an older engine build (before baseRowId /
+    * a sidecar written by an older engine build (before baseRowId /
     * clusterGen / bloomPath / numRecords / dvCardinality existed)
     * would throw on the exact projection the direct full [[read]]
     * tolerates by building its converter tree from the file schema.
@@ -1030,7 +691,7 @@ object CheckpointParquet {
 
   /** [[GroupReadSupport]] whose requested projection is
     * [[liteProjectionFor]] of the ACTUAL file schema, computed in
-    * `init` where parquet hands the file schema over — older parts
+    * `init` where parquet hands the file schema over — older sidecars
     * decode under exactly the columns they have.
     */
   private final class LiteReadSupport extends GroupReadSupport {
@@ -1092,37 +753,4 @@ object CheckpointParquet {
       .toVector.iterator
     finally reader.close()
   }
-
-  // fromGroup probes the `add` field, which the projection dropped
-  // from the record schema — convert against the projected fields
-  // only (add/remove/txn rows project to all-absent groups: skip)
-  private def fromMetaGroup(g: Group): Option[Action] =
-      if (g.getFieldRepetitionCount("metaData") > 0) {
-        val m = g.getGroup("metaData", 0)
-        Some(Metadata(
-          schemaDDL = m.getString("schemaDDL", 0),
-          partitionColumns = readStrings(m, "partitionColumns"),
-          createdTime = m.getLong("createdTime", 0),
-          constraints = readMap(m, "constraints"),
-          properties = readMap(m, "properties")))
-      } else if (g.getFieldRepetitionCount("protocol") > 0) {
-        val p = g.getGroup("protocol", 0)
-        Some(Protocol(
-          minReaderVersion = p.getInteger("minReaderVersion", 0),
-          minWriterVersion = p.getInteger("minWriterVersion", 0),
-          readerFeatures = readStrings(p, "readerFeatures"),
-          writerFeatures = readStrings(p, "writerFeatures")))
-      } else if (g.getFieldRepetitionCount("domainMetadata") > 0) {
-        val d = g.getGroup("domainMetadata", 0)
-        Some(DomainMetadata(
-          domain = d.getString("domain", 0),
-          configuration = readMap(d, "configuration"),
-          removed = d.getBoolean("removed", 0)))
-      } else if (g.getFieldRepetitionCount("txn") > 0) {
-        // Txn rides the checkpoint head prefix too: the metadata-light
-        // replay folds idempotent-writer watermarks so columnar DML
-        // planning gets `transactions` without a full replay
-        val t = g.getGroup("txn", 0)
-        Some(Txn(t.getString("appId", 0), t.getLong("version", 0)))
-      } else None
 }

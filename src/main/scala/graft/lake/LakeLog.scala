@@ -147,15 +147,7 @@ final class LakeLog(val tablePath: String) {
     // walks files and re-primes the chain)
     try Snapshot.seedMetaAfterCommit(this, version, stamped)
     catch { case NonFatal(_) => () }
-    if (version > 0 && version % CHECKPOINT_INTERVAL == 0) {
-      // all three are optimizations only — never fail the commit
-      try writeCheckpoint(version)
-      catch { case NonFatal(_) => () }
-      try writeHistorySidecar(version)
-      catch { case NonFatal(_) => () }
-      try cleanupAuxFiles(version)
-      catch { case NonFatal(_) => () }
-    }
+    maintainAtBoundary(version)
   }
 
   /** [[commit]] for O(table)-BULK commits (RESTORE's re-add actions):
@@ -211,7 +203,15 @@ final class LakeLog(val tablePath: String) {
           ioRetries += 1
       }
     }
-    if (version % CHECKPOINT_INTERVAL == 0) {
+    maintainAtBoundary(version)
+  }
+
+  /** At a [[LakeLog.CHECKPOINT_INTERVAL]] boundary: checkpoint, history
+    * sidecar, aux cleanup — all three are optimizations only, so each
+    * is best-effort and never fails the commit that triggered it.
+    */
+  private def maintainAtBoundary(version: Long): Unit =
+    if (version > 0 && version % CHECKPOINT_INTERVAL == 0) {
       try writeCheckpoint(version)
       catch { case NonFatal(_) => () }
       try writeHistorySidecar(version)
@@ -219,7 +219,6 @@ final class LakeLog(val tablePath: String) {
       try cleanupAuxFiles(version)
       catch { case NonFatal(_) => () }
     }
-  }
 
   /** Read `target` back for ambiguity resolution, retrying transient
     * I/O failures; the final failure propagates (NOT a conflict — see
@@ -317,8 +316,6 @@ final class LakeLog(val tablePath: String) {
           ckptStale(n.stripSuffix(".checkpoint.json").toLong)) ||
         (MANIFEST_FILE_RE.matches(n) &&
           ckptStale(n.stripSuffix(".checkpoint.manifest.json").toLong)) ||
-        (CHECKPOINT_PART_FILE_RE.matches(n) &&
-          ckptStale(n.split("\\.")(0).toLong)) ||
         (HISTORY_FILE_RE.matches(n) && {
           val v = n.stripSuffix(".history.json").toLong
           v < keepFrom && !newestHistory.contains(v)
@@ -432,102 +429,36 @@ final class LakeLog(val tablePath: String) {
     }
   }
 
-  /** Write the checkpoint of the full replayed state at v. Small
-    * states write the single atomic `<v>.checkpoint.json`; above
-    * [[LakeLog.CHECKPOINT_PART_MAX_ACTIONS]] actions the state splits
-    * into `<v>.checkpoint.<part>.<numParts>.json` parts written
-    * incrementally — each write materializes only one part's lines,
-    * so checkpointing a 10⁷-AddFile table never builds an O(table)
-    * string buffer on the driver (Delta's multi-part checkpoint
-    * layout, which exists for exactly this cliff). Parts carry their
-    * total count in the name, so a reader can tell a complete set
-    * from a crashed writer's partial one without any extra marker
-    * file; an incomplete set is simply ignored ([[checkpointVersionsIn]]).
+  /** Write the checkpoint of the state at `version`, in one of two
+    * forms. A state of at most [[LakeLog.CHECKPOINT_PART_MAX_ACTIONS]]
+    * actions writes the single atomic `<v>.checkpoint.json`; a bigger
+    * one — or any table that already has a manifest chain — writes the
+    * manifest + parquet sidecar form (below), whose cadence carries
+    * unchanged sidecar slices forward BY REFERENCE, so it costs
+    * O(tail delta + dirty slices), never a full O(table)
+    * re-serialization. A chain whose tail since its last manifest is
+    * no longer replayable (log retention) restarts from a full replay.
     */
-  private def writeCheckpoint(version: Long): Unit = {
-    // Incremental (Delta v2-style) manifest checkpoints are the
-    // default for big states: unchanged sidecar slices carry forward
-    // BY REFERENCE, so the cadence cost is O(tail delta + dirty
-    // slices), never a full O(table) re-serialization. Falls through
-    // to the classic writers when the form does not apply (small
-    // state, JSON-parts pin, or feature off).
-    if (INCREMENTAL_CHECKPOINTS && CHECKPOINT_PARQUET_PARTS &&
-        writeManifestCheckpoint(version)) return
-    val snap = Snapshot.replay(this, version)
-    val txns = expireCopyIntoLedger(snap)
-    val domainActions: Seq[Action] = snap.domains.toSeq.sortBy(_._1)
-      .map { case (d, cfg) => DomainMetadata(d, cfg) }
-    def actionIterator: Iterator[Action] =
-      Iterator[Action](snap.protocol, snap.metadata) ++
-        domainActions.iterator ++
-        txns.toSeq.sortBy(_._1).iterator.map { case (a, v) => Txn(a, v) } ++
-        snap.files.iterator
-    val total = 2 + domainActions.size + txns.size + snap.files.size
-    val partMax = CHECKPOINT_PART_MAX_ACTIONS
-    if (total <= partMax) {
-      store.atomicReplace(
-        logDir.resolve(f"$version%020d.checkpoint.json"),
-        actionIterator.map(Action.toJson).toSeq)
-    } else {
-      val numParts = ((total + partMax - 1) / partMax).toInt
-      if (CHECKPOINT_PARQUET_PARTS) {
-        // Columnar parts (round 10): typed+compressed decode beats
-        // generic JSON parsing at 10⁶⁺ actions. Parts hold disjoint
-        // slices of the in-memory state, so they WRITE concurrently
-        // too (encode+snappy is CPU-bound; the serial driver loop was
-        // the write-side twin of the parse bottleneck the parallel
-        // replay already solved). Each part stages where the STORE
-        // says (stageFileTarget) — a crash orphan falls under that
-        // store's staging sweep, and the name-pattern completeness
-        // check can never observe a torn part — then publishes
-        // through the store.
-        val head: Vector[Action] =
-          Vector[Action](snap.protocol, snap.metadata) ++
-            domainActions ++
-            txns.toSeq.sortBy(_._1).map { case (a, v) => Txn(a, v) }
-        val files = snap.files.toIndexedSeq
-        def partSlice(p: Int): Iterator[Action] = {
-          val start = (p - 1).toLong * partMax
-          val end = math.min(p.toLong * partMax, total.toLong)
-          val headPart = head.view
-            .slice(start.toInt, math.min(end, head.size.toLong).toInt)
-          val fStart = math.max(0L, start - head.size).toInt
-          val fEnd = math.max(0L, end - head.size).toInt
-          headPart.iterator ++ files.view.slice(fStart, fEnd).iterator
-        }
-        import scala.collection.parallel.CollectionConverters._
-        (1 to numParts).par.foreach { p =>
-          val target = checkpointPartFile(version, p, numParts,
-            ext = "parquet")
-          // the STORE owns the staging location (local: .rep-* tmp
-          // sibling; object store: its internal staging area) so its
-          // own cleanupStaging sweep covers a crash between write and
-          // publish, and the staged body is never a listable key
-          val tmp = store.stageFileTarget(target)
-          CheckpointParquet.write(tmp, partSlice(p))
-          store.atomicReplaceFile(tmp, target)
-        }
-      } else {
-        val it = actionIterator
-        var part = 1
-        while (it.hasNext) {
+  private def writeCheckpoint(version: Long): Unit =
+    latestManifestAtOrBefore(version - 1)
+      .filter { case (pv, _) => oldestSurvivingVersion <= pv + 1 } match {
+      case Some((prevV, prevRefs)) =>
+        incrementalManifest(version, prevV, prevRefs)
+      case None =>
+        val snap = Snapshot.replay(this, version)
+        val txns = expireCopyIntoLedger(snap)
+        val head = headActions(snap.metadata, snap.protocol,
+          snap.domains, txns)
+        if (head.size + snap.files.size <= CHECKPOINT_PART_MAX_ACTIONS)
           store.atomicReplace(
-            checkpointPartFile(version, part, numParts),
-            it.take(partMax).map(Action.toJson).toSeq)
-          part += 1
-        }
-      }
+            logDir.resolve(f"$version%020d.checkpoint.json"),
+            (head.iterator ++ snap.files.iterator).map(Action.toJson).toSeq)
+        else bootstrapManifest(version, head, snap.files.toIndexedSeq)
+        // the replay above cached the PRE-expiry snapshot for this
+        // version; align the cache with the checkpoint just written
+        if (txns.size != snap.transactions.size)
+          Snapshot.reseed(this, version, snap.copy(transactions = txns))
     }
-    // the replay above cached the PRE-expiry snapshot for this
-    // version; align the cache with the checkpoint just written
-    if (txns.size != snap.transactions.size)
-      Snapshot.reseed(this, version, snap.copy(transactions = txns))
-  }
-
-  private def checkpointPartFile(
-      version: Long, part: Int, numParts: Int,
-      ext: String = "json"): Path =
-    logDir.resolve(f"$version%020d.checkpoint.$part%04d.$numParts%04d.$ext")
 
   // ------------------------------------------------------------------
   // Incremental (manifest + sidecar) checkpoints — the Delta
@@ -549,10 +480,9 @@ final class LakeLog(val tablePath: String) {
   //
   // Crash semantics: sidecars publish first (staged, atomic, never
   // torn), the manifest publishes LAST via one atomic replace — a
-  // manifest's existence IS the completeness marker (the count-in-name
-  // rule's single-file analog). A crash mid-write orphans unreferenced
-  // sidecars, which the age-gated [[sweepUnreferencedSidecars]] GC
-  // removes at a later boundary.
+  // manifest's existence IS the completeness marker. A crash mid-write
+  // orphans unreferenced sidecars, which the age-gated
+  // [[sweepUnreferencedSidecars]] GC removes at a later boundary.
   // ------------------------------------------------------------------
 
   private[lake] def manifestFile(version: Long): Path =
@@ -582,32 +512,6 @@ final class LakeLog(val tablePath: String) {
           .map { case (_, refs) => (v, refs) }
       }
 
-  /** Write the manifest-form checkpoint at `version` — incrementally
-    * from the previous manifest when one exists and the tail since it
-    * is fully replayable, else a full bootstrap. Returns false when
-    * the form does not apply (no prior manifest and the state fits the
-    * single-file JSON checkpoint).
-    */
-  private def writeManifestCheckpoint(version: Long): Boolean = {
-    latestManifestAtOrBefore(version - 1)
-      .filter { case (pv, _) => oldestSurvivingVersion <= pv + 1 } match {
-      case Some((prevV, prevRefs)) =>
-        incrementalManifest(version, prevV, prevRefs)
-        true
-      case None =>
-        val snap = Snapshot.replay(this, version)
-        val txns = expireCopyIntoLedger(snap)
-        val head = headActions(snap.metadata, snap.protocol,
-          snap.domains, txns)
-        if (head.size + snap.files.size <= CHECKPOINT_PART_MAX_ACTIONS)
-          return false // small state: keep the single-file JSON form
-        bootstrapManifest(version, head, snap.files.toIndexedSeq)
-        if (txns.size != snap.transactions.size)
-          Snapshot.reseed(this, version, snap.copy(transactions = txns))
-        true
-    }
-  }
-
   private def headActions(meta: Metadata, protocol: Protocol,
       domains: Map[String, Map[String, String]],
       txns: Map[String, Long]): Seq[Action] =
@@ -617,7 +521,9 @@ final class LakeLog(val tablePath: String) {
       txns.toSeq.sortBy(_._1).map { case (a, v) => Txn(a, v) }
 
   /** First manifest for this table: the full state sliced into
-    * sidecars, written concurrently like the classic parquet parts.
+    * sidecars of at most [[LakeLog.CHECKPOINT_PART_MAX_ACTIONS]]
+    * AddFiles each, written concurrently (encode + snappy is CPU-bound
+    * and the slices are disjoint).
     */
   private def bootstrapManifest(version: Long, head: Seq[Action],
       files: IndexedSeq[AddFile]): Unit = {
@@ -710,14 +616,12 @@ final class LakeLog(val tablePath: String) {
       LakeLog.sliceFullDecodes.incrementAndGet()
       val kept = CheckpointParquet
         .read(store.fileReader(logDir.resolve(ref.path)))
-        .iterator
-        .collect { case a: AddFile if !touchedSet(a.path) => a }.toVector
+        .filterNot(a => touchedSet(a.path))
       if (kept.isEmpty) None
       else Some(writeSidecar(version, i + 1, kept.iterator, kept.size.toLong))
     }.seq
     val absorbedAdds: Seq[AddFile] = absorb.toSeq.par.map { ref =>
       CheckpointParquet.read(store.fileReader(logDir.resolve(ref.path)))
-        .iterator.collect { case a: AddFile => a }.toVector
     }.seq.flatten
     val deltaAdds: IndexedSeq[AddFile] =
       (liveTail.values ++ absorbedAdds).toIndexedSeq
@@ -751,9 +655,7 @@ final class LakeLog(val tablePath: String) {
     * replayable.
     */
   private[lake] def checkpointAfterRestore(
-      restoredV: Long, targetV: Long): Boolean = {
-    if (!(INCREMENTAL_CHECKPOINTS && CHECKPOINT_PARQUET_PARTS))
-      return false
+      restoredV: Long, targetV: Long): Boolean =
     latestManifestAtOrBefore(targetV)
       .filter { case (pv, _) => oldestSurvivingVersion <= pv + 1 } match {
       case Some((prevV, prevRefs)) =>
@@ -763,7 +665,6 @@ final class LakeLog(val tablePath: String) {
         true
       case None => false
     }
-  }
 
   /** Write one sidecar slice (staged where the store says, atomic
     * publish), returning its log-dir-relative ref.
@@ -774,7 +675,7 @@ final class LakeLog(val tablePath: String) {
       f"$version%020d-$seq%04d-${java.util.UUID.randomUUID()}.parquet"
     val target = sidecarDirPath.resolve(name)
     val tmp = store.stageFileTarget(target)
-    CheckpointParquet.write(tmp, adds.map(a => a: Action))
+    CheckpointParquet.write(tmp, adds)
     store.atomicReplaceFile(tmp, target)
     SidecarRef(s"$SIDECAR_DIR/$name", count,
       store.stat(target).map(_._1).getOrElse(0L))
@@ -812,32 +713,15 @@ final class LakeLog(val tablePath: String) {
     }
   }
 
-  /** Versions in `names` with a COMPLETE checkpoint: the single-file
-    * form, or a multi-part set whose distinct part count equals the
-    * declared total (a crashed writer's partial set never qualifies).
+  /** Versions in `names` with a checkpoint: the single-file form, or
+    * a manifest — complete by existence, because its sidecars publish
+    * BEFORE it and the sweep never deletes a referenced sidecar.
     */
-  private def checkpointVersionsIn(names: Seq[String]): Seq[Long] = {
-    val singles = names.filter(CHECKPOINT_FILE_RE.matches)
-      .map(_.stripSuffix(".checkpoint.json").toLong)
-    // a manifest is complete by existence: its sidecars published
-    // BEFORE it, and the sweep never deletes a referenced sidecar
-    val manifests = names.filter(MANIFEST_FILE_RE.matches)
-      .map(_.stripSuffix(".checkpoint.manifest.json").toLong)
-    val multi = names.filter(CHECKPOINT_PART_FILE_RE.matches)
-      .map { n =>
-        val Array(v, _, part, numParts, ext) = n.split("\\.")
-        (v.toLong, numParts.toInt, ext, part.toInt)
-      }
-      // completeness is judged per (version, declared total, FORMAT):
-      // a JSON set and a parquet set at the same version (two
-      // checkpointers on different engine builds) must each stand
-      // alone — counting their parts together could bless neither
-      .groupBy(p => (p._1, p._2, p._3))
-      .collect {
-        case ((v, np, _), ps) if ps.map(_._4).distinct.size == np => v
-      }
-    (singles ++ manifests ++ multi).distinct
-  }
+  private def checkpointVersionsIn(names: Seq[String]): Seq[Long] =
+    (names.filter(CHECKPOINT_FILE_RE.matches)
+      .map(_.stripSuffix(".checkpoint.json").toLong) ++
+      names.filter(MANIFEST_FILE_RE.matches)
+        .map(_.stripSuffix(".checkpoint.manifest.json").toLong)).distinct
 
   /** COPY INTO ledger expiry: the per-source-file Txn entries grow
     * O(all files ever ingested) and ride inside every checkpoint
@@ -916,8 +800,10 @@ final class LakeLog(val tablePath: String) {
     }
   }
 
-  /** Latest COMPLETE checkpoint at or below `version`, if any:
-    * (version, part files — one entry for the single-file form).
+  /** Latest checkpoint at or below `version`, if any: (version,
+    * files). The single-file form is one file; the manifest form is
+    * the manifest (which holds the head actions) followed by its
+    * adds-only parquet sidecars.
     */
   def latestCheckpointFilesAtOrBefore(
       version: Long): Option[(Long, Seq[Path])] = {
@@ -932,44 +818,21 @@ final class LakeLog(val tablePath: String) {
         val single = logDir.resolve(f"$v%020d.checkpoint.json")
         val manifest = manifestFile(v)
         val files =
-          if (names.contains(manifest.getFileName.toString)) {
-            // manifest form (preferred over a coexisting legacy set at
-            // the same version): the manifest itself is the head part,
-            // its sidecars are the file parts
+          if (names.contains(manifest.getFileName.toString))
             scala.util.Try(readManifest(manifest)).toOption match {
               case Some((_, refs)) =>
                 manifest +: refs.map(r => logDir.resolve(r.path))
               case None => Nil // vanished under us: fall to next older
             }
-          }
           else if (store.exists(single)) Seq(single)
-          else {
-            // two checkpointers at v can leave complete sets with
-            // DIFFERENT part counts (ledger expiry is time-dependent)
-            // or different FORMATS (mixed engine builds); pin ONE
-            // complete set — never concatenate across sets
-            val byCount = names.filter(n =>
-              CHECKPOINT_PART_FILE_RE.matches(n) &&
-                n.split("\\.")(0).toLong == v)
-              .groupBy { n =>
-                val parts = n.split("\\.")
-                (parts(3).toInt, parts(4))
-              }
-            byCount.collect {
-              case ((count, ext), ps) if ps.distinct.size == count =>
-                (count, ext)
-            }.maxOption match {
-              case Some(key) => byCount(key).sorted.map(logDir.resolve)
-              case None => Nil // vanished under us
-            }
-          }
+          else Nil
         (v, files)
       }.collectFirst { case (v, files) if files.nonEmpty => (v, files) }
   }
 
-  /** Parsed actions of one checkpoint part file — columnar or JSON,
-    * by extension (older logs and single-file checkpoints are JSON;
-    * multi-part checkpoints write parquet since round 10).
+  /** Parsed actions of one checkpoint file — JSON lines for the
+    * single-file checkpoint and the manifest, parquet AddFiles for a
+    * sidecar.
     */
   def readCheckpointPart(p: Path): Seq[Action] =
     if (p.getFileName.toString.endsWith(".parquet"))
@@ -1111,28 +974,13 @@ object LakeLog {
   /** Single-reading form used by tests; prefers the size-keyed parse. */
   private[lake] def copyIntoLocalPath(appId: String): Option[Path] =
     copyIntoLocalPaths(appId).lastOption
-  /** Actions per checkpoint part; above this the checkpoint splits
-    * into multi-part files. 100k JSON lines ≈ tens of MB per part —
-    * bounded driver memory per write/read regardless of table size.
-    * var only so tests and the columnar-scan gate can exercise the
-    * multi-part path cheaply.
+  /** Actions above which a checkpoint takes the manifest + parquet
+    * sidecar form instead of the single JSON file; also the AddFile
+    * count per sidecar slice — bounded driver memory per write/read
+    * regardless of table size. var only so tests and the columnar-scan
+    * gate can exercise the manifest form cheaply.
     */
   private[graft] var CHECKPOINT_PART_MAX_ACTIONS: Int = 100000
-
-  /** Multi-part checkpoints write parquet parts (round 10). var only
-    * so the suite can pin the JSON-part writer for format-equivalence
-    * tests; the READER always accepts both.
-    */
-  private[lake] var CHECKPOINT_PARQUET_PARTS: Boolean = true
-
-  /** Incremental manifest checkpoints (round 17): above the part-size
-    * threshold the cadence writes `<v>.checkpoint.manifest.json` plus
-    * `_sidecars/` slices, carrying unchanged slices forward by
-    * reference — O(tail delta) per cadence instead of re-serializing
-    * the full state. var only so the suite can pin the legacy writers
-    * for format-equivalence tests; the READER always accepts all forms.
-    */
-  private[graft] var INCREMENTAL_CHECKPOINTS: Boolean = true
 
   /** Subdirectory of the log holding checkpoint sidecar slices. */
   private[lake] val SIDECAR_DIR = "_sidecars"
@@ -1141,8 +989,6 @@ object LakeLog {
   private val CHECKPOINT_FILE_RE = "\\d{20}\\.checkpoint\\.json".r
   private[lake] val MANIFEST_FILE_RE =
     "\\d{20}\\.checkpoint\\.manifest\\.json".r
-  private val CHECKPOINT_PART_FILE_RE =
-    "\\d{20}\\.checkpoint\\.\\d{4}\\.\\d{4}\\.(json|parquet)".r
   private val HISTORY_FILE_RE = "\\d{20}\\.history\\.json".r
 
   def versionOf(p: Path): Long =

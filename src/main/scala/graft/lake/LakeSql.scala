@@ -325,7 +325,7 @@ object LakeSql {
 
     case SHOW_PARTITIONS_RE(t) =>
       // answered from LOG METADATA only — no file listing, no data
-      // read; on multi-part-checkpointed tables the distinct runs on
+      // read; on manifest-checkpointed tables the distinct runs on
       // the executors, so the driver sees one row per PARTITION
       val (cols, pvs, tblSchema) =
         resolve(spark, clean(t)).livePartitionValues()

@@ -34,8 +34,8 @@ final class LakeTable private (
 
   /** Version read, honoring the session-wide columnar-index conf
     * (`spark.graft.columnarFileIndex`, DEFAULT ON since round 15 —
-    * set `false` to opt out): when the table qualifies (multi-part
-    * parquet checkpoint; DV/bloom tables included as long as their
+    * set `false` to opt out): when the table qualifies (manifest
+    * checkpoint; DV/bloom tables included as long as their
     * sidecar count stays under the index's bound), the read —
     * including every catalog view LakeCatalog refreshes through
     * here — plans without materializing the file list on the driver;
@@ -558,7 +558,7 @@ final class LakeTable private (
   }
 
   /** Live partition columns, DISTINCT partition-value maps, and the
-    * table schema — SHOW PARTITIONS' metadata. On multi-part-
+    * table schema — SHOW PARTITIONS' metadata. On manifest-
     * checkpointed tables the dedupe runs on the executors; the driver
     * holds one entry per partition, never per file.
     */
@@ -577,7 +577,7 @@ final class LakeTable private (
     }
 
   /** DESCRIBE DETAIL (K12). Every field is table-level metadata or a
-    * summary aggregate, so on a multi-part-checkpointed table it is
+    * summary aggregate, so on a manifest-checkpointed table it is
     * answered from the columnar index's summary pass — counts, bytes,
     * DV totals folded on the executors — never a full file-list
     * replay; the classic snapshot serves small tables.
@@ -627,7 +627,7 @@ final class LakeTable private (
     // sidecars are deliberately NOT probed: the bloom read path is
     // conservative on a missing sidecar (opens the file), so losing
     // one costs speed, not correctness. The probe and the repair
-    // commit need only PATHS, so on a multi-part-checkpointed table
+    // commit need only PATHS, so on a manifest-checkpointed table
     // the inventory is the columnar index's sidecar projection —
     // never a driver-resident file list.
     val (version, live): (Long, Seq[(String, Option[String])]) =
@@ -672,8 +672,8 @@ final class LakeTable private (
   // ---- DML ---------------------------------------------------------------
 
   /** DML planning state (VERDICT r14 #2): columnar when the session
-    * conf allows (default ON) and the table qualifies (multi-part
-    * parquet checkpoint, sidecar bound — [[graft.sources
+    * conf allows (default ON) and the table qualifies (manifest
+    * checkpoint, sidecar bound — [[graft.sources
     * .ColumnarLakeFileIndex.tryBuild]]'s gate) so touched-file
     * discovery and the touched AddFile fetch run through the
     * distributed checkpoint scan and the driver never materializes
@@ -1540,7 +1540,7 @@ final class LakeTable private (
     // metadata-light: a property set needs metadata + protocol; the
     // file list matters ONLY to prove emptiness when the bucket spec
     // changes, and that single bit comes from the columnar summary on
-    // multi-part-checkpointed tables
+    // manifest-checkpointed tables
     val snap = metaSnapshot()
     // column mapping is a one-way door: files already written under
     // override physical names would be misread the moment the
@@ -2012,7 +2012,7 @@ final class LakeTable private (
   def vacuum(retentionHours: Double = -1.0,
       dryRun: Boolean = false): Seq[String] = {
     // the live/protection sets need only path + sidecar strings; on
-    // a multi-part-checkpointed table they come from the columnar
+    // a manifest-checkpointed table they come from the columnar
     // sidecar projection — VACUUM of a 10⁶-file table never
     // materializes its stats-bearing file list on the driver
     val (liveTriples, liveCount)
@@ -2411,7 +2411,7 @@ final class LakeTable private (
         .properties.contains)
     if (configured.nonEmpty) unsetTblProperties(configured)
     // bloom-CARRYING entries are bounded by the sidecar count (the
-    // columnar gate's own 2¹⁶ bound): on a multi-part-checkpointed
+    // columnar gate's own 2¹⁶ bound): on a manifest-checkpointed
     // table they come by path from the summary's pairs, never from a
     // driver-resident inventory
     val (anchor, carrying): (Snapshot, Seq[AddFile]) =
@@ -2647,7 +2647,7 @@ final class LakeTable private (
               dvChanged
           // removed files' AddFile entries (with partition values)
           // come from the pre-commit state — through the columnar
-          // index's path-filtered scan on multi-part-checkpointed
+          // index's path-filtered scan on manifest-checkpointed
           // tables (O(removed) driver AddFiles), a snapshot replay
           // only on small/classic ones. TOLERANT fetch: a commit's
           // DV-carrying AddFiles may name files NOT live at v-1
@@ -2897,7 +2897,7 @@ final class LakeTable private (
   def asOfWithRowIds(version: Long): DataFrame =
     readWithRowIdsAt(version)
 
-  /** Row-id read routing, mirroring [[readAt]]: on a multi-part-
+  /** Row-id read routing, mirroring [[readAt]]: on a manifest-
     * checkpointed table the scan AND the (file → baseRowId) base map
     * plan through the columnar index — the base map is a projection
     * decoded on executors, so the driver never materializes the file

@@ -68,7 +68,7 @@ object LakeWriter {
     // plans its touched set through the DML planner (columnar on
     // qualifying tables); overwrite's tombstones (O(live files)
     // Remove actions are inherent to what overwrite writes) come from
-    // the columnar index's path projection on multi-part-checkpointed
+    // the columnar index's path projection on manifest-checkpointed
     // tables (round 16), a full replay only on small/classic ones.
     val readVersion = if (log.exists) log.latestVersion else -1L
     val existingMeta: Option[Metadata] =
@@ -340,7 +340,7 @@ object LakeWriter {
             // overwrite tombstones every live file: O(live) actions
             // are WHAT an overwrite commit is (re-resolved per
             // attempt so a racing append's files are tombstoned too).
-            // But the tombstones need only PATHS — on a multi-part-
+            // But the tombstones need only PATHS — on a manifest-
             // checkpointed table they come from the columnar index's
             // path projection (distributed decode, path strings on
             // the driver), never a full replay materializing

@@ -8,7 +8,7 @@ package graft.lake
   * metadata-only aggregation — not the data path. This main builds a
   * synthetic 1M-AddFile table state (1000 partitions, per-file id
   * ranges and null counts, exactly the shape LakeWriter records),
-  * drives it to a multi-part parquet checkpoint, and measures each
+  * drives it to a manifest + parquet sidecar checkpoint, and measures each
   * leg cold. The log layer is plain JVM — a 1000-executor cluster
   * still funnels commits and planning through one driver doing
   * exactly this work; the tiny local session below exists only
@@ -600,7 +600,7 @@ object MergeScaleBench {
       }
       d
     }
-    // the columnar index needs a multi-part checkpoint, which lands on
+    // the columnar index needs a manifest checkpoint, which lands on
     // the 10-commit cadence: pad with single-row commits (ids outside
     // [0, nm) and v values matching neither verification predicate, so
     // the count checks below stay exact)

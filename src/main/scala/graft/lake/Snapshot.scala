@@ -158,11 +158,12 @@ object Snapshot {
     * O(live files) replay per commit makes commit cost grow with
     * TABLE size instead of commit size — at 10⁶ files that is seconds
     * of driver time per commit for a feature the table may not even
-    * have enabled. Cost here: checkpoint HEAD only (parquet parts
-    * read under a meta projection that never decodes the add columns;
-    * JSON parts prefix-skip add lines) plus the post-checkpoint tail
-    * with the same prefix skip. Serves from the full snapshot cache
-    * when one is materialized (the common in-process writer flow).
+    * have enabled. Cost here: checkpoint HEAD only (the first
+    * checkpoint file — the single JSON checkpoint or the manifest —
+    * with add lines prefix-skipped; sidecars are never opened) plus
+    * the post-checkpoint tail with the same prefix skip. Serves from
+    * the full snapshot cache when one is materialized (the common
+    * in-process writer flow).
     */
   private[graft] def replayMeta(log: LakeLog, version: Long)
       : (Metadata, Protocol, Map[String, Map[String, String]]) = {
@@ -338,28 +339,11 @@ object Snapshot {
         }
         val startAt = if (resume.isDefined) resume.get._1 + 1
         else log.latestCheckpointFilesAtOrBefore(version) match {
-          case Some((ckptVersion, partFiles)) =>
-            // head actions (protocol/metadata/domains/txns) are a
-            // strict PREFIX of the checkpoint part sequence; stop at
-            // the first part that yields nothing once metadata is in
-            // hand — every later part holds only files
-            val it = partFiles.iterator
-            var done = false
-            while (it.hasNext && !done) {
-              val p = it.next()
-              val name = p.getFileName.toString
-              val metaActions =
-                if (name.endsWith(".parquet"))
-                  CheckpointParquet.readMeta(log.store.fileReader(p))
-                else log.store
-                  .readLinesWithPrefix(p, Action.MetaLinePrefixes)
-                  .map(Action.fromJson)
-              metaActions.foreach(fold)
-              // a MANIFEST carries the complete head by construction —
-              // stop without probing its first (adds-only) sidecar
-              done = metadata != null && (metaActions.isEmpty ||
-                name.endsWith(".checkpoint.manifest.json"))
-            }
+          case Some((ckptVersion, files)) =>
+            // the head actions (protocol/metadata/domains/txns) live
+            // whole in the FIRST checkpoint file — the single JSON
+            // checkpoint or the manifest; sidecars hold only AddFiles
+            metaOfJsonLines(files.head)
             ckptVersion + 1
           case None => 0L
         }
@@ -415,13 +399,13 @@ object Snapshot {
       scala.collection.mutable.HashMap.empty[String, Map[String, String]]
     val startAt = log.latestCheckpointFilesAtOrBefore(version) match {
       case Some((ckptVersion, partFiles)) =>
-        // JSON parsing is THE driver-side cost of opening a big table
-        // (10⁶ AddFiles ≈ 10⁶ lines): checkpoint parts hold disjoint
-        // slices of ONE immutable state, so a multi-part checkpoint
-        // parses across cores and the fold below stays order-free
-        // (each path occurs once; metadata/protocol occur once total).
-        // The materialized per-part lists add no asymptotic memory —
-        // the live map retains every parsed AddFile anyway.
+        // decode is THE driver-side cost of opening a big table (10⁶
+        // AddFiles): a manifest's sidecars hold disjoint slices of ONE
+        // immutable state, so they decode across cores and the fold
+        // below stays order-free (each path occurs once; the head
+        // actions occur once, in the manifest). The materialized
+        // per-file lists add no asymptotic memory — the live map
+        // retains every decoded AddFile anyway.
         val parsed: Seq[Seq[Action]] =
           if (partFiles.size <= 1) partFiles.map(log.readCheckpointPart)
           else {
@@ -441,12 +425,12 @@ object Snapshot {
         ckptVersion + 1
       case None => 0L
     }
-    // tail version files PARSE across cores like the checkpoint parts
+    // tail version files PARSE across cores like the checkpoint sidecars
     // above (each file independent; the order-sensitive fold stays
     // sequential in version order — .par.map preserves ordering). A
     // bulk-ingest tail is 10⁵ lines per version, and the parse was the
-    // single-core cost the multi-part checkpoint work already removed
-    // for the checkpoint side. Parsed in BOUNDED chunks, each folded
+    // single-core cost the parallel sidecar decode already removed for
+    // the checkpoint side. Parsed in BOUNDED chunks, each folded
     // before the next parses: a delete-heavy tail's RemoveFile and
     // superseded AddFile actions must not all be resident at peak
     // (CHECKPOINT_INTERVAL × commit size of transient driver heap).

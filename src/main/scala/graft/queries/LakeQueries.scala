@@ -115,14 +115,14 @@ object LakeQueries {
     // driver — checkpoint parts scan as a Spark job applying the same
     // FilePruner test the classic index uses; only the query's
     // candidate survivors + the post-checkpoint tail come back. This
-    // gate builds a table whose v10 auto-checkpoint is multi-part
-    // parquet (part max pinned low for the run), reads it through
+    // gate builds a table whose v10 auto-checkpoint is a manifest
+    // (part max pinned low for the run), reads it through
     // option("columnarIndex") with two tail commits in play, REQUIRES
     // the plan really carries the columnar index, and oracles the
     // aggregate — exact result parity with a plain engine scan.
     QueryDef("lake_columnar_scan",
       (s, dir) => {
-        // the 12-commit multi-part-checkpointed table is a pure
+        // the 12-commit manifest-checkpointed table is a pure
         // function of lineitem — corpus-fingerprinted FIXTURE, so the
         // timed leg is the COLUMNAR READ (the steady-state op), not
         // table construction (the r13 build/probe split rule)
@@ -150,7 +150,7 @@ object LakeQueries {
              |GROUP BY 1""".stripMargin)),
 
     // Columnar DML (round 15, VERDICT r14 #2): MERGE + DELETE against
-    // a multi-part-checkpointed table plan their touched-file
+    // a manifest-checkpointed table plan their touched-file
     // discovery through the distributed checkpoint scan — the driver
     // NEVER materializes the live file list (pinned by the
     // fullReplays require: zero Snapshot.doReplay calls across both

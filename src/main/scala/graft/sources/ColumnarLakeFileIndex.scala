@@ -35,10 +35,11 @@ import graft.lake.{AddFile, ColumnMapping, FilePruner, LakeLog,
   * unknown predicate shape keeps extra files, costing memory
   * proportional to the slack, never correctness.
   *
-  * Scope (the `tryBuild` gate): multi-part PARQUET checkpoints only
-  * (the 10⁷ case always has one; small tables gain nothing), and
-  * reads only (DML rewrites hold full snapshots by design). DV and
-  * bloom tables ARE supported — their relation formats need a
+  * Scope (the `tryBuild` gate): the newest checkpoint at or below the
+  * version is a manifest (the 10⁷ case always has one; small tables
+  * keep the single JSON checkpoint and gain nothing), and reads only
+  * (DML rewrites hold full snapshots by design). DV and bloom tables
+  * ARE supported — their relation formats need a
   * driver-resident (file → sidecar) path map by design, so the
   * summary pass collects the pairs (bounded by SIDECAR count, never
   * table size) and only a table whose sidecar count itself exceeds
@@ -118,7 +119,6 @@ final class ColumnarLakeFileIndex private[sources] (
           .parallelize(readers, readers.size)
           .flatMap { r =>
             graft.lake.CheckpointParquet.read(r).iterator
-              .collect { case a: AddFile => a }
           }
           .filter(a => !touched.value.contains(a.path) && fn(a))
           .map(project)
@@ -186,7 +186,6 @@ final class ColumnarLakeFileIndex private[sources] (
           .parallelize(readers, readers.size)
           .flatMap { r =>
             graft.lake.CheckpointParquet.read(r).iterator
-              .collect { case a: AddFile => a }
           }
           .filter(a => !touched.value.contains(a.path) &&
             want.value.contains(a.partitionValues))
@@ -232,7 +231,6 @@ final class ColumnarLakeFileIndex private[sources] (
           .parallelize(readers, readers.size)
           .flatMap { r =>
             graft.lake.CheckpointParquet.read(r).iterator
-              .collect { case a: AddFile => a }
           }
           .filter(a => !touched.value.contains(a.path) &&
             want.value.contains(a.path))
@@ -262,7 +260,6 @@ final class ColumnarLakeFileIndex private[sources] (
           .parallelize(readers, readers.size)
           .map { r =>
             graft.lake.CheckpointParquet.read(r).iterator
-              .collect { case a: AddFile => a }
               .filter(a => !touched.value.contains(a.path))
               .toArray
           }
@@ -533,8 +530,8 @@ object ColumnarLakeFileIndex {
     }
 
   /** Build the columnar index for `version` (-1 = latest) when the
-    * preconditions hold: a multi-part parquet checkpoint at or below
-    * the version, and (for DV/bloom tables) a sidecar count under
+    * preconditions hold: the newest checkpoint at or below the version
+    * is a manifest, and (for DV/bloom tables) a sidecar count under
     * [[MAX_SIDECAR_PAIRS]]. None otherwise — the caller falls back to
     * the classic materialized path, which is also the honest one at
     * those shapes.
@@ -545,21 +542,15 @@ object ColumnarLakeFileIndex {
     val latest = log.latestVersion
     if (latest < 0) return None
     val version = if (requested < 0) latest else requested
+    // THE columnar rule: the newest checkpoint at or below the version
+    // is a manifest. Its head rides the manifest (read by
+    // replayMetaTxns below); the scan's part files are its adds-only
+    // parquet sidecars.
     val ckpt = log.latestCheckpointFilesAtOrBefore(version)
-      .flatMap { case (v, files) =>
-        // manifest checkpoints (round 17): the head rides the manifest
-        // (read by replayMetaTxns below); the scan's part files are the
-        // adds-only parquet SIDECARS. Legacy multi-part sets scan all
-        // parts (head rows are skipped by the AddFile collect).
-        val isManifest = files.headOption.exists(
-          _.getFileName.toString.endsWith(".checkpoint.manifest.json"))
-        val parts = if (isManifest) files.drop(1) else files
-        val qualifies =
-          if (isManifest) parts.nonEmpty &&
-            parts.forall(_.getFileName.toString.endsWith(".parquet"))
-          else parts.size > 1 &&
-            parts.forall(_.getFileName.toString.endsWith(".parquet"))
-        if (qualifies) Some((v, parts)) else None
+      .collect { case (v, manifest +: sidecars)
+        if manifest.getFileName.toString
+          .endsWith(".checkpoint.manifest.json") && sidecars.nonEmpty =>
+        (v, sidecars)
       }
     ckpt match {
       case None => None

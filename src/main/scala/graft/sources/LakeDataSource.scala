@@ -118,8 +118,8 @@ final class LakeDataSource extends RelationProvider
     // the reader option or the session conf): plan the read without
     // ever materializing the full file list on the driver — the
     // 10⁷-file posture. Falls back to the classic materialized
-    // snapshot when the preconditions don't hold (no multi-part
-    // parquet checkpoint, or a DV/bloom sidecar count past the
+    // snapshot when the preconditions don't hold (no manifest
+    // checkpoint, or a DV/bloom sidecar count past the
     // index's bound).
     val columnar = parameters.get("columnarIndex").map(_.toBoolean)
       .getOrElse(spark.conf.getOption("spark.graft.columnarFileIndex")

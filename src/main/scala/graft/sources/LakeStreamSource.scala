@@ -226,7 +226,7 @@ final class LakeStreamSource(
     }
 
   /** The AddFiles of exactly `paths` at `version` — columnar when the
-    * table has a multi-part checkpoint (driver holds O(chunk)
+    * table has a manifest checkpoint (driver holds O(chunk)
     * AddFiles), classic snapshot filter otherwise.
     */
   private def addsForChunk(version: Long, paths: Seq[String]): Seq[AddFile] =
@@ -377,7 +377,7 @@ final class LakeStreamSource(
     if (fromExclusive + 1 < floor) {
       if (start.isEmpty && toInclusive >= floor) {
         // wholesale (unthrottled) initial snapshot: list through the
-        // columnar index when the table has a multi-part checkpoint —
+        // columnar index when the table has a manifest checkpoint —
         // distributed part decode instead of a driver replay
         adds ++= (columnarIdx(floor) match {
           case Some(idx) => idx.candidatesFor(Nil)

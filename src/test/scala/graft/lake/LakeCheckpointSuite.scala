@@ -2,9 +2,10 @@ package graft.lake
 
 import graft.SparkSuite
 
-/** Multi-part checkpoints (VERDICT r8 item 2): bounded-size parts
-  * written incrementally, streamed replay, crash-partial sets ignored,
-  * and the synthetic many-AddFile scale check. Raw `log.commit` drives
+/** Checkpoints in their two forms — the single JSON file for small
+  * states, the manifest + parquet sidecars above the part budget —
+  * their replay against ground truth, crash and cleanup behavior, log
+  * retention, and the sidecar parquet codec. Raw `log.commit` drives
   * the log directly — these tests exercise metadata machinery, not
   * Spark I/O.
   */
@@ -18,16 +19,6 @@ class LakeCheckpointSuite extends SparkSuite {
     val prev = LakeLog.CHECKPOINT_PART_MAX_ACTIONS
     LakeLog.CHECKPOINT_PART_MAX_ACTIONS = partMax
     try body finally LakeLog.CHECKPOINT_PART_MAX_ACTIONS = prev
-  }
-
-  /** Pin the LEGACY multi-part writer (pre-round-17): these tests
-    * verify the part-set format itself, which the reader must accept
-    * forever; the manifest-form tests below cover the default path.
-    */
-  private def withLegacyParts[A](body: => A): A = {
-    val prev = LakeLog.INCREMENTAL_CHECKPOINTS
-    LakeLog.INCREMENTAL_CHECKPOINTS = false
-    try body finally LakeLog.INCREMENTAL_CHECKPOINTS = prev
   }
 
   private def addFile(name: String) =
@@ -49,78 +40,8 @@ class LakeCheckpointSuite extends SparkSuite {
     live.toSet
   }
 
-  test("multi-part checkpoint write + streamed replay equals full replay") {
-    withLegacyParts { withPartMax(5) {
-      val path = tablePath("ckpt-multi")
-      val log = new LakeLog(path)
-      log.commit(0L, Seq(CommitInfo(1L, "CREATE", Map.empty), meta,
-        Protocol()))
-      // 14 commits: each adds 2 files, removes 1 → crosses the
-      // checkpoint interval (10) with >5 live files at the boundary
-      (1L to 14L).foreach { v =>
-        log.commit(v, Seq(
-          CommitInfo(v, "APPEND", Map.empty),
-          addFile(s"f${v}a"), addFile(s"f${v}b"),
-          RemoveFile(s"f${v - 1}a.parquet", v)))
-      }
-      // the v10 checkpoint must be multi-part (2 + 11 files > 5)
-      val names = LogStore.current.listDir(log.logDir)
-        .map(_.getFileName.toString)
-      val partNames = names.filter(_.matches(
-        "\\d{20}\\.checkpoint\\.\\d{4}\\.\\d{4}\\.parquet"))
-      assert(partNames.nonEmpty, s"no multi-part checkpoint in $names")
-      assert(!names.exists(_.matches("\\d{20}\\.checkpoint\\.json")),
-        "above the part budget the single-file form must not be written")
-      // every part respects the size bound
-      partNames.foreach { n =>
-        val actions = log.readCheckpointPart(log.logDir.resolve(n))
-        assert(actions.size <= 5, s"$n has ${actions.size} actions > partMax")
-      }
-      assert(log.latestCheckpointAtOrBefore(14L).map(_._1).contains(10L))
-      // replay-through-checkpoint == ground truth, at the boundary,
-      // past it, and on prefixes before it (property over versions)
-      Seq(9L, 10L, 12L, 14L).foreach { v =>
-        Snapshot.clearCacheForTest()
-        val snap = log.snapshot(v)
-        assert(snap.files.map(_.path).toSet === naiveLiveSet(log, v),
-          s"replay mismatch at version $v")
-      }
-      // O(delta): replaying v14 from the v10 checkpoint reads only
-      // the 4 tail version files
-      Snapshot.clearCacheForTest()
-      val before = LakeLog.readVersionCalls.get()
-      log.snapshot(14L)
-      assert(LakeLog.readVersionCalls.get() - before <= 4)
-    } }
-  }
-
-  test("a crashed writer's partial part set is ignored") {
-    withLegacyParts { withPartMax(3) {
-      val path = tablePath("ckpt-partial")
-      val log = new LakeLog(path)
-      log.commit(0L, Seq(CommitInfo(1L, "CREATE", Map.empty), meta,
-        Protocol()))
-      (1L to 10L).foreach { v =>
-        log.commit(v, Seq(CommitInfo(v, "APPEND", Map.empty),
-          addFile(s"g$v")))
-      }
-      val parts = LogStore.current.listDir(log.logDir).filter(
-        _.getFileName.toString.matches(
-          "\\d{20}\\.checkpoint\\.\\d{4}\\.\\d{4}\\.parquet"))
-      assert(parts.size >= 2)
-      // simulate the crash: one part of the set never landed
-      LogStore.current.delete(parts.sortBy(_.toString).head)
-      Snapshot.clearCacheForTest()
-      // the incomplete set must not be used — replay falls back to
-      // the full log and still yields the exact state
-      assert(log.latestCheckpointAtOrBefore(10L).isEmpty)
-      val snap = log.snapshot(10L)
-      assert(snap.files.map(_.path).toSet === naiveLiveSet(log, 10L))
-    } }
-  }
-
   test("100k-AddFile state checkpoints in bounded parts and replays") {
-    withLegacyParts { withPartMax(30000) {
+    withPartMax(30000) {
       val path = tablePath("ckpt-100k")
       val log = new LakeLog(path)
       log.commit(0L, Seq(CommitInfo(1L, "CREATE", Map.empty), meta,
@@ -136,60 +57,49 @@ class LakeCheckpointSuite extends SparkSuite {
       }
       val names = LogStore.current.listDir(log.logDir)
         .map(_.getFileName.toString)
-      val partNames = names.filter(_.matches(
-        "\\d{20}\\.checkpoint\\.\\d{4}\\.\\d{4}\\.parquet")).sorted
-      // 2 + 100009 actions at 30k/part = 4 parts
-      assert(partNames.size === 4, s"parts: $partNames")
-      assert(partNames.forall(_.endsWith(".0004.parquet")))
+      assert(!names.exists(_.endsWith(".checkpoint.json")),
+        "above the part budget the single-file form must not be written")
+      assert(manifestVersions(log) === Seq(10L))
+      // 100009 AddFiles at 30k per sidecar = 4 bounded sidecars
+      val (head, refs) = log.readManifest(log.manifestFile(10L))
+      assert(refs.size === 4, s"sidecars: ${refs.map(_.path)}")
+      assert(refs.forall(_.count <= 30000))
+      assert(refs.map(_.count).sum === 100009L)
+      assert(sidecarEntries(log, refs).size === 100009)
+      // domain metadata rides the manifest head, never a sidecar
+      assert(head.count(_.isInstanceOf[DomainMetadata]) === 2)
       Snapshot.clearCacheForTest()
       val snap = log.snapshot(10L)
       assert(snap.files.size === 100009)
       assert(snap.version === 10L)
-      // domain metadata must ride the multi-part checkpoint's head
       assert(snap.domains === Map(
         "app.domain.a" -> Map("k" -> "v1"),
         "app.domain.b" -> Map("x" -> "1", "y" -> "2")))
-    } }
+    }
   }
 
   test("parquet part round-trip preserves every action field") {
-    val actions: Seq[Action] = Seq(
-      Protocol(3, 3, Seq("deletionVectors", "columnMapping"),
-        Seq("deletionVectors", "columnMapping", "identityColumns")),
-      Metadata("id BIGINT, s STRING, p STRING", Seq("p"), 1234L,
-        Map("positive_id" -> "id >= 0"),
-        Map("graft.enableDeletionVectors" -> "true",
-          "graft.columnMapping.mode" -> "name")),
-      Txn("stream-a", 41L),
-      Txn("copyinto:file:///x.csv", 7L),
+    val adds = Seq(
       AddFile("p=1/part-0001.parquet", Map("p" -> "1"), 4096L, 100L,
         Map("id" -> "0", "s" -> "aaa"), Map("id" -> "99", "s" -> "zzz"),
         Map("id" -> 0L, "s" -> 3L),
         dvPath = Some("_dv/abc.dv"), dvCardinality = 5L,
-        bloomPath = Some("_bloom/def.bloom")),
+        bloomPath = Some("_bloom/def.bloom"), baseRowId = Some(7L),
+        clusterGen = Some(2L)),
       AddFile("p=__HIVE_DEFAULT_PARTITION__/part-0002.parquet",
         Map("p" -> "__HIVE_DEFAULT_PARTITION__"), 1L, -1L,
         Map.empty, Map.empty, Map.empty))
     val f = java.nio.file.Paths.get(tmpDir("ckpt-rt"), "rt.parquet")
-    CheckpointParquet.write(f, actions.iterator)
-    assert(CheckpointParquet.read(f) === actions)
+    CheckpointParquet.write(f, adds.iterator)
+    assert(CheckpointParquet.read(f) === adds)
   }
 
   test("direct parquet writer matches the Group-API reference writer") {
     // the r17 RecordConsumer writer must produce files that read back
-    // identically to the Group-API reference on every action shape:
-    // null partition values, unicode, empty maps, all optionals, and
-    // the non-add head types
+    // identically to the Group-API reference on every AddFile shape:
+    // null partition values, unicode, empty maps, all optionals
     val rnd = new scala.util.Random(11)
-    val actions: Seq[Action] =
-      Seq[Action](
-        Protocol(2, 5, Nil, Seq("rowTracking")),
-        Metadata("id BIGINT, täxt STRING, p STRING", Seq("p"), 99L,
-          Map.empty, Map("graft.rowTracking" -> "true")),
-        Txn("app-β", 3L),
-        DomainMetadata("graft.rowTracking",
-          Map("highWaterMark" -> "12345"), removed = false),
-        DomainMetadata("gone", Map.empty, removed = true)) ++
+    val actions: Seq[AddFile] =
       (0 until 500).map { i =>
         AddFile(s"p=${i % 7}/f-$i-日本.parquet",
           Map("p" -> (if (i % 11 == 0) null else s"${i % 7}")),
@@ -218,18 +128,10 @@ class LakeCheckpointSuite extends SparkSuite {
   test("direct parquet reader matches the Group-API reference reader " +
       "and the lite projection agrees on its fields") {
     // the r18 converter-tree reader must decode identically to the
-    // Group-API reference on every action shape (same fixture spread
+    // Group-API reference on every AddFile shape (same fixture spread
     // as the writer differential), from BOTH writers' files
     val rnd = new scala.util.Random(13)
-    val actions: Seq[Action] =
-      Seq[Action](
-        Protocol(2, 5, Nil, Seq("rowTracking")),
-        Metadata("id BIGINT, täxt STRING, p STRING", Seq("p"), 99L,
-          Map("c1" -> "id >= 0"), Map("graft.rowTracking" -> "true")),
-        Txn("app-β", 3L),
-        DomainMetadata("graft.rowTracking",
-          Map("highWaterMark" -> "12345"), removed = false),
-        DomainMetadata("gone", Map.empty, removed = true)) ++
+    val actions: Seq[AddFile] =
       (0 until 500).map { i =>
         AddFile(s"p=${i % 7}/f-$i-日本.parquet",
           Map("p" -> (if (i % 11 == 0) null else s"${i % 7}")),
@@ -258,10 +160,9 @@ class LakeCheckpointSuite extends SparkSuite {
         // the lite projection returns the same adds with stats dropped
         val lite = CheckpointParquet.readAddsLite(
           LogStore.current.fileReader(f)).toVector
-        val expected = actions.collect { case a: AddFile =>
+        val expected = actions.map(a =>
           a.copy(minValues = Map.empty, maxValues = Map.empty,
-            nullCounts = Map.empty)
-        }
+            nullCounts = Map.empty))
         assert(lite === expected, s"lite projection divergence ($name)")
     }
   }
@@ -347,12 +248,10 @@ class LakeCheckpointSuite extends SparkSuite {
     // seeks past the (shrunken) buffer end — the read must throw so
     // Spark's task retry can recover, never spin in seek()
     val f = java.nio.file.Paths.get(tmpDir("ckpt-trunc"), "t.parquet")
-    val actions: Seq[Action] = (1 to 200).map(i =>
+    val adds = (1 to 200).map(i =>
       AddFile(s"part-$i.parquet", Map.empty, i.toLong, 1L,
         Map("id" -> s"$i"), Map("id" -> s"$i"), Map.empty))
-    CheckpointParquet.write(f,
-      Iterator[Action](Metadata("id BIGINT", Nil, 0L, Map.empty,
-        Map.empty)) ++ actions.iterator)
+    CheckpointParquet.write(f, adds.iterator)
     val whole = java.nio.file.Files.readAllBytes(f)
     // drop a slab from the middle, keep the footer bytes at the tail
     val cut = whole.length / 3
@@ -369,50 +268,6 @@ class LakeCheckpointSuite extends SparkSuite {
     Await.result(attempt, 60.seconds) // a hang fails the await, loudly
   }
 
-  test("parquet and JSON part formats replay to identical state") {
-    withLegacyParts { withPartMax(4) {
-      def build(path: String, parquet: Boolean): Snapshot = {
-        val prev = LakeLog.CHECKPOINT_PARQUET_PARTS
-        LakeLog.CHECKPOINT_PARQUET_PARTS = parquet
-        try {
-          val log = new LakeLog(path)
-          log.commit(0L, Seq(CommitInfo(1L, "CREATE", Map.empty),
-            Metadata("id BIGINT, s STRING", Nil, 99L,
-              Map("c1" -> "id >= 0"), Map("k" -> "v")),
-            Protocol(3, 3, Seq("deletionVectors"), Seq("deletionVectors"))))
-          (1L to 12L).foreach { v =>
-            log.commit(v, Seq(
-              CommitInfo(v, "APPEND", Map.empty),
-              AddFile(s"f$v.parquet", Map.empty, v * 10, v,
-                Map("id" -> s"$v"), Map("id" -> s"${v * 2}"),
-                Map("id" -> 0L),
-                dvPath = if (v % 3 == 0) Some(s"_dv/$v.dv") else None,
-                dvCardinality = if (v % 3 == 0) 1L else 0L,
-                bloomPath = if (v % 2 == 0) Some(s"_bloom/$v.bloom")
-                  else None),
-              Txn(s"app$v", v)))
-          }
-          Snapshot.clearCacheForTest()
-          log.snapshot(12L)
-        } finally LakeLog.CHECKPOINT_PARQUET_PARTS = prev
-      }
-      val pq = build(tablePath("ckpt-eq-pq"), parquet = true)
-      val js = build(tablePath("ckpt-eq-js"), parquet = false)
-      // both replays crossed their v10 checkpoint in their format
-      assert(pq.files.sortBy(_.path) === js.files.sortBy(_.path))
-      assert(pq.metadata === js.metadata)
-      assert(pq.protocol === js.protocol)
-      assert(pq.transactions === js.transactions)
-      // and the formats actually differ on disk as configured
-      def partExts(p: Snapshot): Set[String] = LogStore.current
-        .listDir(p.log.logDir).map(_.getFileName.toString)
-        .filter(_.contains(".checkpoint.0"))
-        .map(_.split("\\.").last).toSet
-      assert(partExts(pq) === Set("parquet"))
-      assert(partExts(js) === Set("json"))
-    } }
-  }
-
   test("single-file checkpoints remain the small-state fast path") {
     val path = tablePath("ckpt-single")
     val log = new LakeLog(path)
@@ -425,7 +280,7 @@ class LakeCheckpointSuite extends SparkSuite {
     val names = LogStore.current.listDir(log.logDir)
       .map(_.getFileName.toString)
     assert(names.exists(_.matches("\\d{20}\\.checkpoint\\.json")))
-    assert(!names.exists(_.contains(".checkpoint.0")))
+    assert(manifestVersions(log).isEmpty)
   }
 
   test("log retention drops aged pre-horizon version files; travel fails loudly") {
@@ -778,8 +633,8 @@ class LakeCheckpointSuite extends SparkSuite {
     // Hadoop's checksummed LocalFileSystem writes a "..rep-*.tmp.crc"
     // sibling next to every staged parquet body; the publish move
     // takes only the body, so without eager deletion the sibling
-    // accretes in _log forever (one per part per checkpoint).
-    withLegacyParts { withPartMax(5) {
+    // accretes in the log forever (one per sidecar per checkpoint).
+    withPartMax(5) {
       val path = tablePath("ckpt-nocrc")
       val log = new LakeLog(path)
       log.commit(0L, Seq(CommitInfo(1L, "CREATE", Map.empty), meta,
@@ -788,15 +643,14 @@ class LakeCheckpointSuite extends SparkSuite {
         log.commit(v, Seq(CommitInfo(v, "APPEND", Map.empty),
           addFile(s"f${v}a"), addFile(s"f${v}b")))
       }
-      val names = LogStore.current.listDir(log.logDir)
-        .map(_.getFileName.toString)
-      assert(names.exists(_.matches(
-        "\\d{20}\\.checkpoint\\.\\d{4}\\.\\d{4}\\.parquet")),
-        s"no multi-part checkpoint in $names")
+      assert(manifestVersions(log) === Seq(10L))
+      assert(sidecarsOnDisk(log).nonEmpty)
+      val names = Seq(log.logDir, log.logDir.resolve(LakeLog.SIDECAR_DIR))
+        .flatMap(LogStore.current.listDir).map(_.getFileName.toString)
       assert(!names.exists(_.endsWith(".crc")),
-        s"orphaned checksum sibling in _log: $names")
+        s"orphaned checksum sibling in the log: $names")
       assert(!names.exists(_.endsWith(".tmp")),
-        s"orphaned staging body in _log: $names")
+        s"orphaned staging body in the log: $names")
       // and the crash-path sweep matches the checksum-sibling pattern
       val debris = log.logDir.resolve("..rep-deadbeef.tmp.crc")
       java.nio.file.Files.write(debris,
@@ -807,27 +661,102 @@ class LakeCheckpointSuite extends SparkSuite {
       LogStore.current.cleanupStaging(log.logDir, 3600 * 1000L)
       assert(!java.nio.file.Files.exists(debris),
         "aged ..rep-*.tmp.crc debris must be swept")
-    } }
+    }
   }
 
   test("stale multi-part checkpoints are cleaned up with the aux files") {
-    withLegacyParts { withPartMax(2) {
+    withPartMax(2) {
       val path = tablePath("ckpt-clean")
       val log = new LakeLog(path)
-      log.commit(0L, Seq(CommitInfo(1L, "CREATE", Map.empty), meta,
-        Protocol()))
+      log.commit(0L, Seq(CommitInfo(System.currentTimeMillis(), "CREATE",
+        Map.empty), meta, Protocol()))
       // five checkpoint boundaries (v10..v50); RETAINED_AUX = 3 keeps
-      // the part sets for v30+ only
+      // the manifests for v30+ only. Removes dirty old slices, so the
+      // stale manifests reference sidecars no surviving one does.
       (1L to 50L).foreach { v =>
-        log.commit(v, Seq(CommitInfo(v, "APPEND", Map.empty),
-          addFile(s"c$v")))
+        log.commit(v, Seq(
+          CommitInfo(System.currentTimeMillis(), "APPEND", Map.empty),
+          addFile(s"c$v")) ++
+          (if (v % 3 == 0) Seq(RemoveFile(s"c${v - 2}.parquet", v))
+           else Nil))
       }
-      val partVersions = LogStore.current.listDir(log.logDir)
+      assert(manifestVersions(log) === Seq(30L, 40L, 50L))
+      val referenced = manifestVersions(log).flatMap(v =>
+        log.readManifest(log.manifestFile(v))._2.map(_.path)).toSet
+      val before = sidecarsOnDisk(log)
+      assert(before.map(p => LakeLog.SIDECAR_DIR + "/" +
+        p.getFileName.toString).exists(p => !referenced(p)),
+        "no sidecar was left unreferenced by the stale manifests")
+      // the sweep is age-gated: age every sidecar, then clean up
+      before.foreach(p => java.nio.file.Files.setLastModifiedTime(p,
+        java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - 24L * 3600 * 1000)))
+      log.cleanupAuxFiles(50L)
+      val after = sidecarsOnDisk(log).map(p =>
+        LakeLog.SIDECAR_DIR + "/" + p.getFileName.toString).toSet
+      assert(after === referenced,
+        s"unreferenced: ${after -- referenced}; " +
+        s"missing: ${referenced -- after}")
+      Snapshot.clearCacheForTest()
+      assert(log.snapshot(50L).files.map(_.path).toSet ===
+        naiveLiveSet(log, 50L))
+    }
+  }
+
+  test("the columnar index qualifies exactly when the newest " +
+      "checkpoint is a manifest") {
+    import graft.sources.ColumnarLakeFileIndex
+    withPartMax(6) {
+      val path = tablePath("ckpt-columnar-rule")
+      val log = new LakeLog(path)
+      def ts = System.currentTimeMillis()
+      def columnar(v: Long): Boolean = {
+        Snapshot.clearCacheForTest()
+        ColumnarLakeFileIndex.clearCacheForTest()
+        ColumnarLakeFileIndex.tryBuild(spark, log, v).isDefined
+      }
+      log.commit(0L, Seq(CommitInfo(ts, "CREATE", Map.empty), meta,
+        Protocol()))
+      // below the threshold: one live file at v10 (2 head + 1 <= 6)
+      (1L to 10L).foreach { v =>
+        log.commit(v, Seq(CommitInfo(ts, "APPEND", Map.empty),
+          addFile(s"a$v")) ++
+          (if (v > 1) Seq(RemoveFile(s"a${v - 1}.parquet", v)) else Nil))
+      }
+      val names10 = LogStore.current.listDir(log.logDir)
         .map(_.getFileName.toString)
-        .filter(_.matches("\\d{20}\\.checkpoint\\.\\d{4}\\.\\d{4}\\.parquet"))
-        .map(_.split("\\.")(0).toLong).distinct.sorted
-      assert(partVersions === Seq(30L, 40L, 50L))
-    } }
+      assert(names10.contains(f"${10L}%020d.checkpoint.json"))
+      assert(manifestVersions(log).isEmpty)
+      assert(!columnar(10L), "a JSON checkpoint must not plan columnar")
+      // grow across it: 11 live files at v20 → the first manifest
+      (11L to 20L).foreach { v =>
+        log.commit(v, Seq(CommitInfo(ts, "APPEND", Map.empty),
+          addFile(s"b$v")))
+      }
+      assert(manifestVersions(log) === Seq(20L))
+      assert(columnar(20L), "a manifest checkpoint must plan columnar")
+      // DELETE shrinks the table below the threshold again; the chain
+      // keeps the manifest form, so the table stays columnar
+      val live20 = naiveLiveSet(log, 20L).toSeq.sorted
+      log.commit(21L, CommitInfo(ts, "DELETE", Map.empty) +:
+        live20.drop(1).map(p => RemoveFile(p, 21L): Action))
+      var survivor = live20.head
+      (22L to 30L).foreach { v =>
+        log.commit(v, Seq(CommitInfo(ts, "APPEND", Map.empty),
+          addFile(s"c$v"), RemoveFile(survivor, v)))
+        survivor = s"c$v.parquet"
+      }
+      assert(naiveLiveSet(log, 30L).size === 1)
+      assert(manifestVersions(log) === Seq(20L, 30L))
+      assert(!LogStore.current.listDir(log.logDir)
+        .exists(_.getFileName.toString == f"${30L}%020d.checkpoint.json"))
+      assert(columnar(30L), "a shrunk manifest-chain table left columnar")
+      // time travel follows the checkpoint at or below the version
+      assert(!columnar(15L))
+      Snapshot.clearCacheForTest()
+      assert(log.snapshot(30L).files.map(_.path).toSet ===
+        naiveLiveSet(log, 30L))
+    }
   }
 
   // ----- incremental manifest checkpoints (round 17) ---------------

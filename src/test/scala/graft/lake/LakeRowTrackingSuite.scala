@@ -241,19 +241,50 @@ class LakeRowTrackingSuite extends SparkSuite {
   }
 
   test("checkpoint parquet roundtrips DomainMetadata and baseRowId") {
+    // sidecar encoding: baseRowId present and absent
     val dir = java.nio.file.Files.createTempDirectory("rt_ckpt")
     val target = dir.resolve("part.parquet")
-    val actions: Seq[Action] = Seq(
-      DomainMetadata(RowTracking.DOMAIN,
-        Map(RowTracking.HWM_KEY -> "42")),
-      DomainMetadata("other.domain", Map.empty, removed = true),
+    val adds = Seq(
       AddFile("p=1/f.parquet", Map("p" -> "1"), size = 10L,
         numRecords = 7L, baseRowId = Some(35L)),
       AddFile("p=1/g.parquet", Map("p" -> "1"), size = 10L,
         numRecords = 7L))
-    CheckpointParquet.write(target, actions.iterator)
-    assert(CheckpointParquet.read(target) === actions)
+    CheckpointParquet.write(target, adds.iterator)
+    assert(CheckpointParquet.read(target) === adds)
     LakeWriter.deleteRecursively(dir)
+    // a manifest checkpoint of a row-tracked table: the hwm domain
+    // rides the manifest head, every sidecar AddFile keeps its
+    // baseRowId — both equal to the raw version-file fold
+    val prev = LakeLog.CHECKPOINT_PART_MAX_ACTIONS
+    LakeLog.CHECKPOINT_PART_MAX_ACTIONS = 2
+    try {
+      val path = tablePath("rt_manifest")
+      LakeWriter.write(docs(2), path, properties = Map(RT))
+      (1 to LakeLog.CHECKPOINT_INTERVAL.toInt).foreach { i =>
+        LakeWriter.write(docs(2, from = 2 * i), path, mode = "append")
+      }
+      val log = new LakeLog(path)
+      val v = LakeLog.CHECKPOINT_INTERVAL
+      val bases = scala.collection.mutable.Map.empty[String, Option[Long]]
+      var hwm = Map.empty[String, String]
+      (0L to v).foreach(log.readVersion(_).foreach {
+        case a: AddFile => bases(a.path) = a.baseRowId
+        case r: RemoveFile => bases.remove(r.path)
+        case d: DomainMetadata if d.domain == RowTracking.DOMAIN =>
+          hwm = d.configuration
+        case _ =>
+      })
+      val (head, refs) = log.readManifest(log.manifestFile(v))
+      assert(head.collect { case d: DomainMetadata => d }
+        .filter(_.domain == RowTracking.DOMAIN)
+        .map(_.configuration) === Seq(hwm))
+      assert(hwm.contains(RowTracking.HWM_KEY))
+      val sidecarBases = refs.flatMap(r => CheckpointParquet.read(
+        LogStore.current.fileReader(log.logDir.resolve(r.path))))
+        .map(a => a.path -> a.baseRowId).toMap
+      assert(sidecarBases === bases.toMap)
+      assert(sidecarBases.values.forall(_.isDefined))
+    } finally LakeLog.CHECKPOINT_PART_MAX_ACTIONS = prev
   }
 
   test("concurrent appends never carve overlapping id blocks") {

@@ -18,6 +18,17 @@ class PlanSuite extends SparkSuite {
     df.queryExecution.explainString(FormattedMode)
   }
 
+  test("README's driver-contract gate counts match the registry") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(sys.props("user.dir"), "README.md")),
+      java.nio.charset.StandardCharsets.UTF_8).replaceAll("\\s+", " ")
+    val m = """exposes (\d+) gate queries \((\d+) DuckDB-oracled""".r
+      .findFirstMatchIn(readme)
+    assert(m.isDefined, "README lost its gate-count sentence")
+    assert(m.get.group(1).toInt === graft.SparkEntry.queryOrder.size)
+    assert(m.get.group(2).toInt === graft.SparkEntry.oracleSql.size)
+  }
+
   test("dimension joins broadcast (q3, q20)") {
     assert(planOf("q3_join_revenue").contains("BroadcastHashJoin"))
     val star = planOf("q20_star_join")
