@@ -15,17 +15,16 @@ import org.apache.spark.sql.types.StructType
   * path conflates these into one driver-resident `Seq[AddFile]` of
   * the whole table (~GBs at 10⁶ files).
   *
-  * [[DmlPlan.Classic]] wraps a materialized [[Snapshot]] (exactly the
-  * pre-round-15 behavior). [[DmlPlan.Columnar]] wraps a
+  * [[DmlPlan.Classic]] wraps a materialized [[Snapshot]].
+  * [[DmlPlan.Columnar]] wraps a
   * [[graft.sources.ColumnarLakeFileIndex]]: discovery scans plan
   * through the distributed checkpoint scan, and `subset` fetches the
   * touched AddFiles with a path-filtered distributed pass — the
-  * driver holds O(touched), never O(table). The rewrite machinery
-  * downstream ([[LakeTable.readFilesWithMeta]],
-  * [[LakeTable.stageDeletionVectors]], [[LakeTable.commitRewrite]])
-  * is UNCHANGED: it receives the subset Snapshot, which carries the
-  * correct version/metadata for conflict detection and exactly the
-  * touched files.
+  * driver holds O(touched chunk), never O(table). The rewrite
+  * pipeline downstream ([[StreamedRewrite.rewrite]],
+  * [[LakeTable.readFilesWithMeta]], [[LakeTable.stageDeletionVectors]])
+  * is the same for both: it receives a subset Snapshot per chunk,
+  * which carries exactly the chunk's files.
   */
 private[lake] sealed trait DmlPlan {
   def table: LakeTable
@@ -34,8 +33,8 @@ private[lake] sealed trait DmlPlan {
   def transactions: Map[String, Long]
   /** true iff the live set is empty. */
   def isEmpty: Boolean
-  /** Live file count — the streamed-rewrite gate's cheap pre-test
-    * (metadata-resident on both plan shapes).
+  /** Live file count — the distributed-touched-source gate's cheap
+    * pre-test (metadata-resident on both plan shapes).
     */
   def liveFileCountHint: Long
   final def schema: StructType = StructType.fromDDL(metadata.schemaDDL)

@@ -150,7 +150,8 @@ final class LakeLog(val tablePath: String) {
     maintainAtBoundary(version)
   }
 
-  /** [[commit]] for O(table)-BULK commits (RESTORE's re-add actions):
+  /** [[commit]] for possibly O(table)-BULK commits (RESTORE's re-add
+    * actions, every DELETE/UPDATE/MERGE rewrite):
     * the bulk actions stream from `bulk()` straight into the
     * version-file write — the driver holds one source chunk and one
     * serialized line at a time, never the whole action list or its
@@ -181,10 +182,22 @@ final class LakeLog(val tablePath: String) {
       case a => a
     }
     val commitMeta = head.collectFirst { case m: Metadata => m }
-    def lines(): Iterator[String] =
+    // the meta-bearing actions of the last write pass, for the
+    // metadata-light cache seed below (O(meta actions), not O(bulk))
+    val metaSeen = scala.collection.mutable.ArrayBuffer.empty[Action]
+    def lines(): Iterator[String] = {
+      metaSeen.clear()
       (headStamped.iterator ++ RowTracking.stampStream(
         Some(parentMeta), parentDomains, commitMeta, bulk()))
-        .map(Action.toJson)
+        .map { a =>
+          a match {
+            case _: Metadata | _: Protocol | _: DomainMetadata | _: Txn =>
+              metaSeen += a
+            case _ => ()
+          }
+          Action.toJson(a)
+        }
+    }
     var published = false
     var ioRetries = 0
     while (!published) {
@@ -203,6 +216,9 @@ final class LakeLog(val tablePath: String) {
           ioRetries += 1
       }
     }
+    // same metadata-light cache seed as commit()
+    try Snapshot.seedMetaAfterCommit(this, version, metaSeen.toSeq)
+    catch { case NonFatal(_) => () }
     maintainAtBoundary(version)
   }
 

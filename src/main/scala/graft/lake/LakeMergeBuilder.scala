@@ -238,7 +238,7 @@ final class LakeMergeBuilder private[lake] (
     // touched-file discovery, the insert anti-join, and the touched
     // AddFile fetch all run through the distributed checkpoint scan —
     // a MERGE against a 10⁷-file table never materializes the live
-    // list on the driver; only the touched subset does.
+    // list on the driver; only one touched chunk at a time does.
     val plan = table.dmlPlan()
     // idempotence: this app already committed through this version —
     // the merge's effect is in the table, replaying it would not be
@@ -355,7 +355,6 @@ final class LakeMergeBuilder private[lake] (
     // rewritten — an unconditional by-source clause degrades to
     // all-files-with-unmatched-rows, which is what the semantics
     // require.
-    try {
     // the with-meta frame (not toDF): `_metadata` is materialized as
     // a real column so file identity survives the deletion-vector
     // anti-join/union on DV-carrying tables.
@@ -365,8 +364,7 @@ final class LakeMergeBuilder private[lake] (
       .map(cl => clauseCond(cl.cond))
       .reduceOption(_ || _).getOrElse(lit(false))
 
-    // ---- clause machinery, shared by the classic single-pass rewrite
-    // and the chunked path (all pure Column builders) -------------------
+    // ---- clause machinery (all pure Column builders) --------------------
     val matched = col(SRC).isNotNull
     // One ordered clause list drives the whole rewrite: matched
     // clauses guard on `matched`, by-source clauses on `!matched`
@@ -465,7 +463,7 @@ final class LakeMergeBuilder private[lake] (
           Seq(qualTgt(RowTracking.COL).as(RowTracking.COL)) else Nil) ++
         (if (dvMode) Seq(col(DVFILE), col(DVIDX)) else Nil): _*)
 
-    // ---- touched-file discovery, with the chunked-rewrite split --------
+    // ---- touched-file discovery ------------------------------------------
     val matchedPathsDF: Option[DataFrame] =
       if (matchedClauses.isEmpty || plan.isEmpty) None
       else Some(withFile.join(src, condExpr, "left_semi").select(col(FILE)))
@@ -473,15 +471,15 @@ final class LakeMergeBuilder private[lake] (
       if (bySourceClauses.isEmpty || plan.isEmpty) None
       else Some(withFile.join(src, condExpr, "left_anti")
         .filter(bySourceHit).select(col(FILE)))
-    val touchedSplit: Either[Seq[String], StreamedRewrite.TouchedChunks] =
-      (matchedPathsDF.toSeq ++ bySourcePathsDF.toSeq)
-        .reduceOption(_.union(_)) match {
-        case None => Left(Nil)
-        case Some(df) => StreamedRewrite.split(table, plan, df)
-      }
+    val chunks = (matchedPathsDF.toSeq ++ bySourcePathsDF.toSeq)
+      .reduceOption(_.union(_))
+      .map(StreamedRewrite.split(table, plan, _))
+      .getOrElse(StreamedRewrite.noneTouched)
 
-    // ---- not-matched side builder (shared): anti-join → inserts --------
-    def insertsFrame(evalOnce: DataFrame => DataFrame): Option[DataFrame] =
+    // ---- not-matched side: anti-join → inserts ---------------------------
+    // evaluated once: the same rows feed the table write AND the CDC
+    // insert records, without re-running the anti-join
+    def insertsFrame(): Option[DataFrame] =
       if (insertClauses.isEmpty) None else {
         val unmatched =
           if (plan.isEmpty) src
@@ -490,9 +488,7 @@ final class LakeMergeBuilder private[lake] (
           when(lit(false), lit(0))) { case (acc, (cl, i)) =>
             acc.when(clauseCond(cl.cond), lit(i + 1))
         }.otherwise(lit(0))
-        // evaluated once: the same rows feed the table write AND the
-        // CDC insert records, without re-running the anti-join
-        Some(evalOnce(
+        Some(evaluateOnce(
           unmatched.withColumn(IDXC, insertIdx)
             .filter(col(IDXC) > 0)
             .select(fields.map { f =>
@@ -507,336 +503,99 @@ final class LakeMergeBuilder private[lake] (
             }: _*)))
       }
 
-    /** CHUNKED merge rewrite ([[StreamedRewrite]], non-DV): one
-      * bounded path chunk at a time — per chunk, the combined frame
-      * evaluates once (chunk-local cache, or parquet scratch when
-      * non-deterministic), feeds the dup fail-fast + data stage + CDC
-      * stage, and the staged actions spill. Inserts compute ONCE from
-      * the full-table anti-join (their semantics are global, not
-      * per-chunk), and the commit streams tombstones + spilled
-      * actions under the exact per-path conflict check. A RID (file,
-      * row) lives in exactly one chunk, so the per-chunk dup count is
-      * exact.
-      */
-    def chunkedMergeRewrite(
-        chunks: StreamedRewrite.TouchedChunks): Unit = {
-      val spill = new StreamedRewrite.ActionSpill
-      // merge-on-read: per-chunk DV descriptors (full-dead removes +
-      // DV re-adds) spill separately — their sweep must only delete
-      // the staged DV sidecars, never the live data files they re-add
-      val dvSpill: Option[StreamedRewrite.ActionSpill] =
-        if (dvMode) Some(new StreamedRewrite.ActionSpill) else None
-      var dvAddCount = 0L
-      val now = System.currentTimeMillis()
-      val cdf = LakeTable.cdfEnabled(plan.metadata)
+    // ---- staging: per touched chunk, then one commit ---------------------
+    // A RID (file, row) lives in exactly one chunk, so the per-chunk
+    // duplicate-match check is exact. The inserts are global (one
+    // anti-join against the whole table) and stage with the LAST
+    // chunk's data and CDC writes — alone when no file is touched.
+    val params = Map("condition" -> condition,
+      "matchedClauses" -> matchedClauses.size.toString,
+      "notMatchedClauses" -> insertClauses.size.toString,
+      "notMatchedBySourceClauses" -> bySourceClauses.size.toString)
+    StreamedRewrite.rewrite(table, plan, chunks, "MERGE", params, dvMode,
+      txn) { (_, paths, snapC, last, staged) =>
       try {
-        try {
-          chunks.foreachChunk { (_, chunk) =>
-            val snapC = plan.subset(chunk)
-            val combinedRaw =
-              combinedRawFor(joinedFor(tgtTouchedFor(snapC, chunk)))
-            val combined = materializeIfNonDeterministic(combinedRaw)
-            val cached = combined eq combinedRaw
-            if (cached)
-              combined.persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val dupTask =
-                if (!ambiguous) None
-                else Some(LakeWriter.inParallel("graft-merge-dup-check") {
-                  combined.filter(col(MATCHED)).groupBy(col(RID))
-                    .count().filter(col("count") > 1).limit(1).count()
-                })
-              // copy-on-write rewrites the chunk's surviving rows;
-              // merge-on-read appends only the update-clause rows
-              // (clause hits are soft-deleted via the chunk's DVs)
-              val rewrittenRows: Option[DataFrame] =
-                if (!dvMode) Some(newSideData(combined.filter(keep)))
-                else if (updateIdxs.isEmpty) None
-                else Some(newSideData(
-                  combined.filter(col(IDXC).isin(updateIdxs: _*))))
-              rewrittenRows.foreach { rr =>
-                if (plan.metadata.constraints.nonEmpty)
-                  LakeWriter.enforceConstraints(rr.drop(RowTracking.COL),
-                    plan.metadata.constraints, table.tablePath)
-              }
-              val cdcDirC = LakeWriter.newCdcDir(table.tablePath)
-              val cdcTaskC =
-                if (!cdf) None
-                else Some(LakeWriter.inParallel("graft-merge-cdc-stage") {
-                  val pre = oldSide(combined.filter(col(IDXC) > 0))
-                    .withColumn("_change_type", lit("delete"))
-                  val cdcDf =
-                    if (updateIdxs.isEmpty) pre
-                    else pre.unionByName(
-                      newSide(combined.filter(col(IDXC).isin(updateIdxs: _*)))
-                        .withColumn("_change_type", lit("insert")))
-                  LakeWriter.stageCdc(cdcDf, table.tablePath, cdcDirC)
-                })
-              rewrittenRows.foreach { rr =>
-                spill.append(LakeWriter.stageAndAdopt(rr,
-                  table.tablePath, plan.partitionColumns,
-                  ColumnMapping.overrides(plan.metadata),
-                  plan.metadata.properties, computeLight = true))
-              }
-              cdcTaskC.foreach(t => spill.append(LakeWriter.awaitTask(t)))
-              // the dup verdict lands BEFORE DV staging (classic
-              // order): duplicate RIDs would write duplicate DV
-              // indices and fail inside the staging job instead of
-              // with the canonical error
-              dupTask.foreach { t =>
-                if (LakeWriter.awaitTask(t) > 0)
-                  throw new IllegalStateException(
-                    "MERGE failed: a target row was matched by multiple " +
-                    "source rows with update/delete clauses present; " +
-                    "merge results would be nondeterministic. " +
-                    "Deduplicate the source on the merge key.")
-              }
-              dvSpill.foreach { ds =>
-                dvAddCount += table.stageDvChunkToSpill(snapC, chunk,
-                  combined.filter(col(IDXC) > 0)
-                    .select(col(DVFILE), col(DVIDX)), ds)
-              }
-            } finally if (cached) { combined.unpersist(false); () }
+        // ONE combined frame; evaluateOnce (stage-to-parquet or cache)
+        // guarantees the target×source join runs a single time for all
+        // four consumers
+        val combined: Option[DataFrame] =
+          if (paths.isEmpty) None
+          else Some(evaluateOnce(
+            combinedRawFor(joinedFor(tgtTouchedFor(snapC, paths)))))
+        // The dup check is an agg over the shared combined frame (no
+        // second join evaluation), launched on its own thread so it
+        // OVERLAPS the rewrite write — both consumers materialize the
+        // same cache blocks under Spark's block locks. The result is
+        // awaited before the DV stage and the commit; on a dup the
+        // staged (still unreferenced) files are swept and the operation
+        // fails exactly as an eager check would.
+        val dupCheck = combined.filter(_ => ambiguous).map { c =>
+          LakeWriter.inParallel("graft-merge-dup-check") {
+            c.filter(col(MATCHED)).groupBy(col(RID))
+              .count().filter(col("count") > 1).limit(1).count()
           }
-          // inserts: once, global anti-join semantics
-          insertsFrame(df => {
-            val out = materializeIfNonDeterministic(df)
-            if (out eq df) out.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            out
-          }).foreach { ins =>
-            try {
-              if (plan.metadata.constraints.nonEmpty)
-                LakeWriter.enforceConstraints(ins,
-                  plan.metadata.constraints, table.tablePath)
-              val cdcDirI = LakeWriter.newCdcDir(table.tablePath)
-              val cdcTaskI =
-                if (!cdf) None
-                else Some(LakeWriter.inParallel("graft-merge-cdc-stage") {
-                  LakeWriter.stageCdc(
-                    ins.withColumn("_change_type", lit("insert")),
-                    table.tablePath, cdcDirI)
-                })
-              spill.append(LakeWriter.stageAndAdopt(ins, table.tablePath,
-                plan.partitionColumns,
-                ColumnMapping.overrides(plan.metadata),
-                plan.metadata.properties, computeLight = true))
-              cdcTaskI.foreach(t => spill.append(LakeWriter.awaitTask(t)))
-            } finally { ins.unpersist(false); () }
-          }
-          val params = Map("condition" -> condition,
-            "matchedClauses" -> matchedClauses.size.toString,
-            "notMatchedClauses" -> insertClauses.size.toString,
-            "notMatchedBySourceClauses" -> bySourceClauses.size.toString,
-            "streamedRewrite" -> "true") ++
-            (if (dvMode) Map("deletionVectors" -> dvAddCount.toString)
-             else Map.empty)
-          StreamedRewrite.onBeforeStreamedCommit()
-        LakeWriter.commitStreamedExactConflicts(table.log, plan.version,
-            () => chunks.pathIterator()) { _ =>
-            table.assertMetadataUnchangedAt(plan.version, plan.metadata,
-              "MERGE")
-            txn.foreach { case (a, v) =>
-              if (table.log.latestVersion > plan.version &&
-                  Snapshot.replayMetaTxns(table.log,
-                    table.log.latestVersion)._4.get(a).exists(_ >= v))
-                throw new TxnAlreadyCommittedException(a, v)
-            }
-            Seq(CommitInfo(now, "MERGE", params)) ++
-              txn.map { case (a, v) => Txn(a, v) }
-          } { () =>
-            // merge-on-read supersedes touched entries in place (DV
-            // re-adds; full-dead files became removes at DV staging) —
-            // only copy-on-write tombstones every touched path
-            (dvSpill match {
-              case Some(ds) => ds.iterator()
-              case None =>
-                chunks.pathIterator().map(p => RemoveFile(p, now): Action)
-            }) ++ spill.iterator()
-          }
-          ()
-        } catch { case e: Throwable =>
-          spill.sweep(table.tablePath)
-          dvSpill.foreach(_.sweep(table.tablePath, dvOnly = true))
-          throw e
         }
-      } finally {
-        spill.delete()
-        dvSpill.foreach(_.delete())
-        chunks.unpersist()
-      }
-    }
-
-    touchedSplit match {
-      case Right(chunks) =>
-        chunkedMergeRewrite(chunks)
-        return
-      case Left(_) => ()
-    }
-    val touched: Seq[String] = touchedSplit.left.getOrElse(Nil)
-    // rewrite phase anchors on the TOUCHED-subset snapshot — under a
-    // columnar plan this is the only point AddFiles reach the driver
-    val snap = plan.subset(touched)
-
-    var cdcMatched: Option[DataFrame] = None
-    var dvPairs: Option[DataFrame] = None
-    val dvRelsWritten =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    var dupCheck: Option[java.util.concurrent.FutureTask[Long]] = None
-    val rewritten: Option[DataFrame] = if (touched.isEmpty) None else {
-      // ONE combined frame; evaluateOnce (stage-to-parquet or cache)
-      // guarantees the target×source join runs a single time for all
-      // four consumers.
-      val combined = evaluateOnce(
-        combinedRawFor(joinedFor(tgtTouchedFor(snap, touched))))
-
-      // The dup check is an agg over the shared combined frame (no
-      // second join evaluation), launched on its own thread so it
-      // OVERLAPS the rewrite write — both consumers materialize the
-      // same cache blocks under Spark's block locks. The result is
-      // awaited before anything is committed; on a dup the staged
-      // (still unreferenced) files are deleted and the operation
-      // fails exactly as an eager check would.
-      if (ambiguous)
-        dupCheck = Some(LakeWriter.inParallel("graft-merge-dup-check") {
-          combined.filter(col(MATCHED)).groupBy(col(RID))
-            .count().filter(col("count") > 1).limit(1).count()
-        })
-
-      // persisted CDC for the matched side: every clause-hit row's
-      // preimage as delete; update-clause rows also emit a postimage
-      // insert (the same representation changes() uses everywhere)
-      val pre = oldSide(combined.filter(col(IDXC) > 0))
-        .withColumn("_change_type", lit("delete"))
-      cdcMatched = Some(
-        if (updateIdxs.isEmpty) pre
-        else pre.unionByName(
-          newSide(combined.filter(col(IDXC).isin(updateIdxs: _*)))
-            .withColumn("_change_type", lit("insert"))))
-
-      if (dvMode) {
-        // every clause-hit row (update or delete) is soft-deleted;
-        // update clauses additionally append their new version below
-        dvPairs = Some(combined.filter(col(IDXC) > 0)
-          .select(col(DVFILE), col(DVIDX)))
-        if (updateIdxs.isEmpty) None
-        else Some(newSideData(combined.filter(col(IDXC).isin(updateIdxs: _*))))
-      } else Some(newSideData(combined.filter(keep)))
-    }
-
-    // ---- not-matched side: anti-join → inserts ---------------------------
-    val inserts: Option[DataFrame] = insertsFrame(evaluateOnce)
-
-    val output = (rewritten, inserts) match {
-      // allowMissingColumns: on tracked tables the rewrite side
-      // carries the id column and the insert side deliberately lacks
-      // it (fresh rows get fresh ids) — it null-fills
-      case (Some(r), Some(i)) =>
-        Some(r.unionByName(i, allowMissingColumns = true))
-      case (r, i) => r.orElse(i)
-    }
-    // The CDC write overlaps the data write on its own thread — the
-    // two stage to disjoint scratch dirs and share the same cached
-    // frames, so wall time is max(data, cdc) instead of the sum.
-    val cdcInserts = inserts.map(
-      _.withColumn("_change_type", lit("insert")))
-    val cdcDf =
-      if (!LakeTable.cdfEnabled(plan.metadata)) None
-      else (cdcMatched.toSeq ++ cdcInserts.toSeq)
-        .reduceOption(_.unionByName(_))
-    // The scratch dir is allocated HERE, not inside the task, so the
-    // failure sweep below can remove it even if the stage died mid-write.
-    val cdcDir = cdcDf.map(_ => LakeWriter.newCdcDir(table.tablePath))
-    val cdcTask = cdcDf.map(df =>
-      LakeWriter.inParallel("graft-merge-cdc-stage") {
-        LakeWriter.stageCdc(df, table.tablePath, cdcDir.get)
-      })
-    // Everything staged below is unreferenced by the log until the
-    // final commit, so ANY failure past this point — the data write,
-    // the overlapped CDC stage, the duplicate-match verdict, or the
-    // commit itself — must sweep the staged files back out; otherwise
-    // they sit as untracked debris until a vacuum ages them past the
-    // mtime horizon. (Now-empty cdc-/partition dirs are left for
-    // vacuum's bottom-up sweep; removing an empty dir never loses
-    // data.)
-    var adds: Seq[AddFile] = Nil
-    var cdc: Seq[CdcFile] = Nil
-    try {
-      adds = output match {
-        case Some(df) =>
-          if (snap.metadata.constraints.nonEmpty)
+        // persisted CDC for the matched side: every clause-hit row's
+        // preimage as delete; update-clause rows also emit a postimage
+        // insert (the same representation changes() uses everywhere)
+        val cdcMatched = combined.map { c =>
+          val pre = oldSide(c.filter(col(IDXC) > 0))
+            .withColumn("_change_type", lit("delete"))
+          if (updateIdxs.isEmpty) pre
+          else pre.unionByName(
+            newSide(c.filter(col(IDXC).isin(updateIdxs: _*)))
+              .withColumn("_change_type", lit("insert")))
+        }
+        // copy-on-write rewrites the surviving rows; merge-on-read
+        // soft-deletes every clause-hit row and appends only the
+        // update-clause rows' new versions
+        val rewritten = combined.flatMap { c =>
+          if (!dvMode) Some(newSideData(c.filter(keep)))
+          else if (updateIdxs.isEmpty) None
+          else Some(newSideData(c.filter(col(IDXC).isin(updateIdxs: _*))))
+        }
+        val inserts = if (last) insertsFrame() else None
+        val output = (rewritten, inserts) match {
+          // allowMissingColumns: on tracked tables the rewrite side
+          // carries the id column and the insert side deliberately
+          // lacks it (fresh rows get fresh ids) — it null-fills
+          case (Some(r), Some(i)) =>
+            Some(r.unionByName(i, allowMissingColumns = true))
+          case (r, i) => r.orElse(i)
+        }
+        // the CDC write overlaps the data write on its own thread —
+        // the two stage to disjoint dirs and share the same frames, so
+        // wall time is max(data, cdc) instead of the sum
+        (cdcMatched.toSeq ++
+          inserts.map(_.withColumn("_change_type", lit("insert"))).toSeq)
+          .reduceOption(_.unionByName(_))
+          .foreach(df => staged.startCdc("graft-merge-cdc-stage")(df))
+        output.foreach { df =>
+          if (plan.metadata.constraints.nonEmpty)
             LakeWriter.enforceConstraints(df.drop(RowTracking.COL),
-              snap.metadata.constraints, table.tablePath)
-          LakeWriter.stageAndAdopt(df, table.tablePath,
-            snap.partitionColumns, ColumnMapping.overrides(snap.metadata),
-            snap.metadata.properties, computeLight = true)
-        case None => Nil
-      }
-      cdc = cdcTask.map(LakeWriter.awaitTask(_)).getOrElse(Nil)
-      // Await the overlapped duplicate-match verdict before the commit.
-      dupCheck.foreach { f =>
-        if (LakeWriter.awaitTask(f) > 0)
-          throw new IllegalStateException(
-            "MERGE failed: a target row was matched by multiple source " +
-            "rows with update/delete clauses present; merge results " +
-            "would be nondeterministic. Deduplicate the source on the " +
-            "merge key.")
-      }
-      val params = Map("condition" -> condition,
-        "matchedClauses" -> matchedClauses.size.toString,
-        "notMatchedClauses" -> insertClauses.size.toString,
-        "notMatchedBySourceClauses" -> bySourceClauses.size.toString)
-      if (dvMode) {
-        // merge-on-read commit: DV re-adds supersede the touched
-        // files' entries in place (clause-hit rows soft-deleted),
-        // full-dead files drop out, and only updated/inserted rows
-        // were staged as new files.
-        val (removes, dvAdds, conflictPaths) = dvPairs match {
-          case Some(p) =>
-            table.stageDeletionVectors(snap, touched, p, dvRelsWritten)
-          case None => (Nil, Nil, Nil)
+              plan.metadata.constraints, table.tablePath)
+          staged.data.append(LakeWriter.stageAndAdopt(df, table.tablePath,
+            plan.partitionColumns, ColumnMapping.overrides(plan.metadata),
+            plan.metadata.properties, computeLight = true))
         }
-        val now = System.currentTimeMillis()
-        LakeWriter.commitWithRetry(table.log, snap.version,
-          conflictPaths) { _ =>
-          // Same metadata conflict rule as commitRewrite: a racing
-          // mapped RENAME/ADD COLUMN invalidates files staged under
-          // the read snapshot's mapping epoch. Metadata-light reads —
-          // the conflict check must not itself replay the file list.
-          if (table.log.latestVersion > snap.version &&
-              Snapshot.replayMeta(table.log, table.log.latestVersion)
-                ._1 != snap.metadata)
-            throw new ConflictingCommitException(
-              s"table metadata of ${table.tablePath} changed " +
-              s"concurrently with this MERGE (read version " +
-              s"${snap.version}); re-run the operation")
-          txn.foreach { case (a, v) =>
-            if (table.log.latestVersion > snap.version &&
-                Snapshot.replayMetaTxns(table.log,
-                  table.log.latestVersion)._4.get(a).exists(_ >= v))
-              throw new TxnAlreadyCommittedException(a, v)
-          }
-          Seq(CommitInfo(now, "MERGE",
-            params + ("deletionVectors" -> dvAdds.size.toString))) ++
-            removes ++ dvAdds ++ adds ++ cdc ++
-            txn.map { case (a, v) => Txn(a, v) }
+        staged.joinCdc()
+        // the dup verdict lands BEFORE DV staging: duplicate RIDs
+        // would write duplicate DV indices and fail inside the staging
+        // job instead of with the canonical error
+        dupCheck.foreach { f =>
+          if (LakeWriter.awaitTask(f) > 0)
+            throw new IllegalStateException(
+              "MERGE failed: a target row was matched by multiple source " +
+              "rows with update/delete clauses present; merge results " +
+              "would be nondeterministic. Deduplicate the source on the " +
+              "merge key.")
         }
-        ()
-      } else
-        table.commitRewrite(snap, touched, adds, "MERGE", params, cdc,
-          txn)
-    } catch { case e: Throwable =>
-      dvRelsWritten.forEach { rel =>
-        try {
-          DataStore.current.deleteIfExists(
-            java.nio.file.Paths.get(table.tablePath, rel)); ()
-        } catch { case _: java.io.IOException => () }
-      }
-      LakeWriter.sweepStaged(table.tablePath, adds, cdcTask, cdcDir)
-      throw e
+        if (dvMode) combined.foreach { c =>
+          staged.stageDv(snapC, paths,
+            c.filter(col(IDXC) > 0).select(col(DVFILE), col(DVIDX)))
+        }
+      } finally { caches.foreach(_.unpersist(false)); caches.clear() }
     }
-    } finally caches.foreach(_.unpersist(false))
   }
 
   /** Best-effort recovery of the source DataFrame's alias (set by

@@ -490,7 +490,7 @@ final class LakeTable private (
       }
       ()
     } catch { case e: Throwable =>
-      LakeWriter.sweepStaged(tablePath, adds, None, None)
+      LakeWriter.sweepStaged(tablePath, adds)
       throw e
     }
   }
@@ -745,113 +745,31 @@ final class LakeTable private (
       case None if LakeTable.dvEnabled(plan.metadata) =>
         deleteWithDv(plan, cond, condition)
       case None =>
-        val discovery =
-          if (plan.isEmpty) None
-          else Some(plan.withMetaDF
-            .filter(coalesce(cond, lit(false)))
-            .select(col("_metadata.file_path")))
-        val splitTouched = discovery
-          .map(StreamedRewrite.split(this, plan, _))
-          .getOrElse(Left(Nil))
-        splitTouched match {
-          case Right(chunks) =>
-            streamedRewriteDelete(plan, cond, condition, chunks)
-          case Left(touched) if touched.nonEmpty =>
-          // rewrite phase operates on the TOUCHED-subset snapshot —
-          // under the columnar plan the driver first materializes
-          // AddFiles here, and only for the touched set
-          val snap = plan.subset(touched)
+        if (plan.isEmpty) return
+        val hit = coalesce(cond, lit(false))
+        val chunks = StreamedRewrite.split(this, plan,
+          plan.withMetaDF.filter(hit).select(col("_metadata.file_path")))
+        if (chunks.count == 0) return
+        StreamedRewrite.rewrite(this, plan, chunks, "DELETE",
+          Map("predicate" -> condition)) { (_, paths, snapC, _, staged) =>
           // readForRewrite: on row-tracked tables the KEPT rows carry
           // their ids into the rewritten files
-          val kept = readForRewrite(snap, touched)
-            .filter(!coalesce(cond, lit(false)))
-          // persisted CDC: the deleted rows, so changes() never has
-          // to diff the rewritten files. Staged on its own thread so
-          // the CDC scan OVERLAPS the kept-rows write (two independent
-          // scans of the same touched files); nothing commits until
-          // both staging writes are joined.
-          val cdcDir = LakeWriter.newCdcDir(tablePath)
-          val cdcTask =
-            if (!LakeTable.cdfEnabled(snap)) None
-            else Some(LakeWriter.inParallel("graft-delete-cdc-stage") {
-              LakeWriter.stageCdc(
-                readFiles(snap, touched).filter(coalesce(cond, lit(false)))
-                  .withColumn("_change_type", lit("delete")),
-                tablePath, cdcDir)
-            })
-          var adds: Seq[AddFile] = Nil
-          try {
-            adds = LakeWriter.stageAndAdopt(kept, tablePath,
-              snap.partitionColumns, ColumnMapping.overrides(snap.metadata),
-              snap.metadata.properties, computeLight = true)
-            commitRewrite(snap, touched, adds, "DELETE",
-              Map("predicate" -> condition),
-              cdcTask.map(LakeWriter.awaitTask(_)).getOrElse(Nil))
-          } catch { case e: Throwable =>
-            // staged output is unreferenced until the commit: sweep it
-            LakeWriter.sweepStaged(tablePath, adds, cdcTask, Some(cdcDir))
-            throw e
+          val kept = readForRewrite(snapC, paths).filter(!hit)
+          // persisted CDC: the deleted rows, so changes() never has to
+          // diff the rewritten files. Its scan overlaps the kept-rows
+          // write (two independent scans of the same touched files).
+          staged.startCdc("graft-delete-cdc-stage") {
+            readFiles(snapC, paths).filter(hit)
+              .withColumn("_change_type", lit("delete"))
           }
-          case Left(_) => // nothing matched
-        }
-    }
-  }
-
-  /** CHUNKED copy-on-write DELETE ([[StreamedRewrite]]): the touched
-    * set rewrites one bounded path chunk at a time (subset fetch,
-    * kept-rows stage, per-chunk CDC), staged actions spill to local
-    * disk, and the commit streams tombstones + spilled actions — the
-    * driver holds O(chunk) state while the touched count is
-    * table-sized.
-    */
-  private def streamedRewriteDelete(plan: DmlPlan, cond: Column,
-      condition: String, chunks: StreamedRewrite.TouchedChunks): Unit = {
-    val now = System.currentTimeMillis()
-    val spill = new StreamedRewrite.ActionSpill
-    try {
-      try {
-        chunks.foreachChunk { (_, chunk) =>
-          val snapC = plan.subset(chunk)
-          val kept = readForRewrite(snapC, chunk)
-            .filter(!coalesce(cond, lit(false)))
-          val cdcDir = LakeWriter.newCdcDir(tablePath)
-          val cdcTask =
-            if (!LakeTable.cdfEnabled(snapC)) None
-            else Some(LakeWriter.inParallel("graft-delete-cdc-stage") {
-              LakeWriter.stageCdc(
-                readFiles(snapC, chunk).filter(coalesce(cond, lit(false)))
-                  .withColumn("_change_type", lit("delete")),
-                tablePath, cdcDir)
-            })
-          spill.append(LakeWriter.stageAndAdopt(kept, tablePath,
+          staged.data.append(LakeWriter.stageAndAdopt(kept, tablePath,
             snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
             snapC.metadata.properties, computeLight = true))
-          cdcTask.foreach(t => spill.append(LakeWriter.awaitTask(t)))
+          staged.joinCdc()
         }
-        StreamedRewrite.onBeforeStreamedCommit()
-        LakeWriter.commitStreamedExactConflicts(log, plan.version,
-          () => chunks.pathIterator()) { _ =>
-          assertMetadataUnchangedAt(plan.version, plan.metadata, "DELETE")
-          Seq(CommitInfo(now, "DELETE", Map("predicate" -> condition,
-            "streamedRewrite" -> "true")))
-        } { () =>
-          chunks.pathIterator().map(p => RemoveFile(p, now): Action) ++
-            spill.iterator()
-        }
-        ()
-      } catch { case e: Throwable =>
-        spill.sweep(tablePath)
-        throw e
-      }
-    } finally {
-      spill.delete()
-      chunks.unpersist()
     }
   }
 
-  /** Predicate UPDATE: set columns from expression strings where the
-    * condition holds; only touched files are rewritten.
-    */
   /** Merge-on-read DELETE: soft-delete matching rows by writing their
     * physical row indices to [[DeletionVector]] sidecars and
     * re-adding each touched file's log entry with the DV descriptor.
@@ -874,198 +792,45 @@ final class LakeTable private (
     // ONE full scan feeds everything: unlike copy-on-write (which
     // needs a touched-file list up front to rewrite whole files), a DV
     // delete only needs the MATCHING rows — so the touched set is
-    // derived from the cached hits instead of a separate
-    // touchedPaths() pass, halving the table scans per DELETE.
-    // Existing DVs are already applied by the with-meta frame, so
-    // re-deleting a soft-deleted row is impossible by construction.
+    // derived from the cached hits instead of a separate discovery
+    // pass, halving the table scans per DELETE. Existing DVs are
+    // already applied by the with-meta frame, so re-deleting a
+    // soft-deleted row is impossible by construction.
     val hits = plan.withMetaDF
       .filter(coalesce(cond, lit(false)))
       .select(fields.map(f => col(quoted(f.name))) ++ Seq(
         col("_metadata.file_path").as(FILE),
         col("_metadata.row_index").as(IDX)): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val touched: Seq[String] =
-      StreamedRewrite.split(this, plan, hits.select(col(FILE))) match {
-        case Right(chunks) =>
-          // bulk shape: the touched set clears the chunked-rewrite
-          // threshold — per-chunk DV staging, O(chunk) driver state
-          try chunkedDvDelete(plan, condition, hits, FILE, IDX, chunks)
-          finally { hits.unpersist(false); () }
-          return
-        case Left(t) => t
-      }
-    if (touched.isEmpty) { hits.unpersist(false); return }
-    val snap = plan.subset(touched)
-    val dvRelsWritten =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
     try {
-      val cdcDir = LakeWriter.newCdcDir(tablePath)
-      val cdcTask =
-        if (!LakeTable.cdfEnabled(snap)) None
-        else Some(LakeWriter.inParallel("graft-dv-delete-cdc-stage") {
-          LakeWriter.stageCdc(
-            hits.select(fields.map(f => col(quoted(f.name))): _*)
-              .withColumn("_change_type", lit("delete")),
-            tablePath, cdcDir)
-        })
-      try {
-        val (removes, dvAdds, conflictPaths) = stageDeletionVectors(
-          snap, touched, hits.select(col(FILE), col(IDX)), dvRelsWritten)
-        val cdc = cdcTask.map(LakeWriter.awaitTask(_)).getOrElse(Nil)
-        val now = System.currentTimeMillis()
-        // Conflict set = every file this DELETE supersedes (DV re-add
-        // or removal) — commitWithRetry treats a concurrent re-add of
-        // the same path as a conflict too.
-        LakeWriter.commitWithRetry(log, snap.version, conflictPaths) { _ =>
-          // cdc files were staged under snap's mapping epoch
-          assertMetadataUnchanged(snap, "DELETE")
-          Seq(CommitInfo(now, "DELETE",
-            Map("predicate" -> condition,
-              "deletionVectors" -> dvAdds.size.toString))) ++
-            removes ++ dvAdds ++ cdc
+      val chunks = StreamedRewrite.split(this, plan, hits.select(col(FILE)))
+      if (chunks.count > 0)
+        StreamedRewrite.rewrite(this, plan, chunks, "DELETE",
+          Map("predicate" -> condition), dvMode = true) {
+          (i, paths, snapC, _, staged) =>
+            val hitsC = hits.filter(chunks.memberOf(col(FILE), i))
+            staged.startCdc("graft-dv-delete-cdc-stage") {
+              hitsC.select(fields.map(f => col(quoted(f.name))): _*)
+                .withColumn("_change_type", lit("delete"))
+            }
+            staged.stageDv(snapC, paths, hitsC.select(col(FILE), col(IDX)))
+            staged.joinCdc()
         }
-        ()
-      } catch { case e: Throwable =>
-        // staged DV files + CDC are unreferenced until the commit
-        dvRelsWritten.forEach { rel =>
-          try { DataStore.current.deleteIfExists(
-            Paths.get(tablePath, rel)); () }
-          catch { case _: java.io.IOException => () }
-        }
-        LakeWriter.sweepStaged(tablePath, Nil, cdcTask, Some(cdcDir))
-        throw e
-      }
     } finally { hits.unpersist(false); () }
   }
 
-  /** Chunked merge-on-read DELETE ([[StreamedRewrite]]): above the
-    * chunked-rewrite threshold the touched set never lands on the
-    * driver — per path chunk, the chunk's (file, row) hits stage into
-    * DV sidecars and the resulting full-dead removes + DV re-adds
-    * SPILL; CDC stages per chunk too, so CdcFile lists stay O(chunk).
-    * The commit streams the spills under the exact per-path conflict
-    * check (our side re-derives from the persisted path frame).
-    */
-  private def chunkedDvDelete(plan: DmlPlan, condition: String,
-      hits: DataFrame, FILE: String, IDX: String,
-      chunks: StreamedRewrite.TouchedChunks): Unit = {
-    val fields = plan.schema.fields.toSeq
-    val dvSpill = new StreamedRewrite.ActionSpill
-    val cdcSpill = new StreamedRewrite.ActionSpill
-    var dvAddCount = 0L
-    val cdf = LakeTable.cdfEnabled(plan.metadata)
-    val now = System.currentTimeMillis()
-    try {
-      try {
-        chunks.foreachChunk { (i, chunk) =>
-          val snapC = plan.subset(chunk)
-          val hitsC = hits.filter(chunks.memberOf(col(FILE), i))
-          if (cdf) {
-            val cdcDir = LakeWriter.newCdcDir(tablePath)
-            cdcSpill.append(LakeWriter.stageCdc(
-              hitsC.select(fields.map(f => col(quoted(f.name))): _*)
-                .withColumn("_change_type", lit("delete")),
-              tablePath, cdcDir))
-          }
-          dvAddCount += stageDvChunkToSpill(snapC, chunk,
-            hitsC.select(col(FILE), col(IDX)), dvSpill)
-        }
-        StreamedRewrite.onBeforeStreamedCommit()
-        LakeWriter.commitStreamedExactConflicts(log, plan.version,
-          () => chunks.pathIterator()) { _ =>
-          assertMetadataUnchangedAt(plan.version, plan.metadata, "DELETE")
-          Seq(CommitInfo(now, "DELETE",
-            Map("predicate" -> condition,
-              "deletionVectors" -> dvAddCount.toString,
-              "streamedRewrite" -> "true")))
-        } { () => dvSpill.iterator() ++ cdcSpill.iterator() }
-        ()
-      } catch { case e: Throwable =>
-        dvSpill.sweep(tablePath, dvOnly = true)
-        cdcSpill.sweep(tablePath)
-        throw e
-      }
-    } finally {
-      dvSpill.delete(); cdcSpill.delete(); chunks.unpersist()
-    }
-  }
-
-  /** Chunked merge-on-read UPDATE: the DV twin of
-    * [[chunkedDvDelete]] — per chunk, the SET-applied rows stage as
-    * fresh files (spilled), the chunk's (file, row) identities stage
-    * into DV sidecars, and CDC pre/postimages stage chunk-local.
-    */
-  private def chunkedDvUpdate(plan: DmlPlan, condition: String,
-      projected: DataFrame, FILE: String, IDX: String, rt: Boolean,
-      newName: String => String,
-      chunks: StreamedRewrite.TouchedChunks): Unit = {
-    val fields = plan.schema.fields.toSeq
-    val rtCols = if (rt) Seq(col(quoted(RowTracking.COL))) else Nil
-    val spill = new StreamedRewrite.ActionSpill
-    val dvSpill = new StreamedRewrite.ActionSpill
-    var dvAddCount = 0L
-    val cdf = LakeTable.cdfEnabled(plan.metadata)
-    val now = System.currentTimeMillis()
-    try {
-      try {
-        chunks.foreachChunk { (i, chunk) =>
-          val snapC = plan.subset(chunk)
-          val projC = projected.filter(chunks.memberOf(col(FILE), i))
-          val updatedC = projC.select(
-            fields.map(f => col(quoted(newName(f.name))).as(f.name)) ++
-              rtCols: _*)
-          if (plan.metadata.constraints.nonEmpty)
-            LakeWriter.enforceConstraints(updatedC.drop(RowTracking.COL),
-              plan.metadata.constraints, tablePath)
-          if (cdf) {
-            val pre = projC
-              .select(fields.map(f => col(quoted(f.name))): _*)
-              .withColumn("_change_type", lit("delete"))
-            val post = updatedC.drop(RowTracking.COL)
-              .withColumn("_change_type", lit("insert"))
-            val cdcDir = LakeWriter.newCdcDir(tablePath)
-            spill.append(LakeWriter.stageCdc(pre.unionByName(post),
-              tablePath, cdcDir))
-          }
-          spill.append(LakeWriter.stageAndAdopt(updatedC, tablePath,
-            snapC.partitionColumns,
-            ColumnMapping.overrides(snapC.metadata),
-            snapC.metadata.properties, computeLight = true))
-          dvAddCount += stageDvChunkToSpill(snapC, chunk,
-            projC.select(col(FILE), col(IDX)), dvSpill)
-        }
-        StreamedRewrite.onBeforeStreamedCommit()
-        LakeWriter.commitStreamedExactConflicts(log, plan.version,
-          () => chunks.pathIterator()) { _ =>
-          assertMetadataUnchangedAt(plan.version, plan.metadata, "UPDATE")
-          Seq(CommitInfo(now, "UPDATE",
-            Map("predicate" -> condition,
-              "deletionVectors" -> dvAddCount.toString,
-              "streamedRewrite" -> "true")))
-        } { () => dvSpill.iterator() ++ spill.iterator() }
-        ()
-      } catch { case e: Throwable =>
-        spill.sweep(tablePath)
-        dvSpill.sweep(tablePath, dvOnly = true)
-        throw e
-      }
-    } finally {
-      spill.delete(); dvSpill.delete(); chunks.unpersist()
-    }
-  }
-
-  /** DV-staging core shared by merge-on-read DELETE and UPDATE: write
-    * (or grow) one deletion-vector sidecar per file for the given
-    * (file path, row index) pairs. Only those pairs shuffle
+  /** DV-staging core shared by merge-on-read DELETE, UPDATE and MERGE:
+    * write (or grow) one deletion-vector sidecar per file for the
+    * given (file path, row index) pairs. Only those pairs shuffle
     * (repartition by file + in-partition sort streams each file's
     * indices into one task in order); existing DVs are merged on the
-    * executor; the driver sees only per-file descriptors. Returns
-    * (full-dead removes, DV re-adds, conflict-set rel paths).
+    * executor; the driver sees only per-file descriptors. The
+    * full-dead removes and DV re-adds go to `dvSpill`, whose sweep
+    * covers the sidecars from then on; returns the DV re-add count.
     */
   private[lake] def stageDeletionVectors(
       snap: Snapshot, touched: Seq[String], pairs: DataFrame,
-      dvRelsWritten: java.util.concurrent.ConcurrentLinkedQueue[String])
-      : (Seq[RemoveFile], Seq[AddFile], Seq[String]) = {
+      dvSpill: StreamedRewrite.ActionSpill): Long = {
     // Existing DVs of touched files: merged into the new vector on
     // the executor writing that file's DV (metadata-sized map).
     // Keyed by plain absolute path — the exact string
@@ -1104,51 +869,62 @@ final class LakeTable private (
         flush()
         out.result().iterator
       }.collect().toSeq
-    results.foreach { case (_, rel, _) => dvRelsWritten.add(rel); () }
-    val addByPath = snap.files.map(f => f.path -> f).toMap
-    val now = System.currentTimeMillis()
-    val (gone, kept) = results.partition { case (uri, _, card) =>
-      val f = addByPath(relativize(uri))
-      f.numRecords >= 0 && card >= f.numRecords
-    }
-    val removes = gone.map { case (uri, rel, _) =>
-      // full-file deletion: drop the entry entirely; the just-written
-      // DV is unreferenced scratch
+    def deleteDv(rel: String): Unit =
       try { DataStore.current.deleteIfExists(Paths.get(tablePath, rel)); () }
       catch { case _: java.io.IOException => () }
-      RemoveFile(relativize(uri), now)
-    }
-    val dvAdds = kept.map { case (uri, rel, card) =>
-      addByPath(relativize(uri)).copy(
-        dvPath = Some(rel), dvCardinality = card)
-    }
-    (removes, dvAdds, results.map { case (uri, _, _) => relativize(uri) })
-  }
-
-  /** Chunked merge-on-read staging ([[StreamedRewrite]]): stage ONE
-    * path chunk's deletion vectors and spill the resulting
-    * full-dead removes + DV re-adds — driver residency stays
-    * O(chunk) descriptors. The crash window between the distributed
-    * DV write and the spill append is covered by a chunk-local rel
-    * queue (spilled rels are swept later by the caller's
-    * `sweep(dvOnly = true)`). Returns the chunk's DV re-add count.
-    */
-  private[lake] def stageDvChunkToSpill(snapC: Snapshot,
-      chunk: Seq[String], pairs: DataFrame,
-      dvSpill: StreamedRewrite.ActionSpill): Long = {
-    val q = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     try {
-      val (removes, dvAdds, _) = stageDeletionVectors(snapC, chunk,
-        pairs, q)
+      val addByPath = snap.files.map(f => f.path -> f).toMap
+      val now = System.currentTimeMillis()
+      val (gone, kept) = results.partition { case (uri, _, card) =>
+        val f = addByPath(relativize(uri))
+        f.numRecords >= 0 && card >= f.numRecords
+      }
+      val removes = gone.map { case (uri, rel, _) =>
+        // full-file deletion: drop the entry entirely; the just-written
+        // DV is unreferenced scratch
+        deleteDv(rel)
+        RemoveFile(relativize(uri), now)
+      }
+      val dvAdds = kept.map { case (uri, rel, card) =>
+        addByPath(relativize(uri)).copy(
+          dvPath = Some(rel), dvCardinality = card)
+      }
       dvSpill.append(removes ++ dvAdds)
       dvAdds.size.toLong
     } catch { case e: Throwable =>
-      q.forEach { rel =>
-        try { DataStore.current.deleteIfExists(
-          Paths.get(tablePath, rel)); () }
-        catch { case _: java.io.IOException => () }
-      }
+      results.foreach { case (_, rel, _) => deleteDv(rel) }
       throw e
+    }
+  }
+
+  /** `raw` evaluated exactly once for all its consumers (the staged
+    * data, the CDC pre/postimages, the DV pairs):
+    *  - deterministic expressions: a DISK_ONLY cache — a best-effort
+    *    recompute after block loss reproduces identical values, and
+    *    the rows at 2x width never pressure executor memory;
+    *  - non-deterministic ones (rand(), uuid(), current_timestamp):
+    *    staged to parquet scratch, because cache blocks are
+    *    best-effort and a recompute would silently diverge between
+    *    the data files and the CDC files.
+    */
+  private def evaluatedOnce[A](raw: DataFrame)(body: DataFrame => A): A = {
+    val deterministic =
+      raw.queryExecution.analyzed.expressions.forall(_.deterministic)
+    var scratch: Option[java.nio.file.Path] = None
+    val df =
+      if (deterministic)
+        raw.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      else {
+        val dir = Paths.get(tablePath,
+          s".staging-upd-${java.util.UUID.randomUUID()}")
+        raw.write.mode("overwrite").parquet(dir.toString)
+        scratch = Some(dir)
+        spark.read.parquet(dir.toString)
+      }
+    try body(df)
+    finally {
+      if (deterministic) df.unpersist(false)
+      scratch.foreach(LakeWriter.deleteRecursively)
     }
   }
 
@@ -1163,18 +939,17 @@ final class LakeTable private (
     */
   private def updateWithDv(plan: DmlPlan, cond: Column,
       condition: String, set: Map[String, String]): Unit = {
-    import org.apache.spark.storage.StorageLevel
     if (plan.isEmpty) return
     val fields = plan.schema.fields.toSeq
     def newName(n: String) = s"_graft_upd_$n"
     val FILE = "__graft_dv_file"
     val IDX = "__graft_dv_idx"
     // Matching rows only, in ONE full scan (the touched set falls out
-    // of the materialized projection below — no separate
-    // touchedPaths() pass; see deleteWithDv): old values for CDC,
-    // SET-applied new values, (file, idx) identity for the DV.
-    // Existing DVs are applied by the scan. Row-tracked tables also
-    // carry RowTracking.COL so the updated copies keep their ids.
+    // of the materialized projection below — no separate discovery
+    // pass; see deleteWithDv): old values for CDC, SET-applied new
+    // values, (file, idx) identity for the DV. Existing DVs are
+    // applied by the scan. Row-tracked tables also carry
+    // RowTracking.COL so the updated copies keep their ids.
     val rt = RowTracking.enabled(plan.metadata.properties)
     val rtCols =
       if (rt) Seq(col(quoted(RowTracking.COL))) else Nil
@@ -1187,89 +962,42 @@ final class LakeTable private (
         } ++ rtCols ++ Seq(
           col("_metadata.file_path").as(FILE),
           col("_metadata.row_index").as(IDX)): _*)
-    val setsDeterministic =
-      raw.queryExecution.analyzed.expressions.forall(_.deterministic)
-    var scratch: Option[java.nio.file.Path] = None
-    val projected =
-      if (setsDeterministic) raw.persist(StorageLevel.DISK_ONLY)
-      else {
-        val dir = Paths.get(tablePath,
-          s".staging-upd-${java.util.UUID.randomUUID()}")
-        raw.write.mode("overwrite").parquet(dir.toString)
-        scratch = Some(dir)
-        spark.read.parquet(dir.toString)
-      }
-    val dvRelsWritten =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    try {
-      val touched: Seq[String] =
-        StreamedRewrite.split(this, plan, projected.select(col(FILE))) match {
-          case Right(chunks) =>
-            // bulk shape: per-chunk DV + data staging, O(chunk) driver
-            // state (the outer finally unpersists the projection)
-            chunkedDvUpdate(plan, condition, projected, FILE, IDX, rt,
-              newName, chunks)
-            return
-          case Left(t) => t
+    evaluatedOnce(raw) { projected =>
+      val chunks =
+        StreamedRewrite.split(this, plan, projected.select(col(FILE)))
+      if (chunks.count > 0)
+        StreamedRewrite.rewrite(this, plan, chunks, "UPDATE",
+          Map("predicate" -> condition), dvMode = true) {
+          (i, paths, snapC, _, staged) =>
+            val projC = projected.filter(chunks.memberOf(col(FILE), i))
+            val updated = projC.select(
+              fields.map(f => col(quoted(newName(f.name))).as(f.name)) ++
+                rtCols: _*)
+            if (snapC.metadata.constraints.nonEmpty)
+              LakeWriter.enforceConstraints(updated.drop(RowTracking.COL),
+                snapC.metadata.constraints, tablePath)
+            staged.startCdc("graft-dv-update-cdc-stage") {
+              val pre = projC
+                .select(fields.map(f => col(quoted(f.name))): _*)
+                .withColumn("_change_type", lit("delete"))
+              // CDC carries table columns only — the row id is not part
+              // of the change-feed contract
+              val post = updated.drop(RowTracking.COL)
+                .withColumn("_change_type", lit("insert"))
+              pre.unionByName(post)
+            }
+            staged.data.append(LakeWriter.stageAndAdopt(updated, tablePath,
+              snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
+              snapC.metadata.properties, computeLight = true))
+            staged.stageDv(snapC, paths, projC.select(col(FILE), col(IDX)))
+            staged.joinCdc()
         }
-      if (touched.isEmpty) return
-      // rewrite phase anchors on the TOUCHED-subset snapshot (under a
-      // columnar plan this is the first — and only — point AddFiles
-      // materialize on the driver)
-      val snap = plan.subset(touched)
-      val updated = projected.select(
-        fields.map(f => col(quoted(newName(f.name))).as(f.name)) ++
-          rtCols: _*)
-      if (snap.metadata.constraints.nonEmpty)
-        LakeWriter.enforceConstraints(updated.drop(RowTracking.COL),
-          snap.metadata.constraints, tablePath)
-      val pre = projected
-        .select(fields.map(f => col(quoted(f.name))): _*)
-        .withColumn("_change_type", lit("delete"))
-      // CDC carries table columns only — the row id is not part of
-      // the change-feed contract
-      val post = updated.drop(RowTracking.COL)
-        .withColumn("_change_type", lit("insert"))
-      val cdcDir = LakeWriter.newCdcDir(tablePath)
-      val cdcTask =
-        if (!LakeTable.cdfEnabled(snap)) None
-        else Some(LakeWriter.inParallel("graft-dv-update-cdc-stage") {
-          LakeWriter.stageCdc(pre.unionByName(post), tablePath, cdcDir)
-        })
-      var adds: Seq[AddFile] = Nil
-      try {
-        adds = LakeWriter.stageAndAdopt(updated, tablePath,
-          snap.partitionColumns, ColumnMapping.overrides(snap.metadata),
-          snap.metadata.properties, computeLight = true)
-        val (removes, dvAdds, conflictPaths) = stageDeletionVectors(
-          snap, touched, projected.select(col(FILE), col(IDX)),
-          dvRelsWritten)
-        val cdc = cdcTask.map(LakeWriter.awaitTask(_)).getOrElse(Nil)
-        val now = System.currentTimeMillis()
-        LakeWriter.commitWithRetry(log, snap.version, conflictPaths) { _ =>
-          // adds and cdc were staged under snap's mapping epoch
-          assertMetadataUnchanged(snap, "UPDATE")
-          Seq(CommitInfo(now, "UPDATE",
-            Map("predicate" -> condition,
-              "deletionVectors" -> dvAdds.size.toString))) ++
-            removes ++ dvAdds ++ adds ++ cdc
-        }
-        ()
-      } catch { case e: Throwable =>
-        dvRelsWritten.forEach { rel =>
-          try { DataStore.current.deleteIfExists(
-            Paths.get(tablePath, rel)); () }
-          catch { case _: java.io.IOException => () }
-        }
-        LakeWriter.sweepStaged(tablePath, adds, cdcTask, Some(cdcDir))
-        throw e
-      }
-    } finally {
-      if (setsDeterministic) { projected.unpersist(false); () }
-      scratch.foreach(LakeWriter.deleteRecursively)
     }
   }
 
+  /** Predicate UPDATE: set columns from expression strings where the
+    * condition holds; only touched files are rewritten.
+    */
   def update(condition: String, set: Map[String, String]): Unit = {
     val plan = dmlPlan()
     LakeTable.assertNotAppendOnly(plan.metadata, "UPDATE", tablePath)
@@ -1282,199 +1010,60 @@ final class LakeTable private (
     if (LakeTable.dvEnabled(plan.metadata))
       return updateWithDv(plan, cond, condition, set)
     if (plan.isEmpty) return
-    val touched = StreamedRewrite.split(this, plan,
-      plan.withMetaDF
-        .filter(coalesce(cond, lit(false)))
-        .select(col("_metadata.file_path"))) match {
-      case Right(chunks) =>
-        return streamedRewriteUpdate(plan, cond, condition, set, chunks)
-      case Left(t) => t
-    }
-    if (touched.isEmpty) return
-    val snap = plan.subset(touched)
     val matchedFlag = coalesce(cond, lit(false))
-    val fields = snap.schema.fields.toSeq
+    val chunks = StreamedRewrite.split(this, plan,
+      plan.withMetaDF.filter(matchedFlag).select(col("_metadata.file_path")))
+    if (chunks.count == 0) return
+    val fields = plan.schema.fields.toSeq
     def newName(n: String) = s"_graft_upd_$n"
-    // ONE evaluated projection carries the original values, the new
-    // values, and the matched flag, so the SET expressions are
-    // evaluated exactly once per row, the CDC postimage is
-    // byte-identical to the rewritten data, and the touched files are
-    // scanned once instead of twice. Materialization strategy:
-    //  - deterministic SETs: DISK_ONLY cache — a best-effort recompute
-    //    after block loss reproduces identical values, and touched
-    //    rows at 2x width never pressure executor memory;
-    //  - non-deterministic SETs (rand(), uuid(), current_timestamp):
-    //    staged to parquet scratch, because cache blocks are
-    //    best-effort and a recompute would silently diverge between
-    //    the data files and the CDC files.
     // row-tracked tables thread RowTracking.COL through the
     // projection so an UPDATED row keeps its id (same logical row,
     // new version — Delta's row-tracking semantics for updates)
-    val rt = RowTracking.enabled(snap.metadata.properties)
+    val rt = RowTracking.enabled(plan.metadata.properties)
     val rtCols =
       if (rt) Seq(col(quoted(RowTracking.COL))) else Nil
-    val raw = readForRewrite(snap, touched).select(
-      fields.map(f => col(quoted(f.name))) ++
-      fields.map { f =>
-        (set.get(f.name) match {
-          case Some(e) => when(matchedFlag, expr(e))
-            .otherwise(col(quoted(f.name)))
-          case None => col(quoted(f.name))
-        }).cast(f.dataType).as(newName(f.name))
-      } ++ rtCols :+ matchedFlag.as("_graft_upd_matched"): _*)
-    val setsDeterministic =
-      raw.queryExecution.analyzed.expressions.forall(_.deterministic)
-    var scratch: Option[java.nio.file.Path] = None
-    val projected =
-      if (setsDeterministic)
-        raw.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      else {
-        val dir = Paths.get(tablePath,
-          s".staging-upd-${java.util.UUID.randomUUID()}")
-        raw.write.mode("overwrite").parquet(dir.toString)
-        scratch = Some(dir)
-        spark.read.parquet(dir.toString)
-      }
-    try {
-      val updated = projected.select(
-        fields.map(f => col(quoted(newName(f.name))).as(f.name)) ++
-          rtCols: _*)
-      if (snap.metadata.constraints.nonEmpty)
-        LakeWriter.enforceConstraints(updated.drop(RowTracking.COL),
-          snap.metadata.constraints, tablePath)
-      // persisted CDC: preimage (delete) + postimage (insert) of ONLY
-      // the matched rows, read back from the same cached projection.
-      // Staged on its own thread so it OVERLAPS the data write — both
-      // consume the shared materialized projection, so wall time is
-      // max(data, cdc) instead of the sum; nothing commits until both
-      // staging writes are joined.
-      val matchedRows = projected.filter(col("_graft_upd_matched"))
-      val pre = matchedRows
-        .select(fields.map(f => col(quoted(f.name))): _*)
-        .withColumn("_change_type", lit("delete"))
-      val post = matchedRows
-        .select(fields.map(f => col(quoted(newName(f.name))).as(f.name)): _*)
-        .withColumn("_change_type", lit("insert"))
-      val cdcDir = LakeWriter.newCdcDir(tablePath)
-      val cdcTask =
-        if (!LakeTable.cdfEnabled(snap)) None
-        else Some(LakeWriter.inParallel("graft-update-cdc-stage") {
-          LakeWriter.stageCdc(pre.unionByName(post), tablePath, cdcDir)
-        })
-      var adds: Seq[AddFile] = Nil
-      try {
-        adds = LakeWriter.stageAndAdopt(updated, tablePath,
-          snap.partitionColumns, ColumnMapping.overrides(snap.metadata),
-          snap.metadata.properties, computeLight = true)
-        commitRewrite(snap, touched, adds, "UPDATE",
-          Map("predicate" -> condition),
-          cdcTask.map(LakeWriter.awaitTask(_)).getOrElse(Nil))
-        ()
-      } catch { case e: Throwable =>
-        // staged output is unreferenced until the commit: sweep it
-        LakeWriter.sweepStaged(tablePath, adds, cdcTask, Some(cdcDir))
-        throw e
-      }
-    } finally {
-      if (setsDeterministic) projected.unpersist()
-      scratch.foreach(LakeWriter.deleteRecursively)
-    }
-  }
-
-  /** CHUNKED copy-on-write UPDATE ([[StreamedRewrite]]) — the UPDATE
-    * twin of [[streamedRewriteDelete]]: per chunk, the one-evaluated
-    * projection (old values, SET-applied new values, matched flag)
-    * materializes with the same determinism discipline as the classic
-    * path (DISK_ONLY cache, or parquet scratch for non-deterministic
-    * SETs), feeds the data stage + CDC stage, and the staged actions
-    * spill; the commit streams tombstones + spilled actions.
-    */
-  private def streamedRewriteUpdate(plan: DmlPlan, cond: Column,
-      condition: String, set: Map[String, String],
-      chunks: StreamedRewrite.TouchedChunks): Unit = {
-    val now = System.currentTimeMillis()
-    val fields = plan.schema.fields.toSeq
-    val matchedFlag = coalesce(cond, lit(false))
-    def newName(n: String) = s"_graft_upd_$n"
-    val rt = RowTracking.enabled(plan.metadata.properties)
-    val rtCols = if (rt) Seq(col(quoted(RowTracking.COL))) else Nil
-    val spill = new StreamedRewrite.ActionSpill
-    try {
-      try {
-        chunks.foreachChunk { (_, chunk) =>
-          val snapC = plan.subset(chunk)
-          val raw = readForRewrite(snapC, chunk).select(
-            fields.map(f => col(quoted(f.name))) ++
-            fields.map { f =>
-              (set.get(f.name) match {
-                case Some(e) => when(matchedFlag, expr(e))
-                  .otherwise(col(quoted(f.name)))
-                case None => col(quoted(f.name))
-              }).cast(f.dataType).as(newName(f.name))
-            } ++ rtCols :+ matchedFlag.as("_graft_upd_matched"): _*)
-          val setsDeterministic = raw.queryExecution.analyzed
-            .expressions.forall(_.deterministic)
-          var scratch: Option[java.nio.file.Path] = None
-          val projected =
-            if (setsDeterministic)
-              raw.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-            else {
-              val dir = Paths.get(tablePath,
-                s".staging-upd-${java.util.UUID.randomUUID()}")
-              raw.write.mode("overwrite").parquet(dir.toString)
-              scratch = Some(dir)
-              spark.read.parquet(dir.toString)
-            }
-          try {
-            val updated = projected.select(
-              fields.map(f => col(quoted(newName(f.name))).as(f.name)) ++
-                rtCols: _*)
-            if (snapC.metadata.constraints.nonEmpty)
-              LakeWriter.enforceConstraints(updated.drop(RowTracking.COL),
-                snapC.metadata.constraints, tablePath)
-            val matchedRows = projected.filter(col("_graft_upd_matched"))
-            val pre = matchedRows
-              .select(fields.map(f => col(quoted(f.name))): _*)
-              .withColumn("_change_type", lit("delete"))
-            val post = matchedRows
-              .select(fields.map(f =>
-                col(quoted(newName(f.name))).as(f.name)): _*)
-              .withColumn("_change_type", lit("insert"))
-            val cdcDir = LakeWriter.newCdcDir(tablePath)
-            val cdcTask =
-              if (!LakeTable.cdfEnabled(snapC)) None
-              else Some(LakeWriter.inParallel("graft-update-cdc-stage") {
-                LakeWriter.stageCdc(pre.unionByName(post), tablePath,
-                  cdcDir)
-              })
-            spill.append(LakeWriter.stageAndAdopt(updated, tablePath,
-              snapC.partitionColumns,
-              ColumnMapping.overrides(snapC.metadata),
-              snapC.metadata.properties, computeLight = true))
-            cdcTask.foreach(t => spill.append(LakeWriter.awaitTask(t)))
-          } finally {
-            if (setsDeterministic) { projected.unpersist(false); () }
-            scratch.foreach(LakeWriter.deleteRecursively)
-          }
+    StreamedRewrite.rewrite(this, plan, chunks, "UPDATE",
+      Map("predicate" -> condition)) { (_, paths, snapC, _, staged) =>
+      // ONE evaluated projection carries the original values, the new
+      // values, and the matched flag, so the SET expressions are
+      // evaluated exactly once per row, the CDC postimage is
+      // byte-identical to the rewritten data, and the touched files
+      // are scanned once instead of twice
+      val raw = readForRewrite(snapC, paths).select(
+        fields.map(f => col(quoted(f.name))) ++
+        fields.map { f =>
+          (set.get(f.name) match {
+            case Some(e) => when(matchedFlag, expr(e))
+              .otherwise(col(quoted(f.name)))
+            case None => col(quoted(f.name))
+          }).cast(f.dataType).as(newName(f.name))
+        } ++ rtCols :+ matchedFlag.as("_graft_upd_matched"): _*)
+      evaluatedOnce(raw) { projected =>
+        val updated = projected.select(
+          fields.map(f => col(quoted(newName(f.name))).as(f.name)) ++
+            rtCols: _*)
+        if (snapC.metadata.constraints.nonEmpty)
+          LakeWriter.enforceConstraints(updated.drop(RowTracking.COL),
+            snapC.metadata.constraints, tablePath)
+        // persisted CDC: preimage (delete) + postimage (insert) of ONLY
+        // the matched rows, read back from the same materialized
+        // projection the data write consumes, on its own thread
+        staged.startCdc("graft-update-cdc-stage") {
+          val matchedRows = projected.filter(col("_graft_upd_matched"))
+          val pre = matchedRows
+            .select(fields.map(f => col(quoted(f.name))): _*)
+            .withColumn("_change_type", lit("delete"))
+          val post = matchedRows
+            .select(fields.map(f =>
+              col(quoted(newName(f.name))).as(f.name)): _*)
+            .withColumn("_change_type", lit("insert"))
+          pre.unionByName(post)
         }
-        StreamedRewrite.onBeforeStreamedCommit()
-        LakeWriter.commitStreamedExactConflicts(log, plan.version,
-          () => chunks.pathIterator()) { _ =>
-          assertMetadataUnchangedAt(plan.version, plan.metadata, "UPDATE")
-          Seq(CommitInfo(now, "UPDATE", Map("predicate" -> condition,
-            "streamedRewrite" -> "true")))
-        } { () =>
-          chunks.pathIterator().map(p => RemoveFile(p, now): Action) ++
-            spill.iterator()
-        }
-        ()
-      } catch { case e: Throwable =>
-        spill.sweep(tablePath)
-        throw e
+        staged.data.append(LakeWriter.stageAndAdopt(updated, tablePath,
+          snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
+          snapC.metadata.properties, computeLight = true))
+        staged.joinCdc()
       }
-    } finally {
-      spill.delete()
-      chunks.unpersist()
     }
   }
 
@@ -2806,18 +2395,6 @@ final class LakeTable private (
 
   private[lake] def quoted(name: String): String = s"`$name`"
 
-  /** Relative paths of live files containing at least one row matching
-    * `cond` (the Delta touched-file optimization, SURVEY §7.3).
-    */
-  private[lake] def touchedFiles(snap: Snapshot, cond: Column): Seq[String] = {
-    if (snap.files.isEmpty) return Nil
-    graft.sources.LakeDataSource.snapshotDFWithMeta(spark, snap)
-      .filter(coalesce(cond, lit(false)))
-      .select(col("_metadata.file_path"))
-      .distinct().collect()
-      .map(r => relativize(r.getString(0))).toSeq
-  }
-
   /** What reorganizing rewrites (OPTIMIZE/Z-order/PURGE) read: on
     * row-tracked tables the rows carry [[RowTracking.COL]] so the
     * rewrite MATERIALIZES every row's id into the new files — the
@@ -2959,8 +2536,7 @@ final class LakeTable private (
     assertMetadataUnchangedAt(snap.version, snap.metadata, operation)
 
   /** [[assertMetadataUnchanged]] for callers holding a (version,
-    * metadata) pair instead of a snapshot (the chunked rewrites'
-    * plans).
+    * metadata) pair instead of a snapshot (the DML plans).
     */
   private[lake] def assertMetadataUnchangedAt(
       readVersion: Long, meta: Metadata, operation: String): Unit =
@@ -2976,39 +2552,20 @@ final class LakeTable private (
       removedRelPaths: Seq[String],
       adds: Seq[AddFile],
       operation: String,
-      params: Map[String, String],
-      cdc: Seq[CdcFile] = Nil,
-      txn: Option[(String, Long)] = None): Long = {
+      params: Map[String, String]): Long = {
     val now = System.currentTimeMillis()
     try {
       LakeWriter.commitWithRetry(log, snap.version, removedRelPaths) { _ =>
         assertMetadataUnchanged(snap, operation)
-        // idempotent-writer re-check on every attempt (mirrors
-        // LakeWriter.write): a concurrent twin of the same app landing
-        // this txn mid-stage means its commit IS this one's effect.
-        // Metadata-light read — never replays the file list.
-        txn.foreach { case (a, v) =>
-          if (log.latestVersion > snap.version &&
-              Snapshot.replayMetaTxns(log, log.latestVersion)
-                ._4.get(a).exists(_ >= v))
-            throw new TxnAlreadyCommittedException(a, v)
-        }
         Seq(CommitInfo(now, operation, params)) ++
-          removedRelPaths.map(RemoveFile(_, now)) ++ adds ++ cdc ++
-          txn.map { case (a, v) => Txn(a, v) }
+          removedRelPaths.map(RemoveFile(_, now)) ++ adds
       }
     } catch {
       case e: ConflictingCommitException =>
-        // The commit never happened: the staged rewrite/CDC files are
+        // The commit never happened: the staged rewrite files are
         // unreferenced debris — sweep them before surfacing the
         // conflict (mirrors LakeWriter.write's conflict sweep).
-        LakeWriter.sweepStaged(tablePath, adds, None, None)
-        cdc.foreach { c =>
-          try {
-            DataStore.current.deleteIfExists(
-              java.nio.file.Paths.get(tablePath, c.path)); ()
-          } catch { case _: java.io.IOException => () }
-        }
+        LakeWriter.sweepStaged(tablePath, adds)
         throw e
     }
   }
@@ -3024,16 +2581,18 @@ object LakeTable {
     */
   private[graft] var STREAMED_PARTITION_DELETE_MIN_FILES: Long = 200000L
 
-  /** Touched-file count above which a copy-on-write MERGE/UPDATE/
-    * DELETE rewrite goes CHUNKED ([[StreamedRewrite]]): the driver
-    * holds one chunk's paths + AddFiles at a time and the commit
-    * streams from a spill, instead of the classic whole-touched-set
-    * residency. Var for suite/bench control; the default keeps every
-    * realistic interactive rewrite on the classic single-pass path.
+  /** Touched-file count at which a MERGE/UPDATE/DELETE's touched
+    * source turns distributed ([[StreamedRewrite.split]]): the driver
+    * then holds one chunk's paths + AddFiles at a time instead of the
+    * whole touched set. Staging and commit are the same either way.
+    * Var for suite/bench control; the default keeps every realistic
+    * interactive DML on the resident single-chunk source.
     */
   private[graft] var STREAMED_REWRITE_MIN_FILES: Long = 200000L
 
-  /** Path-chunk size of a chunked rewrite (driver residency bound). */
+  /** Path-chunk size of a distributed touched source (driver
+    * residency bound).
+    */
   private[graft] var REWRITE_CHUNK_FILES: Long = 100000L
 
   /** Bounded replans for a streamed partition DELETE whose

@@ -1244,22 +1244,21 @@ object LakeWriter {
       throw Option(e.getCause).getOrElse(e)
     }
 
-  /** Write a commit's row-level change set (table schema +
-    * `_change_type`) under `_change_data/` and return the CdcFile
-    * actions for the commit. One extra scan-shaped write per DML —
-    * the Delta CDF trade: pay O(changes) at write time so change
-    * reads never have to diff rewritten files.
-    */
-  /** Fresh scratch dir for one commit's change-data files. Exposed so
-    * a caller that stages CDC on a side thread (MERGE) knows the dir
-    * BEFORE the write starts and can sweep the whole thing — committer
-    * crumbs (`_SUCCESS`, `.crc`) included — if anything fails after
-    * staging.
+  /** Fresh scratch dir for one commit's change-data files. Allocated
+    * before a side-thread CDC stage starts, so a failure sweep can
+    * remove the whole dir — committer crumbs (`_SUCCESS`, `.crc`)
+    * included — even if the stage died mid-write.
     */
   private[lake] def newCdcDir(tablePath: String): Path =
     Paths.get(tablePath).toAbsolutePath.normalize
       .resolve("_change_data").resolve(s"cdc-${UUID.randomUUID()}")
 
+  /** Write a commit's row-level change set (table schema +
+    * `_change_type`) into `dir` under `_change_data/` and return the
+    * CdcFile actions for the commit. One extra scan-shaped write per
+    * DML — the Delta CDF trade: pay O(changes) at write time so change
+    * reads never have to diff rewritten files.
+    */
   private[lake] def stageCdc(df: DataFrame, tablePath: String,
       dir: Path): Seq[CdcFile] = {
     val root = Paths.get(tablePath).toAbsolutePath.normalize
@@ -1274,22 +1273,16 @@ object LakeWriter {
     }
   }
 
-  private[lake] def stageCdc(df: DataFrame, tablePath: String): Seq[CdcFile] =
-    stageCdc(df, tablePath, newCdcDir(tablePath))
-
-  /** Best-effort sweep of everything a FAILED DML staged: the adopted
-    * data files by path, and — after settling the side-thread CDC task
-    * so its dir is quiescent — the whole cdc scratch dir, committer
-    * crumbs (`_SUCCESS`, `.crc`) included. Staged files are
+  /** Best-effort sweep of what a FAILED write staged: the adopted data
+    * files by path, and the whole (quiescent) cdc scratch dir,
+    * committer crumbs (`_SUCCESS`, `.crc`) included. Staged files are
     * unreferenced by the log until the commit, so the sweep leaves the
-    * table exactly as before the DML instead of leaving untracked
-    * debris for vacuum to age out. Never throws: it runs on a failure
-    * path that must re-raise the ORIGINAL error.
+    * table exactly as before instead of leaving untracked debris for
+    * vacuum to age out. Never throws: it runs on a failure path that
+    * must re-raise the ORIGINAL error.
     */
   private[lake] def sweepStaged(tablePath: String, adds: Seq[AddFile],
-      cdcTask: Option[java.util.concurrent.FutureTask[Seq[CdcFile]]],
-      cdcDir: Option[Path]): Unit = {
-    cdcTask.foreach(t => try { awaitTask(t); () } catch { case _: Throwable => () })
+      cdcDir: Option[Path] = None): Unit = {
     (adds.map(_.path) ++ adds.flatMap(_.bloomPath)).foreach { p =>
       try { DataStore.current.deleteIfExists(Paths.get(tablePath, p)); () }
       catch { case _: java.io.IOException => () }

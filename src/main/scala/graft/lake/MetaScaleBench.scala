@@ -35,6 +35,16 @@ object MetaScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
+    val nFiles = args.headOption.map(_.toInt).getOrElse(1000000)
+    // the streamed partition-DELETE leg matches half the files and
+    // only streams at or above the streamed-delete threshold
+    val minFiles = 2 * LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES
+    require(nFiles >= minFiles,
+      s"MetaScaleBench needs at least $minFiles files (got $nFiles): " +
+      "its streamed partition DELETE matches half of them and takes " +
+      "the streamed path only at or above " +
+      s"LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES = " +
+      s"${LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES}")
     // local[8]: the DRIVER-side legs (commit, replay, prune) are plain
     // JVM and ignore it; the columnar-index legs run their part scans
     // as Spark jobs, and decode parallelism across checkpoint parts is
@@ -42,7 +52,6 @@ object MetaScaleBench {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[8]").appName("MetaScaleBench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val nFiles = args.headOption.map(_.toInt).getOrElse(1000000)
     val perCommit = 100000
     val dir = java.nio.file.Files
       .createTempDirectory("graft-metascale").toString

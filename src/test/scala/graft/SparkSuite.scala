@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import java.nio.file.Files
+import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 
 /** Shared local SparkSession + temp-dir helpers for all suites. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
@@ -16,9 +17,15 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
         .config("spark.sql.shuffle.partitions", "4"))
       .getOrCreate())
 
+  /** Every directory [[tmpDir]] created, removed with its contents in
+    * [[afterAll]].
+    */
+  private val createdDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
   def tmpDir(prefix: String): String = {
     val d = Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
+    createdDirs.add(d)
     d.toString
   }
 
@@ -27,7 +34,34 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     tmpDir("graft-test") + "/" + name
 
   override def afterAll(): Unit = {
-    // One session is shared across suites in a forked test JVM; don't stop.
-    super.afterAll()
+    // One session is shared across suites in a forked test JVM; don't
+    // stop it. Only this suite's directories go.
+    try createdDirs.forEach(d => deleteTree(d))
+    finally super.afterAll()
   }
+
+  /** Best-effort recursive delete: a file that cannot be removed is
+    * left in place rather than failing the suite.
+    */
+  private def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+        override def visitFile(f: Path,
+            a: BasicFileAttributes): FileVisitResult = {
+          try { Files.deleteIfExists(f); () }
+          catch { case _: java.io.IOException => () }
+          FileVisitResult.CONTINUE
+        }
+        override def visitFileFailed(f: Path,
+            e: java.io.IOException): FileVisitResult =
+          FileVisitResult.CONTINUE
+        override def postVisitDirectory(d: Path,
+            e: java.io.IOException): FileVisitResult = {
+          try { Files.deleteIfExists(d); () }
+          catch { case _: java.io.IOException => () }
+          FileVisitResult.CONTINUE
+        }
+      })
+      ()
+    }
 }

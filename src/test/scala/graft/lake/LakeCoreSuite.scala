@@ -148,17 +148,30 @@ class LakeCoreSuite extends SparkSuite {
         properties = Map("k" -> "v1")),
       Txn("app-a", 3L), // below the watermark: max-fold keeps 5
       DomainMetadata("d1", Map.empty, removed = true)))
-    // read all three through the commit-seeded cache first, THEN
+    // the streamed commit seeds too: its meta actions arrive from the
+    // head AND from the bulk stream (the row-id high-water domain the
+    // stamping appends after the carved AddFile)
+    log.commitStreamed(3L, Seq(
+      CommitInfo(4L, "UPDATE", Map.empty),
+      Metadata("id BIGINT, p STRING", Seq("p"), 1L,
+        properties = Map("k" -> "v1", RowTracking.PROP -> "true")),
+      Txn("app-b", 7L)),
+      () => Iterator(RemoveFile("p=1/a.parquet", 4L),
+        AddFile("p=1/b.parquet", Map("p" -> "1"), 10L, 3L)))
+    // read every version through the commit-seeded cache first, THEN
     // clear once and re-read cold — clearing inside the loop would
     // make every read a cold walk and test nothing
-    val seeded = (0L to 2L).map(v => Snapshot.replayMetaTxns(log, v))
+    val seeded = (0L to 3L).map(v => Snapshot.replayMetaTxns(log, v))
     Snapshot.clearCacheForTest()
-    val cold = (0L to 2L).map(v => Snapshot.replayMetaTxns(log, v))
+    val cold = (0L to 3L).map(v => Snapshot.replayMetaTxns(log, v))
     assert(seeded === cold, "seed/cold divergence")
     val (m, _, d, t) = Snapshot.replayMetaTxns(log, 2L)
     assert(m.properties("k") === "v1")
     assert(d.get("d1") === None)
     assert(t("app-a") === 5L)
+    val (_, _, d3, t3) = Snapshot.replayMetaTxns(log, 3L)
+    assert(d3(RowTracking.DOMAIN)(RowTracking.HWM_KEY) === "3")
+    assert(t3 === Map("app-a" -> 5L, "app-b" -> 7L))
   }
 
   test("interned AddFile maps behave as plain immutable Maps") {

@@ -189,6 +189,38 @@ class LakeDmlSuite extends SparkSuite {
     assert(LakeTable.forPath(spark, path).toDF.count() === seed.count())
   }
 
+  test("failed chunked UPDATE sweeps its staged data and CDC files") {
+    // a manifest-checkpointed table (13 one-row commits, checkpoint at
+    // v10 above the 5-action single-file limit) plans columnar; with
+    // the chunking threshold at one file the UPDATE takes the
+    // distributed touched source and stages chunk by chunk — the
+    // failure must sweep the failing chunk's running CDC stage too
+    val path = tablePath("dml-sweep-chunked")
+    val prevPart = LakeLog.CHECKPOINT_PART_MAX_ACTIONS
+    LakeLog.CHECKPOINT_PART_MAX_ACTIONS = 5
+    try (0 until 13).foreach { i =>
+      LakeWriter.write(
+        Seq((i.toLong, s"k$i", "new", i.toDouble))
+          .toDF("id", "k", "status", "v"), path)
+    } finally LakeLog.CHECKPOINT_PART_MAX_ACTIONS = prevPart
+    val pm = LakeTable.STREAMED_REWRITE_MIN_FILES
+    val pc = LakeTable.REWRITE_CHUNK_FILES
+    LakeTable.STREAMED_REWRITE_MIN_FILES = 1L
+    LakeTable.REWRITE_CHUNK_FILES = 2L
+    val n0 = StreamedRewrite.chunkedRewrites.get()
+    try intercept[Exception] {
+      LakeTable.forPath(spark, path)
+        .update("id >= 1", Map("k" -> "raise_error('post-staging boom')"))
+    } finally {
+      LakeTable.STREAMED_REWRITE_MIN_FILES = pm
+      LakeTable.REWRITE_CHUNK_FILES = pc
+    }
+    assert(StreamedRewrite.chunkedRewrites.get() === n0 + 1,
+      "the UPDATE should have taken the distributed touched source")
+    assertNoStagedDebris(path)
+    assert(LakeTable.forPath(spark, path).toDF.count() === 13L)
+  }
+
   test("merge insert map must supply every column after schema evolution") {
     // SURVEY §7.9: the reference redefines its insert map explicitly
     // after ALTER TABLE ADD COLUMN (rapid:610-629); an insert map that
@@ -258,6 +290,11 @@ class LakeDmlSuite extends SparkSuite {
     LakeTable.forPath(spark, path).delete("v >= 30.0")
     assert(LakeTable.forPath(spark, path).toDF
       .select("id").as[Long].collect().sorted === Array(1L, 2L))
+    // a resident (one-chunk) rewrite records exactly the predicate
+    val log = new LakeLog(path)
+    assert(log.readVersion(log.latestVersion)
+      .collectFirst { case c: CommitInfo => c.operationParameters }
+      === Some(Map("predicate" -> "v >= 30.0")))
   }
 
   test("DROP COLUMN is metadata-only with a resurrection tombstone") {

@@ -74,7 +74,7 @@ abstract class StoreContractSuite extends SparkSuite with BeforeAndAfterAll {
     // simulate interleaving: A computes its plan from version 0 ...
     val staleSnap = a.snapshot()
     val cond = org.apache.spark.sql.functions.expr("id % 2 = 0")
-    val touched = a.touchedFiles(staleSnap, cond)
+    val touched = new DmlPlan.Classic(a, staleSnap).touchedPaths(cond)
     assert(touched.nonEmpty)
     // ... B commits a delete touching the same files first ...
     b.delete("id = 2")
