@@ -57,24 +57,14 @@ private[lake] sealed trait DmlPlan {
     * anchor snapshot.
     */
   def subset(relPaths: Seq[String]): Snapshot
-  /** Metadata-only DELETE support: when `filter` references partition
-    * columns only, the EXACT matched file paths; None otherwise.
+  /** Metadata-only DELETE / replaceWhere support: when `filter`
+    * references partition columns only, the EXACT matched file count
+    * and a re-invocable stream of the matched paths; None otherwise.
+    * The stream lets a partition DELETE on a 10⁷-file table commit its
+    * tombstones without the driver ever holding the matched set.
     */
-  def partitionOnlyMatches(filter: String): Option[Seq[String]]
-
-  /** Partition-only DELETE planning with a SCALE split: None when the
-    * filter is not partition-only; Left(paths) when the matched set is
-    * small enough to enumerate on the driver (the per-path conflict
-    * detection of the classic commit applies); Right(stream) when the
-    * estimated matched file count exceeds
-    * [[LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES]] — the tombstones
-    * then STREAM into the commit and the driver never holds more than
-    * a prefetch window of paths (a full-partition DELETE on a 10⁷-file
-    * table must not drag 10⁷ path strings through the driver).
-    */
-  def partitionOnlyDelete(filter: String)
-      : Option[Either[Seq[String], () => Iterator[String]]] =
-    partitionOnlyMatches(filter).map(Left(_))
+  def partitionOnlyPaths(filter: String)
+      : Option[(Long, () => Iterator[String])]
 
   /** Relative paths of live files containing ≥1 row matching `cond` —
     * shared discovery logic over [[withMetaDF]].
@@ -111,9 +101,10 @@ private[lake] object DmlPlan {
           s"subset: ${wanted.size - files.size} paths not in snapshot")
         snap.copy(files = files)
       }
-    def partitionOnlyMatches(filter: String): Option[Seq[String]] =
+    def partitionOnlyPaths(filter: String)
+        : Option[(Long, () => Iterator[String])] =
       FilePruner.partitionOnlyMatches(snap, filter, Some(table.spark))
-        .map(_.map(_.path))
+        .map(files => (files.size.toLong, () => files.iterator.map(_.path)))
     /** The wrapped snapshot, for callers that hold a Classic plan. */
     def snapshot: Snapshot = snap
   }
@@ -156,27 +147,15 @@ private[lake] object DmlPlan {
         schema, filter, counts.keys.toSeq, Some(spark)).map((counts, _))
     }
 
-    def partitionOnlyMatches(filter: String): Option[Seq[String]] =
-      matchedTuples(filter).map { case (_, pvs) =>
-        if (pvs.isEmpty) Nil
-        else idx.addsForPartitions(pvs).map(_.path)
-      }
-
-    override def partitionOnlyDelete(filter: String)
-        : Option[Either[Seq[String], () => Iterator[String]]] =
+    /** The count is the per-tuple fold of live-file counts; the paths
+      * stream from the partition-filtered checkpoint-part scan
+      * ([[graft.sources.ColumnarLakeFileIndex.pathsForPartitionsStream]]).
+      */
+    def partitionOnlyPaths(filter: String)
+        : Option[(Long, () => Iterator[String])] =
       matchedTuples(filter).map { case (counts, pvs) =>
-        if (pvs.isEmpty) Left(Nil)
-        else {
-          // EXACT matched-file count from the per-tuple fold — a
-          // uniform average misroutes skewed layouts to the classic
-          // driver-path enumeration (both shapes are correct; only
-          // driver state differs, so the split must not undercount)
-          val matched = pvs.iterator
-            .map(pv => counts.getOrElse(pv, 0L)).sum
-          if (matched < LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES)
-            Left(idx.addsForPartitions(pvs).map(_.path))
-          else Right(() => idx.pathsForPartitionsStream(pvs))
-        }
+        (pvs.iterator.map(pv => counts.getOrElse(pv, 0L)).sum,
+          () => idx.pathsForPartitionsStream(pvs))
       }
   }
 }

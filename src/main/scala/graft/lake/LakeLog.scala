@@ -43,69 +43,77 @@ final class LakeLog(val tablePath: String) {
       _.map(_.trim).filter(_.nonEmpty).map(Action.fromJson).toVector)
   }
 
-  /** Atomically commit `actions` as `version`. Throws
+  /** Atomically commit `head ++ bulk` as `version`. Throws
     * [[ConcurrentWriteException]] if that version was already written.
-    * Every [[LakeLog.CHECKPOINT_INTERVAL]] commits a checkpoint of the
-    * replayed state is written so snapshot construction stays O(1) in
-    * table age instead of O(versions) — the Delta checkpoint idea,
-    * essential once a table has thousands of commits.
+    *
+    * `head` holds the resident actions — every action of an ordinary
+    * commit, or the small ones (CommitInfo, Metadata, Txn) of a
+    * table-sized one. `bulk` streams the rest (a DML's tombstones and
+    * staged adds, RESTORE's re-adds) straight into the version-file
+    * write: the driver holds one source chunk and one serialized line
+    * at a time, never the whole action list or its JSON. The factory
+    * is re-invoked for the ambiguity readback and must be
+    * deterministic for a given version.
+    *
+    * Every commit passes here, so three things happen here and nowhere
+    * else:
+    *  - the writer protocol gate and row-id assignment
+    *    ([[RowTracking.stamp]]) against the parent's metadata-light
+    *    state ([[Snapshot.replayMeta]] — never the parent's file list,
+    *    which would make every commit O(table)). A version collision
+    *    sends the caller back through here, so a retry re-stamps from
+    *    the WINNING commit's high-water mark and racing appends never
+    *    carve overlapping id blocks. Version 0 has no parent: no gate;
+    *  - the in-commit timestamp clamp (Delta's inCommitTimestamps): a
+    *    CommitInfo in `head` is moved to strictly after the previous
+    *    commit's, so history order == timestamp order under
+    *    same-millisecond bursts or writer clock skew. The previous
+    *    version is read only up to its first CommitInfo line (its
+    *    mtime if it has none);
+    *  - every [[LakeLog.CHECKPOINT_INTERVAL]] commits, a checkpoint of
+    *    the replayed state, so snapshot construction stays O(1) in
+    *    table age.
     */
-  def commit(version: Long, actions: Seq[Action]): Unit = {
+  def commit(version: Long, head: Seq[Action],
+      bulk: () => Iterator[Action] = () => Iterator.empty): Unit = {
     // No direct filesystem calls here: putIfAbsent prepares its own
     // directory, so the whole commit path rides the LogStore seam.
     val target = versionFile(version)
     if (store.exists(target)) throw new ConcurrentWriteException(version)
-    // Row-id assignment ([[RowTracking.stamp]]) happens HERE, at the
-    // single commit choke point, so every path that adds files —
-    // write/CTAS/COPY INTO/streaming, DML rewrites, OPTIMIZE, convert
-    // — is covered without per-call-site wiring. Centralizing inside
-    // commit() also makes optimistic retries safe for free: a version
-    // collision sends the caller back through here, and the re-stamp
-    // reads the WINNING commit's high-water mark from the parent
-    // snapshot (cached), so racing appends never carve overlapping id
-    // blocks. No-op (one map over actions) for untracked tables.
-    val rowStamped =
-      if (version == 0)
-        RowTracking.stamp(None, actions)
+    val (parentMeta, parentDomains) =
+      if (version == 0) (None, Map.empty[String, Map[String, String]])
       else {
-        // metadata-light parent state: stamping needs properties +
-        // the id high-water mark, never the parent's FILE LIST — a
-        // full replay here would make every commit O(table) on the
-        // driver (cache-miss cost measured in seconds at 10⁶ files)
         val (meta, protocol, domains) = Snapshot.replayMeta(this, version - 1)
-        // the meta replay is also where raw commit callers meet the
-        // protocol gate — commitWithRetry paths assert earlier, but a
-        // direct commit() against a table demanding unknown writer
-        // features must refuse here, not stamp a version it cannot
-        // honor the semantics of
         LakeProtocol.assertWritable(protocol, tablePath)
-        RowTracking.stampMeta(Some(meta), domains, actions)
+        (Some(meta), domains)
       }
-    // In-commit timestamp monotonicity (Delta's inCommitTimestamps):
-    // clamp this commit's CommitInfo to strictly after the previous
-    // commit's, so history order == timestamp order even under
-    // same-millisecond commit bursts or cross-writer clock skew.
-    // TIMESTAMP AS OF / startingTimestamp / vacuum windows all key off
-    // these timestamps; without the clamp two commits in one ms are
-    // not separately addressable and a backdated writer could make
-    // time travel non-monotonic. Reads the previous version file only
-    // UP TO its first CommitInfo line — a prior commit carrying many
-    // AddFile actions must not make every subsequent commit pay
-    // O(prev-commit-size) JSON parsing. Absent CommitInfo falls back
-    // to the file's mtime (the same fallback `commitTimestamps` uses).
-    val stamped =
-      if (version == 0 || !rowStamped.exists(_.isInstanceOf[CommitInfo]))
-        rowStamped
+    val headStamped =
+      if (version == 0 || !head.exists(_.isInstanceOf[CommitInfo])) head
       else {
         val prevTs = firstCommitInfoTimestamp(version - 1)
           .orElse(store.stat(versionFile(version - 1)).map(_._2))
           .getOrElse(Long.MinValue)
-        rowStamped.map {
+        head.map {
           case c: CommitInfo if c.timestamp <= prevTs =>
             c.copy(timestamp = prevTs + 1)
           case a => a
         }
       }
+    // the meta-bearing actions of the last write pass, for the
+    // metadata-light cache seed below (O(meta actions), not O(bulk))
+    val metaSeen = scala.collection.mutable.ArrayBuffer.empty[Action]
+    def lines(): Iterator[String] = {
+      metaSeen.clear()
+      RowTracking.stamp(parentMeta, parentDomains, headStamped, bulk())
+        .map { a =>
+          a match {
+            case _: Metadata | _: Protocol | _: DomainMetadata | _: Txn =>
+              metaSeen += a
+            case _ => ()
+          }
+          Action.toJson(a)
+        }
+    }
     // Exclusive publish — put-if-absent is THE commit primitive:
     // whoever wins the version file name owns the version. Object
     // stores add one failure mode POSIX doesn't have: an AMBIGUOUS
@@ -116,11 +124,10 @@ final class LakeLog(val tablePath: String) {
     // byte-identical to what we wrote, OUR earlier put landed and the
     // commit succeeded (commits carry fresh timestamps/uuid paths, so
     // accidental equality with another writer is not a real case).
-    val json = stamped.map(Action.toJson)
     var published = false
     var ioRetries = 0
     while (!published) {
-      try { store.putIfAbsent(target, json); published = true }
+      try { store.putIfAbsent(target, lines()); published = true }
       catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           // The name is taken — by another writer, or by our OWN
@@ -133,7 +140,10 @@ final class LakeLog(val tablePath: String) {
           // data files the landed commit references. Retry the read;
           // if it stays unreadable surface the I/O error as what it
           // is — an ambiguous commit — instead of a fake conflict.
-          if (readbackWithRetry(target) == json) published = true
+          val same = readbackWithRetry(target).iterator
+            .zipAll(lines(), null, null)
+            .forall { case (a, b) => a == b }
+          if (same) published = true
           else throw new ConcurrentWriteException(version)
         case _: java.io.IOException if ioRetries < MAX_PUT_RETRIES =>
           ioRetries += 1 // may or may not have landed; the retry's
@@ -141,82 +151,10 @@ final class LakeLog(val tablePath: String) {
       }
     }
     // seed the metadata-light cache at the NEW version from the
-    // parent's tuple + this commit's own actions: the next commit's
-    // parent fold — and this boundary's checkpoint meta walk — then
-    // reads no version file at all (pure optimization; a cold process
-    // walks files and re-primes the chain)
-    try Snapshot.seedMetaAfterCommit(this, version, stamped)
-    catch { case NonFatal(_) => () }
-    maintainAtBoundary(version)
-  }
-
-  /** [[commit]] for possibly O(table)-BULK commits (RESTORE's re-add
-    * actions, every DELETE/UPDATE/MERGE rewrite):
-    * the bulk actions stream from `bulk()` straight into the
-    * version-file write — the driver holds one source chunk and one
-    * serialized line at a time, never the whole action list or its
-    * JSON. `head` carries the small actions (CommitInfo, Metadata) and
-    * must not contain AddFiles; bulk AddFiles lacking a baseRowId on
-    * row-tracked tables are carved sequentially as they stream
-    * ([[RowTracking.stampStream]] — the same fold the materialized
-    * path applies). The factory is re-invoked for the ambiguity
-    * readback and must be deterministic for a given version.
-    */
-  def commitStreamed(version: Long, head: Seq[Action],
-      bulk: () => Iterator[Action]): Unit = {
-    require(version > 0, "commitStreamed serves non-initial commits only")
-    require(!head.exists(_.isInstanceOf[AddFile]),
-      "commitStreamed: AddFiles belong in the bulk stream")
-    val target = versionFile(version)
-    if (store.exists(target)) throw new ConcurrentWriteException(version)
-    val (parentMeta, protocol, parentDomains) =
-      Snapshot.replayMeta(this, version - 1)
-    LakeProtocol.assertWritable(protocol, tablePath)
-    // same in-commit timestamp clamp as commit()
-    val prevTs = firstCommitInfoTimestamp(version - 1)
-      .orElse(store.stat(versionFile(version - 1)).map(_._2))
-      .getOrElse(Long.MinValue)
-    val headStamped = head.map {
-      case c: CommitInfo if c.timestamp <= prevTs =>
-        c.copy(timestamp = prevTs + 1)
-      case a => a
-    }
-    val commitMeta = head.collectFirst { case m: Metadata => m }
-    // the meta-bearing actions of the last write pass, for the
-    // metadata-light cache seed below (O(meta actions), not O(bulk))
-    val metaSeen = scala.collection.mutable.ArrayBuffer.empty[Action]
-    def lines(): Iterator[String] = {
-      metaSeen.clear()
-      (headStamped.iterator ++ RowTracking.stampStream(
-        Some(parentMeta), parentDomains, commitMeta, bulk()))
-        .map { a =>
-          a match {
-            case _: Metadata | _: Protocol | _: DomainMetadata | _: Txn =>
-              metaSeen += a
-            case _ => ()
-          }
-          Action.toJson(a)
-        }
-    }
-    var published = false
-    var ioRetries = 0
-    while (!published) {
-      try { store.putIfAbsent(target, lines()); published = true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // same content-based ambiguity resolution as commit(); the
-          // readback Seq is transient and only the RARE ambiguous
-          // branch pays it
-          val same = readbackWithRetry(target).iterator
-            .zipAll(lines(), null, null)
-            .forall { case (a, b) => a == b }
-          if (same) published = true
-          else throw new ConcurrentWriteException(version)
-        case _: java.io.IOException if ioRetries < MAX_PUT_RETRIES =>
-          ioRetries += 1
-      }
-    }
-    // same metadata-light cache seed as commit()
+    // parent's tuple + this commit's own meta actions: the next
+    // commit's parent fold — and this boundary's checkpoint meta walk
+    // — then reads no version file at all (pure optimization; a cold
+    // process walks files and re-primes the chain)
     try Snapshot.seedMetaAfterCommit(this, version, metaSeen.toSeq)
     catch { case NonFatal(_) => () }
     maintainAtBoundary(version)

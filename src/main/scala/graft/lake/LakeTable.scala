@@ -693,55 +693,27 @@ final class LakeTable private (
   }
 
   /** Predicate DELETE (D5). Partition-only predicates are metadata-only:
-    * whole files are dropped from the log without reading data.
+    * whole files are dropped from the log without reading data — the
+    * matched paths stream from the plan into the commit's tombstones,
+    * so the driver never holds the matched set, and the commit
+    * conflicts exactly on those paths. Other predicates rewrite (or,
+    * with deletion vectors, mark) the touched files.
     */
-  def delete(condition: String): Unit =
-    deleteAttempt(condition, LakeTable.STREAMED_DELETE_REPLAN_ATTEMPTS)
-
-  private def deleteAttempt(condition: String, replansLeft: Int): Unit = {
+  def delete(condition: String): Unit = {
     val plan = dmlPlan()
     LakeTable.assertNotAppendOnly(plan.metadata, "DELETE", tablePath)
     val cond = expr(condition)
-    plan.partitionOnlyDelete(condition) match {
-      case Some(Left(matchedPaths)) => // metadata-only path
-        commitRewrite(plan.subset(Nil), matchedPaths, Nil, "DELETE",
-          Map("predicate" -> condition))
-      case Some(Right(pathStream)) =>
-        // STREAMED metadata-only path: the tombstones flow from the
-        // columnar index's partition-filtered part scan straight into
-        // the version-file writer — the driver holds a prefetch window
-        // of paths, never the matched set (10⁷-file tables). Conflict
-        // detection is CONSERVATIVE here: per-path checking would need
-        // the matched set resident, so ANY commit that lands after the
-        // planned read version aborts the delete (the head closure
-        // re-evaluates per attempt — airtight against the race).
+    plan.partitionOnlyPaths(condition) match {
+      case Some((matched, paths)) => // metadata-only path
+        if (matched == 0) return
         val now = System.currentTimeMillis()
-        val readV = plan.version
-        LakeTable.streamedPartitionDeletes.incrementAndGet()
-        LakeTable.onStreamedDeletePlanned()
-        try {
-          LakeWriter.commitStreamedWithRetry(log, readV, Nil) { v =>
-            if (v != readV + 1) throw new ConflictingCommitException(
-              s"conflicting commit: version ${v - 1} of $tablePath " +
-              s"landed after this streamed partition DELETE planned " +
-              s"against version $readV; re-run the DELETE")
-            Seq(CommitInfo(now, "DELETE", Map("predicate" -> condition,
-              "streamed" -> "true")))
-          } { () => pathStream().map(p => RemoveFile(p, now): Action) }
-          ()
-        } catch {
-          // bounded REPLAN-and-retry: the conservative rule above
-          // aborts on ANY commit landing after the planned read
-          // version — including non-conflicting appends to other
-          // partitions — so under steady unrelated write traffic a
-          // one-shot streamed delete would lose the race every time
-          // (the classic path only conflicts on overlapping paths and
-          // retries inside commitWithRetry). Replanning re-reads the
-          // matched set at the new latest version, so each retry's
-          // tombstones are exact for its own read version.
-          case e: ConflictingCommitException if replansLeft > 0 =>
-            deleteAttempt(condition, replansLeft - 1)
+        LakeWriter.commitWithRetry(log, plan.version,
+          scala.collection.View.fromIteratorProvider(paths),
+          () => paths().map(p => RemoveFile(p, now): Action)) { _ =>
+          assertMetadataUnchangedAt(plan.version, plan.metadata, "DELETE")
+          Seq(CommitInfo(now, "DELETE", Map("predicate" -> condition)))
         }
+        ()
       case None if LakeTable.dvEnabled(plan.metadata) =>
         deleteWithDv(plan, cond, condition)
       case None =>
@@ -1279,9 +1251,9 @@ final class LakeTable private (
     // The TARGET side's entries ARE the re-add actions — but they need
     // not all be resident at once: with a columnar index at the target
     // version they STREAM to the commit in bounded chunks
-    // (path-filtered distributed fetches feeding
-    // [[LakeLog.commitStreamed]], the version-file twin of the
-    // checkpoint writer's actionIterator), so restoring a 10⁷-file
+    // (path-filtered distributed fetches feeding [[LakeLog.commit]]'s
+    // bulk stream, the version-file twin of the checkpoint writer's
+    // actionIterator), so restoring a 10⁷-file
     // table holds O(chunk) AddFiles plus the path lists, never the
     // interned target file list. Small/classic tables keep the
     // materialized path.
@@ -1314,14 +1286,12 @@ final class LakeTable private (
           (if (targetMeta.schemaDDL != curMeta.schemaDDL ||
             targetMeta.partitionColumns != curMeta.partitionColumns)
             Seq(targetMeta) else Nil)
-        val rv = LakeWriter.commitStreamedWithRetry(
-          log, curVersion, removed)(
-          _ => head) { () =>
-          removed.iterator.map(p => RemoveFile(p, now): Action) ++
+        val rv = LakeWriter.commitWithRetry(log, curVersion, removed,
+          () => removed.iterator.map(p => RemoveFile(p, now): Action) ++
             tIdx.liveAddsStream()
               // entry diff: absent OR mutable facts changed -> re-add
-              .filter(a => !curMut.get(a.path).contains(mutOf(a)))
-        }
+              .filter(a => !curMut.get(a.path).contains(mutOf(a))))(
+          _ => head)
         LakeTable.manifestAfterRestore(log, rv, curVersion, version)
       case None =>
         val target = snapshot(version)
@@ -2573,14 +2543,6 @@ final class LakeTable private (
 
 object LakeTable {
 
-  /** Matched-file estimate above which a partition-only DELETE commits
-    * its tombstones as a STREAM (the driver never enumerates the
-    * matched paths) instead of the classic per-path commit. Var for
-    * suite/bench control; the default keeps every realistic
-    * interactive delete on the precise-conflict classic path.
-    */
-  private[graft] var STREAMED_PARTITION_DELETE_MIN_FILES: Long = 200000L
-
   /** Touched-file count at which a MERGE/UPDATE/DELETE's touched
     * source turns distributed ([[StreamedRewrite.split]]): the driver
     * then holds one chunk's paths + AddFiles at a time instead of the
@@ -2594,12 +2556,6 @@ object LakeTable {
     * residency bound).
     */
   private[graft] var REWRITE_CHUNK_FILES: Long = 100000L
-
-  /** Bounded replans for a streamed partition DELETE whose
-    * conservative any-commit conflict rule lost the race to an
-    * unrelated writer (total attempts = 1 + this).
-    */
-  private[graft] var STREAMED_DELETE_REPLAN_ATTEMPTS: Int = 3
 
   /** Best-effort slice-reuse checkpoint after a RESTORE
     * ([[LakeLog.checkpointAfterRestore]]). Published ONLY when the
@@ -2619,18 +2575,6 @@ object LakeTable {
           e.getMessage)
       }
     }
-
-  /** Test hook: count of partition DELETEs that took the streamed
-    * tombstone path.
-    */
-  private[graft] val streamedPartitionDeletes =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** Test hook: invoked after a streamed partition DELETE has planned
-    * (read version pinned) and before its commit — a deterministic
-    * seam for injecting a racing commit.
-    */
-  private[graft] var onStreamedDeletePlanned: () => Unit = () => ()
 
   val DEFAULT_RETENTION_HOURS: Double = 168.0
   val RETENTION_CHECK_KEY = "spark.graft.lake.retentionDurationCheck.enabled"

@@ -238,8 +238,8 @@ object LakeWriter {
             Map("replaceWhere" -> pred), tablePath)
           val t = LakeTable.forPath(spark, tablePath)
           val plan = t.dmlPlan()
-          plan.partitionOnlyMatches(pred) match {
-            case Some(matchedPaths) => (matchedPaths, Seq.empty[AddFile])
+          plan.partitionOnlyPaths(pred) match {
+            case Some((_, paths)) => (paths().toSeq, Seq.empty[AddFile])
             case None =>
               val cond = org.apache.spark.sql.functions.expr(pred)
               val touched = plan.touchedPaths(cond)
@@ -304,7 +304,7 @@ object LakeWriter {
       // must abort this commit, like any other rewrite)
       val version = commitWithRetry(log,
         readVersion = if (replaceInfo.isDefined) readVersion else -1L,
-        removedRelPaths = replaceInfo.map(_._1).getOrElse(Nil)) { version =>
+        ourPaths = replaceInfo.map(_._1).getOrElse(Nil)) { version =>
         allTxns.foreach { case (appId, txnVersion) =>
           // Re-check on every attempt: a concurrent writer of the same
           // app may have landed this txn while we were staging. ANY
@@ -1071,93 +1071,57 @@ object LakeWriter {
     sb.toString
   }
 
-  /** Commit with optimistic retry: on version conflict, recompute the
-    * action list against the new latest version and try again.
+  /** Commit with optimistic retry — the one loop every commit runs
+    * through. On a version collision `head` is recomputed for the next
+    * version and the commit ([[LakeLog.commit]], which also streams
+    * `bulk`) is tried again.
     *
     * Logical conflict detection (Delta optimistic concurrency, SURVEY
-    * §7.1): a rewrite commit carries RemoveFile/AddFile lists computed
-    * from the snapshot it *read* (`readVersion`). If another writer
-    * committed in between, blindly replaying those actions loses that
-    * writer's update — e.g. a concurrent DELETE already removed one of
-    * our files and we'd re-add rows rewritten from its stale contents.
-    * So before every attempt we diff the interleaved commits
-    * (readVersion+1 .. latest): if any of them removed a file this
-    * commit also removes (= a file we read and rewrote), the rewrite is
-    * based on dead data and must abort with
-    * [[ConflictingCommitException]] rather than commit. Version-number
-    * collisions alone (pure appends interleaving) still retry freely.
+    * §7.1): a rewrite commit carries RemoveFile/AddFile actions
+    * computed from the snapshot it *read* (`readVersion`). If another
+    * writer committed in between, blindly replaying those actions
+    * loses that writer's update — e.g. a concurrent DELETE already
+    * removed one of our files and we'd re-add rows rewritten from its
+    * stale contents. So before every attempt the interleaved commits
+    * (readVersion+1 .. latest) are checked against `ourPaths`, the
+    * files this commit removes or supersedes: if one of them removed
+    * such a file, or re-added it (a deletion vector supersedes a file
+    * in place), the operation is based on dead data and aborts with
+    * [[ConflictingCommitException]]. Version collisions alone (pure
+    * appends interleaving) still retry freely.
+    *
+    * The interleaved commits' paths are the resident side — O(their
+    * size), and interactive commits are small — while `ourPaths` is
+    * re-iterated as a stream against them, so a table-sized rewrite
+    * never holds its own path set. An interleaved commit touching
+    * more than [[EXACT_CONFLICT_MAX_THEIRS]] files (another bulk
+    * writer) aborts conservatively instead of materializing a second
+    * table-sized set.
     */
   private[lake] def commitWithRetry(
       log: LakeLog,
       readVersion: Long = -1L,
-      removedRelPaths: Seq[String] = Nil)(
-      actions: Long => Seq[Action]): Long =
-    retryLoop(log, readVersion, removedRelPaths)(
-      v => log.commit(v, actions(v)))
-
-  /** [[commitWithRetry]] whose BULK actions stream
-    * ([[LakeLog.commitStreamed]]) — the O(table) commit shapes
-    * (RESTORE re-adds). Same conflict detection; `bulk` is re-invoked
-    * per attempt and for the ambiguity readback.
-    */
-  private[lake] def commitStreamedWithRetry(
-      log: LakeLog,
-      readVersion: Long,
-      removedRelPaths: Seq[String])(
-      head: Long => Seq[Action])(
-      bulk: () => Iterator[Action]): Long =
-    retryLoop(log, readVersion, removedRelPaths)(
-      v => log.commitStreamed(v, head(v), bulk))
-
-  /** [[commitStreamedWithRetry]] whose per-path conflict check keeps
-    * the CLASSIC exactness without a driver-resident path set: the
-    * INTERLEAVED commits' touched paths are the resident side
-    * (O(their size) — interactive commits are small), and OUR paths
-    * stream chunk-buffered against them. An interleaved commit bigger
-    * than [[LakeWriter.EXACT_CONFLICT_MAX_THEIRS]] (another bulk
-    * writer) degrades to a conservative abort rather than
-    * materializing a second table-sized set.
-    */
-  private[lake] def commitStreamedExactConflicts(
-      log: LakeLog,
-      readVersion: Long,
-      ourPaths: () => Iterator[String])(
-      head: Long => Seq[Action])(
-      bulk: () => Iterator[Action]): Long = {
-    var attempts = 0
-    if (log.exists && log.latestVersion >= 0)
+      ourPaths: Iterable[String] = Nil,
+      bulk: () => Iterator[Action] = () => Iterator.empty)(
+      head: Long => Seq[Action]): Long = {
+    // Writer protocol gate — EVERY commit path (write, DML rewrite,
+    // DDL, maintenance) refuses a table whose log demands writer
+    // semantics this engine does not implement. Metadata-light: the
+    // gate needs the Protocol action only.
+    val latest0 = log.latestVersion
+    if (latest0 >= 0)
       LakeProtocol.assertWritable(
-        Snapshot.replayMeta(log, log.latestVersion)._2, log.tablePath)
+        Snapshot.replayMeta(log, latest0)._2, log.tablePath)
+    var attempts = 0
     while (true) {
       val latest = log.latestVersion
-      if (readVersion >= 0 && latest > readVersion) {
-        val theirs = scala.collection.mutable.HashSet.empty[String]
-        ((readVersion + 1) to latest).foreach { v =>
-          log.readVersion(v).foreach {
-            case r: RemoveFile => theirs += r.path; ()
-            // a DV/metadata re-add supersedes the file in place — the
-            // same conflict the classic retryLoop flags
-            case a: AddFile => theirs += a.path; ()
-            case _ => ()
-          }
-          if (theirs.size > EXACT_CONFLICT_MAX_THEIRS)
-            throw new ConflictingCommitException(
-              s"conflicting commit: version $v of ${log.tablePath} " +
-              s"touched over $EXACT_CONFLICT_MAX_THEIRS files while " +
-              s"this streamed rewrite (reading version $readVersion) " +
-              "was staging. Re-run the operation.")
-        }
-        if (theirs.nonEmpty) ourPaths().foreach { p =>
-          if (theirs.contains(p)) throw new ConflictingCommitException(
-            s"conflicting commit: a commit after version $readVersion " +
-            s"of ${log.tablePath} touched file $p, which this " +
-            "streamed rewrite also rewrites. Re-read the table and " +
-            "retry the operation.")
-        }
-      }
+      // a provably empty path set cannot conflict (a streamed one is
+      // never probed for emptiness: that would start its scan)
+      if (readVersion >= 0 && latest > readVersion && ourPaths.knownSize != 0)
+        assertNoConflict(log, readVersion, latest, ourPaths)
       val version = latest + 1
       try {
-        log.commitStreamed(version, head(version), bulk)
+        log.commit(version, head(version), bulk)
         return version
       } catch {
         case _: ConcurrentWriteException if attempts < 20 => attempts += 1
@@ -1166,63 +1130,45 @@ object LakeWriter {
     -1L // unreachable
   }
 
-  /** Interleaved-commit size bound of the exact streamed conflict
-    * check (above it: conservative abort, never a resident set).
+  private def assertNoConflict(log: LakeLog, readVersion: Long,
+      latest: Long, ourPaths: Iterable[String]): Unit = {
+    // path -> (first interleaved version touching it, removed?)
+    val theirs = scala.collection.mutable.HashMap.empty[String, (Long, Boolean)]
+    ((readVersion + 1) to latest).foreach { v =>
+      log.readVersion(v).foreach {
+        case r: RemoveFile => theirs.getOrElseUpdate(r.path, (v, true)); ()
+        // Appends and rewrites mint fresh uuid paths, so an AddFile
+        // matching one of ours is a same-file supersession (deletion
+        // vector): a later DV would silently resurrect rows the
+        // earlier commit deleted.
+        case a: AddFile => theirs.getOrElseUpdate(a.path, (v, false)); ()
+        case _ => ()
+      }
+      if (theirs.size > EXACT_CONFLICT_MAX_THEIRS)
+        throw new ConflictingCommitException(
+          s"conflicting commit: version $v of ${log.tablePath} " +
+          s"touched over $EXACT_CONFLICT_MAX_THEIRS files while this " +
+          s"operation (reading version $readVersion) was staging. " +
+          "Re-run the operation.")
+    }
+    if (theirs.nonEmpty) ourPaths.foreach { p =>
+      theirs.get(p).foreach { case (v, removed) =>
+        val what =
+          if (removed) s"removed file $p"
+          else s"superseded file $p (deletion vector)"
+        throw new ConflictingCommitException(
+          s"conflicting commit: version $v of ${log.tablePath} $what, " +
+          "which this operation (reading version " +
+          s"$readVersion) also rewrites. Re-read the table and retry " +
+          "the operation.")
+      }
+    }
+  }
+
+  /** Interleaved-commit size bound of [[commitWithRetry]]'s conflict
+    * check (above it: conservative abort, never a second resident set).
     */
   private[lake] var EXACT_CONFLICT_MAX_THEIRS: Long = 1000000L
-
-  private def retryLoop(
-      log: LakeLog,
-      readVersion: Long,
-      removedRelPaths: Seq[String])(
-      doCommit: Long => Unit): Long = {
-    var attempts = 0
-    val ours = removedRelPaths.toSet
-    // Writer protocol gate — centralized here so EVERY commit path
-    // (write, DML rewrite, DDL, maintenance) refuses a table whose log
-    // demands writer semantics this engine does not implement.
-    // Metadata-light: the gate needs the Protocol action only — a
-    // full replay here would make every commit O(table) again.
-    if (log.exists && log.latestVersion >= 0)
-      LakeProtocol.assertWritable(
-        Snapshot.replayMeta(log, log.latestVersion)._2, log.tablePath)
-    while (true) {
-      val latest = log.latestVersion
-      if (readVersion >= 0 && ours.nonEmpty && latest > readVersion) {
-        ((readVersion + 1) to latest).foreach { v =>
-          log.readVersion(v).foreach {
-            case r: RemoveFile if ours.contains(r.path) =>
-              throw new ConflictingCommitException(
-                s"conflicting commit: version $v of ${log.tablePath} " +
-                s"removed file ${r.path}, which this operation (reading " +
-                s"version $readVersion) also rewrites. Re-read the table " +
-                "and retry the operation.")
-            // A deletion-vector commit modifies a file by RE-ADDING its
-            // path (no RemoveFile) — a concurrent rewrite/DV-write of
-            // the same file must conflict too, or the later DV would
-            // silently resurrect rows the earlier commit deleted.
-            // Appends/rewrites always mint fresh uuid paths, so only
-            // genuine same-file supersessions can match here.
-            case a: AddFile if ours.contains(a.path) =>
-              throw new ConflictingCommitException(
-                s"conflicting commit: version $v of ${log.tablePath} " +
-                s"superseded file ${a.path} (deletion vector), which " +
-                s"this operation (reading version $readVersion) also " +
-                "rewrites. Re-read the table and retry the operation.")
-            case _ =>
-          }
-        }
-      }
-      val version = latest + 1
-      try {
-        doCommit(version)
-        return version
-      } catch {
-        case _: ConcurrentWriteException if attempts < 20 => attempts += 1
-      }
-    }
-    -1L // unreachable
-  }
 
   /** Run `body` on a daemon thread — DML paths use this to overlap
     * independent Spark jobs (the CDC stage vs the data stage, the

@@ -36,15 +36,6 @@ object MetaScaleBench {
 
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(1000000)
-    // the streamed partition-DELETE leg matches half the files and
-    // only streams at or above the streamed-delete threshold
-    val minFiles = 2 * LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES
-    require(nFiles >= minFiles,
-      s"MetaScaleBench needs at least $minFiles files (got $nFiles): " +
-      "its streamed partition DELETE matches half of them and takes " +
-      "the streamed path only at or above " +
-      s"LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES = " +
-      s"${LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES}")
     // local[8]: the DRIVER-side legs (commit, replay, prune) are plain
     // JVM and ignore it; the columnar-index legs run their part scans
     // as Spark jobs, and decode parallelism across checkpoint parts is
@@ -178,10 +169,12 @@ object MetaScaleBench {
       val fr0 = Snapshot.fullReplays.get()
       val plan = new DmlPlan.Columnar(LakeTable.forPath(spark, dir), colIdx)
       val touched = timed("columnar DML discovery p = 500") {
-        val t = plan.partitionOnlyMatches("p = 500")
-        require(t.exists(_.size == nFiles / 1000),
-          s"partition-only DELETE discovery found ${t.map(_.size)}")
-        t.get
+        val (n, paths) = plan.partitionOnlyPaths("p = 500").get
+        val t = paths().toSeq
+        require(n == nFiles / 1000 && t.size == nFiles / 1000,
+          s"partition-only DELETE discovery found $n counted, " +
+          s"${t.size} streamed")
+        t
       }
       timed("columnar addsForPaths (touched subset)") {
         val sub = plan.subset(touched)
@@ -469,14 +462,12 @@ object MetaScaleBench {
       require(dh < math.max(192L * 1024 * 1024, nFiles.toLong * 320),
         s"chunked initial snapshot held $dh bytes on the driver")
     }
-    // STREAMED partition DELETE leg (round 18, VERDICT r17 #4): a
-    // half-table partition-scoped DELETE whose tombstones stream from
-    // the partition-filtered part scan straight into the commit — the
-    // driver never enumerates the matched paths (above
-    // [[LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES]] the classic
-    // per-path enumeration would drag ~nFiles/2 path strings through
-    // the driver). Requires: zero full replays, the streamed path
-    // actually taken, heap bounded far under the matched path list.
+    // Partition DELETE leg: a half-table partition-scoped DELETE whose
+    // tombstones stream from the partition-filtered part scan straight
+    // into the commit — the driver never enumerates the ~nFiles/2
+    // matched paths. Requires: zero full replays, a metadata-only
+    // commit (tombstones, no AddFile), heap bounded far under the
+    // matched path list.
     Snapshot.clearCacheForTest()
     graft.sources.ColumnarLakeFileIndex.clearCacheForTest()
     locally {
@@ -486,7 +477,6 @@ object MetaScaleBench {
         rt.totalMemory() - rt.freeMemory()
       }
       val fr0 = Snapshot.fullReplays.get()
-      val sd0 = LakeTable.streamedPartitionDeletes.get()
       val liveBefore = graft.sources.ColumnarLakeFileIndex
         .tryBuild(spark, log, log.latestVersion).get.numFiles
       val h0 = usedHeap()
@@ -495,12 +485,13 @@ object MetaScaleBench {
       }
       val dh = usedHeap() - h0
       printf("  streamed delete heap delta: %.1f MB%n", dh / 1e6)
-      require(LakeTable.streamedPartitionDeletes.get() == sd0 + 1,
-        "the DELETE did not take the streamed tombstone path")
       require(Snapshot.fullReplays.get() == fr0,
         "streamed partition DELETE replayed the full file list")
       val v = log.latestVersion
-      val removed = log.readVersion(v).count(_.isInstanceOf[RemoveFile])
+      val actions = log.readVersion(v)
+      require(!actions.exists(_.isInstanceOf[AddFile]),
+        "the partition DELETE committed AddFiles (not metadata-only)")
+      val removed = actions.count(_.isInstanceOf[RemoveFile])
       println(s"  streamed delete tombstoned $removed files at v$v")
       require(removed >= nFiles / 2,
         s"streamed delete tombstoned only $removed of ~${nFiles / 2}")

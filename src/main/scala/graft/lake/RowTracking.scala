@@ -71,10 +71,15 @@ object RowTracking {
   def highWaterMark(domains: Map[String, Map[String, String]]): Long =
     domains.get(DOMAIN).flatMap(_.get(HWM_KEY)).map(_.toLong).getOrElse(0L)
 
-  /** Stamp `actions` for a commit against `parent` (None for version
-    * 0): every un-stamped AddFile gets a consecutive id block, and
-    * the advanced high-water-mark [[DomainMetadata]] is appended.
-    * Returns `actions` unchanged when the feature is off.
+  /** Stamp one commit's actions, `head ++ bulk`, against the parent's
+    * metadata and domain state (parentMeta None for version 0): every
+    * un-stamped AddFile gets a consecutive id block as the stream is
+    * consumed, and the advanced high-water-mark [[DomainMetadata]] is
+    * appended once the stream is exhausted — one action resident at a
+    * time, so a table-sized bulk never materializes here. The feature
+    * switch is read from the commit's own Metadata in `head` (it can
+    * toggle the property), else from the parent's. Returns the actions
+    * unchanged when the feature is off.
     *
     * Re-adds of EXISTING files (deletion vectors, bloom/stats
     * backfill, RESTORE, clones) arrive with `baseRowId` already set —
@@ -87,66 +92,18 @@ object RowTracking {
     * consumers can classify it by operation name instead of
     * re-delivering the whole table as fresh data.
     */
-  def stamp(parent: Option[Snapshot], actions: Seq[Action]): Seq[Action] =
-    stampMeta(parent.map(_.metadata), parent.map(_.domains)
-      .getOrElse(Map.empty), actions)
-
-  /** [[stamp]] against just the parent's metadata + domain state —
-    * what the commit choke point actually has: it reaches here via
-    * [[Snapshot.replayMeta]], which never materializes the parent's
-    * file list, so commit cost stays O(commit), not O(table).
-    */
-  def stampMeta(parentMeta: Option[Metadata],
+  def stamp(parentMeta: Option[Metadata],
       parentDomains: Map[String, Map[String, String]],
-      actions: Seq[Action]): Seq[Action] = {
-    val commitMeta = actions.collectFirst { case m: Metadata => m }
+      head: Seq[Action], bulk: Iterator[Action]): Iterator[Action] = {
+    val actions = head.iterator ++ bulk
+    val commitMeta = head.collectFirst { case m: Metadata => m }
     val effective = commitMeta.orElse(parentMeta)
       .map(_.properties).getOrElse(Map.empty)
     if (!enabled(effective)) return actions
     val wasEnabled = parentMeta.exists(m => enabled(m.properties))
-    var next = highWaterMark(parentDomains)
-    val priorHwm = next
-    def carve(f: AddFile): AddFile = {
-      if (f.numRecords < 0)
-        throw new IllegalStateException(
-          s"cannot assign row ids to ${f.path}: the log entry has no " +
-          s"row count. Backfill stats first (ANALYZE TABLE ... COMPUTE " +
-          "DELTA STATISTICS) or rewrite the file, then retry.")
-      val stamped = f.copy(baseRowId = Some(next))
-      next += f.numRecords
-      stamped
-    }
-    val stampedActions = actions.map {
-      case a: AddFile if a.baseRowId.isEmpty => carve(a)
-      case other => other
-    }
-    // Emit the domain even when nothing was carved on the enable
-    // commit, so the table's tracked state is explicit in the log.
-    val domain =
-      if (next == priorHwm && wasEnabled) Nil
-      else Seq(DomainMetadata(DOMAIN, Map(HWM_KEY -> next.toString)))
-    stampedActions ++ domain
-  }
-
-  /** Streaming twin of [[stampMeta]] for O(table)-bulk commits
-    * ([[LakeLog.commitStreamed]]): carves ids for un-stamped AddFiles
-    * sequentially AS THE STREAM IS CONSUMED and lazily appends the
-    * advanced high-water [[DomainMetadata]] iff the same fold would
-    * have — single pass, one action resident at a time. `commitMeta`
-    * is the commit's own Metadata (it can toggle the property), same
-    * as the head scan the materialized fold does.
-    */
-  def stampStream(parentMeta: Option[Metadata],
-      parentDomains: Map[String, Map[String, String]],
-      commitMeta: Option[Metadata],
-      bulk: Iterator[Action]): Iterator[Action] = {
-    val effective = commitMeta.orElse(parentMeta)
-      .map(_.properties).getOrElse(Map.empty)
-    if (!enabled(effective)) return bulk
-    val wasEnabled = parentMeta.exists(m => enabled(m.properties))
     var hwm = highWaterMark(parentDomains)
     val priorHwm = hwm
-    val stamped: Iterator[Action] = bulk.map {
+    val stamped: Iterator[Action] = actions.map {
       case a: AddFile if a.baseRowId.isEmpty =>
         if (a.numRecords < 0)
           throw new IllegalStateException(
@@ -158,8 +115,10 @@ object RowTracking {
         s
       case other => other
     }
-    // the domain tail evaluates only after `stamped` is exhausted
-    // (Iterator.++ is lazy), so it sees the final high-water mark
+    // The domain tail evaluates only after `stamped` is exhausted
+    // (Iterator.++ is lazy), so it sees the final high-water mark. It
+    // is emitted even when nothing was carved on the enable commit, so
+    // the table's tracked state is explicit in the log.
     stamped ++ new Iterator[Action] {
       private var emitted = false
       def hasNext: Boolean = !emitted && (hwm != priorHwm || !wasEnabled)

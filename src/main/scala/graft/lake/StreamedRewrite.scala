@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
   *     holds O(chunk) paths and AddFiles at any moment.
   *  3. The commit streams: tombstones re-derive from the touched
   *     source and the staged actions replay from the spill line by
-  *     line ([[LakeWriter.commitStreamedExactConflicts]] keeps the
-  *     exact per-path conflict semantics by streaming OUR paths
-  *     against the interleaved commits' — small — touched sets).
+  *     line ([[LakeWriter.commitWithRetry]] keeps the exact per-path
+  *     conflict semantics by streaming OUR paths against the
+  *     interleaved commits' — small — touched sets).
   *
   * Distributed chunk membership is `pmod(xxhash64(path), numChunks)` —
   * a deterministic, data-independent split, so re-deriving a chunk (or
@@ -189,14 +189,18 @@ private[lake] object StreamedRewrite {
            else Map.empty) ++
           (if (chunks.distributed) Map("streamedRewrite" -> "true")
            else Map.empty)
-        val ourPaths: () => Iterator[String] =
-          if (!dvMode) () => chunks.pathIterator()
-          else () => staged.dv.iterator().collect {
+        val ourPaths = scala.collection.View.fromIteratorProvider(() =>
+          if (!dvMode) chunks.pathIterator()
+          else staged.dv.iterator().collect {
             case r: RemoveFile => r.path
             case a: AddFile => a.path
-          }
-        LakeWriter.commitStreamedExactConflicts(table.log, plan.version,
-          ourPaths) { _ =>
+          })
+        val bulk = () =>
+          (if (dvMode) staged.dv.iterator()
+           else chunks.pathIterator().map(p => RemoveFile(p, now): Action)) ++
+            staged.data.iterator()
+        LakeWriter.commitWithRetry(table.log, plan.version, ourPaths,
+          bulk) { _ =>
           table.assertMetadataUnchangedAt(plan.version, plan.metadata,
             operation)
           // idempotent-writer re-check on every attempt: a concurrent
@@ -210,10 +214,6 @@ private[lake] object StreamedRewrite {
           }
           Seq(CommitInfo(now, operation, allParams)) ++
             txn.map { case (a, v) => Txn(a, v) }
-        } { () =>
-          (if (dvMode) staged.dv.iterator()
-           else chunks.pathIterator().map(p => RemoveFile(p, now): Action)) ++
-            staged.data.iterator()
         }
         ()
       } catch { case e: Throwable =>

@@ -104,23 +104,18 @@ class ColumnarIndexSuite extends SparkSuite {
     val path = buildTable("col-stream-del")
     val before = spark.read.format("lake").load(path)
       .filter("p != 1").collect().toSet
-    val prevMin = LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES
-    LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES = 1L
-    val n0 = LakeTable.streamedPartitionDeletes.get()
-    try LakeTable.forPath(spark, path).delete("p = 1")
-    finally LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES = prevMin
-    assert(LakeTable.streamedPartitionDeletes.get() === n0 + 1,
-      "the DELETE should have taken the streamed tombstone path")
+    LakeTable.forPath(spark, path).delete("p = 1")
     // results identical to the classic path's semantics
     assert(spark.read.format("lake").load(path).collect().toSet
       === before)
     assert(columnarDF(path).filter("p = 1").count() === 0L)
-    // the commit is tagged and metadata-only (RemoveFiles, no adds)
+    // the commit records its predicate and is metadata-only
+    // (RemoveFiles, no adds)
     val log = new LakeLog(path)
     val actions = log.readVersion(log.latestVersion)
     val ci = actions.collectFirst { case c: CommitInfo => c }.get
     assert(ci.operation === "DELETE")
-    assert(ci.operationParameters.get("streamed") === Some("true"))
+    assert(ci.operationParameters === Map("predicate" -> "p = 1"))
     assert(actions.exists(_.isInstanceOf[RemoveFile]))
     assert(!actions.exists(_.isInstanceOf[AddFile]),
       "streamed partition delete must be metadata-only")
@@ -362,68 +357,99 @@ class ColumnarIndexSuite extends SparkSuite {
       === afterMerge, "failed chunked DV merge must leave the table as-is")
   }
 
-  test("streamed partition DELETE replans past a racing unrelated commit") {
-    // the streamed path's conservative conflict rule aborts on ANY
-    // commit landing after the planned read version; a single racing
-    // UNRELATED append must not surface to the caller — the delete
-    // replans (bounded) and lands on the next attempt
-    val path = buildTable("col-stream-del-race")
+  /** Run `body` with a LogStore that fires `race` once, inside the
+    * first version-file PUT under `path`'s log — a commit landing
+    * between the operation's plan and its publish.
+    */
+  private def withRaceAtPublish[A](path: String)(race: => Unit)(
+      body: => A): (A, Boolean) = {
+    val logDir = java.nio.file.Paths.get(path, LakeLog.LOG_DIR)
+      .toAbsolutePath
+    val prev = LogStore.current
+    @volatile var armed = true
+    val hook = new LogStore {
+      private def maybeFire(target: java.nio.file.Path): Unit = {
+        val name = target.getFileName.toString
+        if (armed && target.toAbsolutePath.startsWith(logDir) &&
+            name.endsWith(".json") && !name.contains("checkpoint")) {
+          armed = false // the racing writer's own commits delegate plainly
+          race
+        }
+      }
+      override def putIfAbsent(t: java.nio.file.Path,
+          lines: Seq[String]): Unit = {
+        maybeFire(t); prev.putIfAbsent(t, lines)
+      }
+      override def atomicReplace(t: java.nio.file.Path,
+          lines: Seq[String]): Unit = prev.atomicReplace(t, lines)
+      override def listDir(d: java.nio.file.Path): Seq[java.nio.file.Path] =
+        prev.listDir(d)
+      override def readLines(p: java.nio.file.Path): Seq[String] =
+        prev.readLines(p)
+      override def exists(p: java.nio.file.Path): Boolean = prev.exists(p)
+      override def delete(p: java.nio.file.Path): Boolean = prev.delete(p)
+    }
+    LogStore.current = hook
+    val r = try body finally LogStore.current = prev
+    (r, !armed)
+  }
+
+  test("partition DELETE lands past a racing unrelated append") {
+    // conflicts are exact per path: an append to an untouched
+    // partition between plan and publish only bumps the version
+    val path = buildTable("col-del-race-append")
     val before = spark.read.format("lake").load(path)
       .filter("p != 1").collect().toSet
-    val prevMin = LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES
-    LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES = 1L
-    val n0 = LakeTable.streamedPartitionDeletes.get()
-    // inject exactly one racing commit (to partition p=0, untouched by
-    // the delete) between planning and commit of the FIRST attempt
-    var raced = false
-    LakeTable.onStreamedDeletePlanned = () =>
-      if (!raced) {
-        raced = true
-        LakeWriter.write(
-          Seq((100L, "race", 0)).toDF("id", "name", "p"), path)
-      }
-    try LakeTable.forPath(spark, path).delete("p = 1")
-    finally {
-      LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES = prevMin
-      LakeTable.onStreamedDeletePlanned = () => ()
-    }
-    assert(raced, "the race hook never fired")
-    assert(LakeTable.streamedPartitionDeletes.get() === n0 + 2,
-      "expected the aborted first attempt plus the replanned retry")
-    // the delete landed AND the racing row (p=0) survived
+    val v0 = new LakeLog(path).latestVersion
+    val (_, fired) = withRaceAtPublish(path) {
+      LakeWriter.write(Seq((100L, "race", 0)).toDF("id", "name", "p"), path)
+    } { LakeTable.forPath(spark, path).delete("p = 1") }
+    assert(fired, "the race hook never fired")
+    val log = new LakeLog(path)
+    assert(log.latestVersion === v0 + 2, "append + DELETE")
+    assert(log.readVersion(v0 + 2).collectFirst { case c: CommitInfo =>
+      c.operation } === Some("DELETE"))
     val after = spark.read.format("lake").load(path).collect().toSet
     assert(after.exists(_.getLong(0) == 100L), "racing append lost")
-    assert(spark.read.format("lake").load(path)
-      .filter("p = 1").count() === 0L)
+    assert(after.count(_.getInt(2) == 1) === 0)
     assert(after.filter(_.getInt(2) != 1).size === before.size + 1)
   }
 
-  test("streamed partition DELETE surfaces the conflict once replans " +
-      "are exhausted") {
-    val path = buildTable("col-stream-del-starve")
-    val prevMin = LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES
-    val prevReplans = LakeTable.STREAMED_DELETE_REPLAN_ATTEMPTS
-    LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES = 1L
-    LakeTable.STREAMED_DELETE_REPLAN_ATTEMPTS = 2
-    // EVERY attempt races a fresh commit: the bounded replan must give
-    // up loudly instead of looping forever
-    var fires = 0
-    LakeTable.onStreamedDeletePlanned = () => {
-      fires += 1
-      LakeWriter.write(
-        Seq((200L + fires, "race", 0)).toDF("id", "name", "p"), path)
-    }
-    try {
+  test("partition DELETE conflicts with a racing commit that removed " +
+      "a matched file") {
+    val path = buildTable("col-del-race-remove")
+    val v0 = new LakeLog(path).latestVersion
+    // id 1 lives alone in a p=1 file: the racing DELETE removes it
+    val (ex, fired) = withRaceAtPublish(path) {
+      LakeTable.forPath(spark, path).delete("id = 1")
+    } {
       intercept[ConflictingCommitException] {
         LakeTable.forPath(spark, path).delete("p = 1")
       }
-      assert(fires === 3, s"expected 1 + 2 replanned attempts, got $fires")
-    } finally {
-      LakeTable.STREAMED_PARTITION_DELETE_MIN_FILES = prevMin
-      LakeTable.STREAMED_DELETE_REPLAN_ATTEMPTS = prevReplans
-      LakeTable.onStreamedDeletePlanned = () => ()
     }
-    // nothing was deleted
+    assert(fired, "the race hook never fired")
+    assert(ex.getMessage.contains("removed file"), ex.getMessage)
+    // only the racing commit landed; the rest of p=1 is still live
+    assert(new LakeLog(path).latestVersion === v0 + 1)
+    val p1 = spark.read.format("lake").load(path).filter("p = 1")
+    assert(p1.count() > 0L)
+    assert(p1.filter("id = 1").count() === 0L)
+  }
+
+  test("partition DELETE conflicts with a racing metadata change") {
+    val path = buildTable("col-del-race-meta")
+    val v0 = new LakeLog(path).latestVersion
+    val (ex, fired) = withRaceAtPublish(path) {
+      LakeTable.forPath(spark, path).setTblProperties(
+        Map(LakeTable.PROP_ENABLE_CDF -> "true"))
+    } {
+      intercept[ConflictingCommitException] {
+        LakeTable.forPath(spark, path).delete("p = 1")
+      }
+    }
+    assert(fired, "the race hook never fired")
+    assert(ex.getMessage.contains("metadata"), ex.getMessage)
+    assert(new LakeLog(path).latestVersion === v0 + 1)
     assert(spark.read.format("lake").load(path)
       .filter("p = 1").count() > 0L)
   }

@@ -148,10 +148,10 @@ class LakeCoreSuite extends SparkSuite {
         properties = Map("k" -> "v1")),
       Txn("app-a", 3L), // below the watermark: max-fold keeps 5
       DomainMetadata("d1", Map.empty, removed = true)))
-    // the streamed commit seeds too: its meta actions arrive from the
-    // head AND from the bulk stream (the row-id high-water domain the
-    // stamping appends after the carved AddFile)
-    log.commitStreamed(3L, Seq(
+    // a commit with a bulk stream seeds too: its meta actions arrive
+    // from the head AND from the bulk stream (the row-id high-water
+    // domain the stamping appends after the carved AddFile)
+    log.commit(3L, Seq(
       CommitInfo(4L, "UPDATE", Map.empty),
       Metadata("id BIGINT, p STRING", Seq("p"), 1L,
         properties = Map("k" -> "v1", RowTracking.PROP -> "true")),
@@ -172,6 +172,33 @@ class LakeCoreSuite extends SparkSuite {
     val (_, _, d3, t3) = Snapshot.replayMetaTxns(log, 3L)
     assert(d3(RowTracking.DOMAIN)(RowTracking.HWM_KEY) === "3")
     assert(t3 === Map("app-a" -> 5L, "app-b" -> 7L))
+
+    // head and bulk are one stamping fold: the same row-tracked
+    // AddFiles committed resident (in `head`) or streamed (in `bulk`)
+    // carve identical id blocks and the same high-water domain
+    val adds = Seq(AddFile("p=1/c.parquet", Map("p" -> "1"), 10L, 4L),
+      AddFile("p=1/d.parquet", Map("p" -> "1"), 10L, 6L))
+    def committed(name: String, viaBulk: Boolean): Seq[Action] = {
+      val l = new LakeLog(tmpDir(name))
+      l.commit(0L, Seq(CommitInfo(1L, "CREATE", Map.empty),
+        Metadata("id BIGINT, p STRING", Seq("p"), 1L,
+          properties = Map(RowTracking.PROP -> "true")),
+        Protocol()))
+      l.commit(1L, Seq(CommitInfo(2L, "APPEND", Map.empty),
+        AddFile("p=1/b.parquet", Map("p" -> "1"), 10L, 3L)))
+      val head = Seq(CommitInfo(3L, "APPEND", Map.empty))
+      if (viaBulk) l.commit(2L, head, () => adds.iterator)
+      else l.commit(2L, head ++ adds)
+      l.readVersion(2L).filterNot(_.isInstanceOf[CommitInfo])
+    }
+    val resident = committed("stamp-head", viaBulk = false)
+    val streamed = committed("stamp-bulk", viaBulk = true)
+    assert(resident === streamed, "head/bulk stamping divergence")
+    assert(resident.collect { case a: AddFile => a.path -> a.baseRowId } ===
+      Seq("p=1/c.parquet" -> Some(3L), "p=1/d.parquet" -> Some(7L)))
+    assert(resident.collect { case d: DomainMetadata => d } === Seq(
+      DomainMetadata(RowTracking.DOMAIN,
+        Map(RowTracking.HWM_KEY -> "13"))))
   }
 
   test("interned AddFile maps behave as plain immutable Maps") {

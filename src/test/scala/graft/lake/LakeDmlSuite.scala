@@ -383,6 +383,26 @@ class LakeDmlSuite extends SparkSuite {
     assert(t.toDF.select("id").as[Long].collect() === Array(1L))
   }
 
+  test("partition-predicate delete matching no file writes no version") {
+    // like a predicate DELETE that touches nothing (and Delta's
+    // commitIfNeeded), an empty partition match commits nothing — on
+    // a populated table and on an emptied one
+    val path = tablePath("d2-nomatch")
+    LakeWriter.write(Seq((1L, 1), (2L, 2)).toDF("id", "p"), path,
+      partitionBy = Seq("p"))
+    val log = new LakeLog(path)
+    val t = LakeTable.forPath(spark, path)
+    val v0 = log.latestVersion
+    t.delete("p = 99")
+    assert(log.latestVersion === v0)
+    t.delete("p >= 1")
+    val v1 = log.latestVersion
+    assert(v1 === v0 + 1)
+    t.delete("p = 1")
+    assert(log.latestVersion === v1)
+    assert(t.toDF.count() === 0L)
+  }
+
   test("update rewrites matching rows in place") {
     val path = tablePath("u1")
     LakeWriter.write(seed, path)
