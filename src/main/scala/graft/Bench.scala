@@ -388,10 +388,6 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(fullFile), doc.getBytes("UTF-8"))
       System.err.println(s"[bench] full per-query record -> $fullFile")
-      System.err.println(f"[bench] staging writes: " +
-        f"${graft.lake.LakeWriter.stagingCommits.sum()} commits, " +
-        f"${graft.lake.LakeWriter.stagingFiles.sum()} files, " +
-        f"${graft.lake.LakeWriter.stagingNanos.sum() / 1e9}%.1f s total")
       // Compact machine-parseable summary, written as its OWN file AND
       // printed as the run's FINAL stdout line: the driver's round
       // artifact keeps only a ~2000-char TAIL of stdout (which can

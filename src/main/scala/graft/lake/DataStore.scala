@@ -5,13 +5,14 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Storage seam for DATA-file I/O — the non-log twin of [[LogStore]],
-  * completing the cloud-port story the round-16 LogStore work began:
-  * staging adoption moves, DV/bloom sidecar bodies, vacuum physical
-  * deletes and existence probes all route through here instead of raw
-  * `java.nio`.
+  * completing the cloud-port story the LogStore began: DV/bloom
+  * sidecar bodies, vacuum physical deletes, failed-write sweeps and
+  * existence probes all route through here instead of raw `java.nio`.
+  * Data files themselves are written once, in place, by the parquet
+  * writer ([[DirectWriteProtocol]]), so placement needs no call here.
   *
   * The contract is deliberately WEAKER than the log's: data files are
-  * correctness-safe by construction — a staged body is unreferenced
+  * correctness-safe by construction — a written body is unreferenced
   * until the LOG publishes a version naming it, and vacuum deletes
   * only what no retained version references — so no put-if-absent and
   * no cross-object atomicity are needed. A port needs exactly:
@@ -20,10 +21,6 @@ import java.util.concurrent.atomic.AtomicInteger
   *    (PUT is atomic per object on S3/GCS/ABFS — readers never see a
   *    torn sidecar);
   *  - [[readBytes]]: single-object GET;
-  *  - [[move]]: staging → final-layout placement of an already-written
-  *    file (an object-store port writes to final uuid keys up front
-  *    and implements this as server-side copy + delete, or skips the
-  *    staging layout entirely);
   *  - [[deleteIfExists]] / [[exists]]: vacuum's physical deletes,
   *    FSCK's damage probes, crash-debris sweeps. Both must TOLERATE
   *    concurrent deletion (a parallel vacuum or crash sweep removing
@@ -46,12 +43,6 @@ trait DataStore {
   /** The entire object body — one GET. */
   def readBytes(p: Path): Array[Byte]
 
-  /** Place an already-written local file at `target` (staging
-    * adoption). The source is unreferenced by any log version, so a
-    * crash mid-move leaves only sweepable debris.
-    */
-  def move(src: Path, target: Path): Unit
-
   /** Delete `p` if present; false when it was already gone (a
     * concurrent sweep won the race — never an error).
     */
@@ -70,11 +61,6 @@ object LocalDataStore extends DataStore {
     ()
   }
   override def readBytes(p: Path): Array[Byte] = Files.readAllBytes(p)
-  override def move(src: Path, target: Path): Unit = {
-    Files.createDirectories(target.getParent)
-    Files.move(src, target, StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
   override def deleteIfExists(p: Path): Boolean =
     try Files.deleteIfExists(p)
     catch {
@@ -93,7 +79,7 @@ object LocalDataStore extends DataStore {
   *
   *  - [[lostWritesRemaining]]: the connection dies before a sidecar
   *    PUT reaches the store — nothing lands. The invariant under test:
-  *    the owning DML fails loudly and sweeps its staged output; the
+  *    the owning DML fails loudly and sweeps its written output; the
   *    table is byte-identical to before.
   *  - [[failReadsRemaining]]: a transient GET failure on a sidecar
   *    body — surfaces as a task failure Spark retries.
@@ -149,17 +135,6 @@ final class ObjectStoreDataStore extends DataStore {
       throw new IOException(s"injected fault: GET of $p failed")
     Files.readAllBytes(p)
   }
-
-  /** A real object store has no rename: the emulation is server-side
-    * copy + delete of the staged key — both single-object operations.
-    */
-  override def move(src: Path, target: Path): Unit =
-    serverLock.synchronized {
-      Files.createDirectories(target.getParent)
-      Files.copy(src, target, StandardCopyOption.REPLACE_EXISTING)
-      Files.deleteIfExists(src)
-      ()
-    }
 
   override def deleteIfExists(p: Path): Boolean =
     try Files.deleteIfExists(p)

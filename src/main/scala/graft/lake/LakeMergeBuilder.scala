@@ -574,7 +574,7 @@ final class LakeMergeBuilder private[lake] (
           if (plan.metadata.constraints.nonEmpty)
             LakeWriter.enforceConstraints(df.drop(RowTracking.COL),
               plan.metadata.constraints, table.tablePath)
-          staged.data.append(LakeWriter.stageAndAdopt(df, table.tablePath,
+          staged.data.append(LakeWriter.writeFiles(df, table.tablePath,
             plan.partitionColumns, ColumnMapping.overrides(plan.metadata),
             plan.metadata.properties, computeLight = true))
         }

@@ -464,7 +464,7 @@ final class LakeTable private (
         if (f.name == oldName) f.copy(name = newName) else f))
     val meta = snap.metadata.copy(schemaDDL = newSchema.toDDL)
     val renamed = toDF.withColumnRenamed(oldName, newName)
-    val adds = LakeWriter.stageAndAdopt(renamed, tablePath,
+    val adds = LakeWriter.writeFiles(renamed, tablePath,
       snap.partitionColumns, ColumnMapping.overrides(snap.metadata),
       snap.metadata.properties, computeLight = true)
     val now = System.currentTimeMillis()
@@ -734,7 +734,7 @@ final class LakeTable private (
             readFiles(snapC, paths).filter(hit)
               .withColumn("_change_type", lit("delete"))
           }
-          staged.data.append(LakeWriter.stageAndAdopt(kept, tablePath,
+          staged.data.append(LakeWriter.writeFiles(kept, tablePath,
             snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
             snapC.metadata.properties, computeLight = true))
           staged.joinCdc()
@@ -958,7 +958,7 @@ final class LakeTable private (
                 .withColumn("_change_type", lit("insert"))
               pre.unionByName(post)
             }
-            staged.data.append(LakeWriter.stageAndAdopt(updated, tablePath,
+            staged.data.append(LakeWriter.writeFiles(updated, tablePath,
               snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
               snapC.metadata.properties, computeLight = true))
             staged.stageDv(snapC, paths, projC.select(col(FILE), col(IDX)))
@@ -1031,7 +1031,7 @@ final class LakeTable private (
             .withColumn("_change_type", lit("insert"))
           pre.unionByName(post)
         }
-        staged.data.append(LakeWriter.stageAndAdopt(updated, tablePath,
+        staged.data.append(LakeWriter.writeFiles(updated, tablePath,
           snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
           snapC.metadata.properties, computeLight = true))
         staged.joinCdc()
@@ -1718,7 +1718,7 @@ final class LakeTable private (
     // cdc-* scratch) bottom-up; the deepest-first sort makes children
     // go before parents. No mtime gate: removing an EMPTY directory
     // never loses data, and every writer recreates its directories on
-    // write (stageAndAdopt/parquet both mkdir before writing).
+    // write (the parquet writer creates a file's missing parent dirs).
     LakeTable.walkTolerant(root)._2
       .filterNot(_.startsWith(logRoot))
       .sortBy(p => -p.getNameCount)
@@ -1814,7 +1814,7 @@ final class LakeTable private (
     val dvFiles = scopeFiles(snap, where).filter(_.dvPath.isDefined)
     if (dvFiles.isEmpty) return 0
     val df = readForRewrite(snap, dvFiles.map(_.path))
-    val adds = LakeWriter.stageAndAdopt(df, tablePath,
+    val adds = LakeWriter.writeFiles(df, tablePath,
       snap.partitionColumns, ColumnMapping.overrides(snap.metadata),
       snap.metadata.properties, computeLight = true)
     commitRewrite(snap, dvFiles.map(_.path), adds, "REORG",
@@ -2009,12 +2009,12 @@ final class LakeTable private (
     val df = readForRewrite(snap, toCompact.map(_.path))
     val repartitioned =
       if (LakeTable.bucketSpecOf(snap.metadata.properties).isDefined)
-        df // bucket placement owns the layout; staging repartitions
+        df // bucket placement owns the layout; writeFiles repartitions
       else if (snap.partitionColumns.nonEmpty)
         df.repartition(math.max(numOut, byPartition.size),
           snap.partitionColumns.map(c => col(quoted(c))): _*)
       else df.repartition(numOut)
-    val adds = LakeWriter.stageAndAdopt(repartitioned, tablePath,
+    val adds = LakeWriter.writeFiles(repartitioned, tablePath,
       snap.partitionColumns, ColumnMapping.overrides(snap.metadata),
       snap.metadata.properties, layoutManaged = true)
     commitRewrite(snap, toCompact.map(_.path), adds, "OPTIMIZE",
@@ -2284,7 +2284,7 @@ final class LakeTable private (
       else LakeTable.targetFileBytes(snap.metadata.properties)
     // hash bucketing owns file placement on a bucketed table; a
     // range/Z-order re-cluster would be silently destroyed by the
-    // bucket repartition at staging — refuse loudly instead
+    // bucket repartition at write — refuse loudly instead
     require(LakeTable.bucketSpecOf(snap.metadata.properties).isEmpty,
       s"table $tablePath is hash-bucketed " +
         s"(${LakeTable.PROP_BUCKET_BY}): clustering and bucketing " +
@@ -2347,7 +2347,7 @@ final class LakeTable private (
     // generation stamp: files of one clustering run share a gen id
     // (read-version + 1 ≈ the commit that writes them — an opaque
     // marker, only is-set/size matter to the incremental filter)
-    val adds = LakeWriter.stageAndAdopt(clustered, tablePath,
+    val adds = LakeWriter.writeFiles(clustered, tablePath,
       snap.partitionColumns, ColumnMapping.overrides(snap.metadata),
       snap.metadata.properties, layoutManaged = true)
       .map(_.copy(clusterGen = Some(snap.version + 1)))

@@ -1,30 +1,22 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Writes to a lake table (SURVEY §2 K1/K2, §7.1–7.2).
   *
-  * Protocol: data files are written to a hidden staging dir, moved into
-  * the table's Hive-partitioned layout, and become visible only when
-  * the log commit succeeds (write data first, log last — crash-safe on
-  * the reference's semantics, SURVEY §7.9). Schema enforcement rejects
-  * new columns unless `mergeSchema` (D9/D10).
+  * Protocol: each data file is written once, under a fresh unique name,
+  * directly in the table's Hive-partitioned layout
+  * ([[DirectWriteProtocol]]), and becomes visible only when the log
+  * commit naming it succeeds (write data first, log last — crash-safe
+  * on the reference's semantics, SURVEY §7.9). Schema enforcement
+  * rejects new columns unless `mergeSchema` (D9/D10).
   */
 object LakeWriter {
-
-  /** Aggregate staging-write telemetry (r21): the bench suite commits
-    * ~100+ times, so the fixed cost of each staging parquet write
-    * multiplies into the total — these counters let a harness report
-    * the suite-wide share (Bench prints them to stderr at exit).
-    */
-  val stagingNanos = new java.util.concurrent.atomic.LongAdder
-  val stagingCommits = new java.util.concurrent.atomic.LongAdder
-  val stagingFiles = new java.util.concurrent.atomic.LongAdder
 
   final case class WriteResult(version: Long, added: Seq[AddFile])
 
@@ -249,7 +241,7 @@ object LakeWriter {
                 val kept = t.readFiles(snap, touched).filter(
                   !org.apache.spark.sql.functions.coalesce(cond, lit(false)))
                 (touched,
-                  stageAndAdopt(kept, tablePath, partCols, effectiveMapping,
+                  writeFiles(kept, tablePath, partCols, effectiveMapping,
                     effectiveProps, computeLight = true))
               }
           }
@@ -258,8 +250,8 @@ object LakeWriter {
 
     // optimizeWrite (Delta's autoOptimize.optimizeWrite): a size-aware
     // AQE REBALANCE of the output toward graft.targetFileSize,
-    // applied inside stageAndAdopt (the one choke point every
-    // un-managed staged frame passes — appends here, but also
+    // applied inside writeFiles (the one choke point every
+    // un-managed written frame passes — appends here, but also
     // MERGE/DELETE/UPDATE rewrite output). Without it, N write
     // tasks × P live partitions can emit N×P small files per append —
     // the classic small-file explosion a continuously-ingesting
@@ -270,13 +262,13 @@ object LakeWriter {
     // skewed 10 GB partition value across several writer tasks
     // instead of funnelling it through one.
 
-    // Stage the physical write, then adopt files into the table dir.
+    // Write the data files into the table dir, then commit them.
     {
-      val adds = stageAndAdopt(normalized, tablePath, partCols,
+      val adds = writeFiles(normalized, tablePath, partCols,
         effectiveMapping, effectiveProps)
 
       // Identity high-water mark advance, read back from the WRITTEN
-      // files' footer stats — the staged parquet is the only safe
+      // files' footer stats — the written parquet is the only safe
       // source, because monotonically_increasing_id is
       // non-deterministic and re-evaluating the frame could diverge
       // from what landed on disk.
@@ -307,7 +299,7 @@ object LakeWriter {
         ourPaths = replaceInfo.map(_._1).getOrElse(Nil)) { version =>
         allTxns.foreach { case (appId, txnVersion) =>
           // Re-check on every attempt: a concurrent writer of the same
-          // app may have landed this txn while we were staging. ANY
+          // app may have landed this txn while we were writing. ANY
           // overlap aborts — committing the rest here could double-load
           // files whose txns raced; the caller re-filters and retries.
           // Metadata-light read — never replays the file list.
@@ -318,7 +310,7 @@ object LakeWriter {
         }
         // Identity allocation conflict: a concurrent identity write
         // that advanced the high-water mark we based assignment on
-        // would make our staged ids collide with its — fail loudly
+        // would make our written ids collide with its — fail loudly
         // (the caller re-runs the write against the new mark) rather
         // than commit duplicates. Re-checked on every retry attempt.
         if (hwmUpdates.nonEmpty && version > 0) {
@@ -364,7 +356,7 @@ object LakeWriter {
         // fails when the table metadata changed under it, not only
         // metadata-writing ones). A schema-changing write re-emitting
         // stale metadata would silently revert the concurrent DDL; a
-        // plain append staged under the old schema would land files
+        // plain append written under the old schema would land files
         // whose columns the new schema reads as null (e.g. racing a
         // rewrite-mode rename). Loud abort — the caller re-runs
         // against the new state. Metadata-light read.
@@ -413,7 +405,7 @@ object LakeWriter {
       WriteResult(version, adds)
       } catch {
         case _: TxnAlreadyCommittedException =>
-          // Lost the race to an identical writer: discard our staged
+          // Lost the race to an identical writer: discard our written
           // (still unreferenced) files and report the winner's commit.
           adds.foreach(a =>
             DataStore.current.deleteIfExists(Paths.get(tablePath, a.path)))
@@ -421,7 +413,7 @@ object LakeWriter {
         case e: ConflictingCommitException =>
           // Non-retryable conflict (metadata changed, replaceWhere
           // rewrite superseded): the commit never happened, so the
-          // staged files are unreferenced debris — sweep them before
+          // written files are unreferenced debris — sweep them before
           // surfacing the conflict to the caller.
           (adds ++ replaceInfo.map(_._2).getOrElse(Nil)).foreach(a =>
             DataStore.current.deleteIfExists(Paths.get(tablePath, a.path)))
@@ -430,28 +422,29 @@ object LakeWriter {
     }
   }
 
-  /** Physically write `df` (Hive-partitioned by `partCols`) via a
-    * hidden staging dir inside the table, then move the files into the
-    * table layout and return their AddFile actions. The files are
-    * invisible to readers until a commit references them.
+  /** Physically write `df` (Hive-partitioned by `partCols`) straight
+    * into the table layout ([[DirectWriteProtocol]]) and return the
+    * files' AddFile actions, with footer-derived row counts and column
+    * stats. The files are invisible to readers until a commit
+    * references them; if this call fails after they landed, it deletes
+    * them before rethrowing.
     *
     * Column-mapped tables ([[ColumnMapping]]) write PHYSICAL names.
     * Every caller that holds a read snapshot (DML, compaction,
     * `write()`) threads that snapshot's mapping and properties
-    * EXPLICITLY, so the staged files agree with the state the commit
+    * EXPLICITLY, so the written files agree with the state the commit
     * will be validated against — re-resolving from the log here could
-    * adopt a concurrent writer's metadata and stage files the commit's
+    * adopt a concurrent writer's metadata and write files the commit's
     * conflict check would then reject. The null defaults re-resolve
     * from the log and remain only for snapshot-less callers (e.g.
     * first write to a new table).
     *
     * Bloom-indexed tables ([[BloomIndex]]) additionally (a) enable
-    * parquet-native bloom filters on the staging write for free
-    * row-group skipping, and (b) run one distributed pass over the
-    * staged files to build the per-file sidecars, attached to the
-    * returned AddFiles.
+    * parquet-native bloom filters on the write for free row-group
+    * skipping, and (b) run one distributed pass over the written files
+    * to build the per-file sidecars, attached to the returned AddFiles.
     */
-  private[lake] def stageAndAdopt(
+  private[lake] def writeFiles(
       df: DataFrame, tablePath: String, partCols: Seq[String],
       physicalFor: Map[String, String] = null,
       properties: Map[String, String] = null,
@@ -493,13 +486,12 @@ object LakeWriter {
     }
     val bloomPhysCols = bloomLogicalCols
       .map(c => ColumnMapping.physicalName(c, mapping))
-    // bucketed table: EVERY staged frame (appends, DML rewrites,
+    // bucketed table: EVERY written frame (appends, DML rewrites,
     // compaction output — this is the one choke point they all pass)
     // hash-partitions on the bucket columns with Spark's own bucket
     // hash: repartition(n, cols) evaluates HashPartitioning's
     // partitionIdExpression, so task index == bucket id, and the
-    // staged file names get the _%05d suffix Spark's bucketed scan
-    // parses. A caller's own repartition/coalesce is overridden here —
+    // file names get the _%05d suffix Spark's bucketed scan parses. A caller's own repartition/coalesce is overridden here —
     // bucket placement is a TABLE invariant, not a writer choice.
     val bucketSpec = LakeTable.bucketSpecOf(props)
     bucketSpec.foreach { case (cols, _) =>
@@ -513,7 +505,7 @@ object LakeWriter {
     }
     val physDf0 = ColumnMapping.toPhysical(df, mapping)
     // optimizeWrite (Delta's autoOptimize.optimizeWrite) applies at
-    // THIS choke point so every un-managed staged frame — appends,
+    // THIS choke point so every un-managed written frame — appends,
     // CTAS, streaming batches, and the kept/updated rows of
     // MERGE/DELETE/UPDATE rewrites — gets the size-aware AQE
     // rebalance toward graft.targetFileSize. `layoutManaged` callers
@@ -537,61 +529,52 @@ object LakeWriter {
         adaptiveStageCoalesce(physDf0)
       case None => physDf0
     }
-    val staging = Paths.get(tablePath, s".staging-${UUID.randomUUID()}")
-    Files.createDirectories(staging)
-    try {
-      val writer = bloomPhysCols.foldLeft(physDf.write.mode("overwrite")) {
-        (w, c) => w
-          .option(s"parquet.bloom.filter.enabled#$c", "true")
-          .option(s"parquet.bloom.filter.expected.ndv#$c",
-            BloomIndex.numItems(props).toString)
-      }
-      // plan-capture hook (r21 evidence trail): prints the staged
-      // write's physical plan so the size-adaptive fold is inspectable
-      // (plans/r21/staged_write_fold_*.txt)
-      if (sys.env.contains("GRAFT_STAGE_EXPLAIN"))
-        System.err.println("[stage-explain]\n" + physDf.queryExecution
-          .explainString(org.apache.spark.sql.execution.FormattedMode))
-      val tStage = System.nanoTime()
-      // partition columns are identity-mapped by invariant
-      withBucketStablePlanning(spark, bucketSpec.isDefined) {
-        withAdvisoryPartitionSize(spark,
-            if (optimizeWriteOn)
-              Some(LakeTable.targetFileBytes(props))
-            else None) {
-          withMicrosTimestamps(spark) {
-            (if (partCols.nonEmpty) writer.partitionBy(partCols: _*)
-             else writer).parquet(staging.toString)
-          }
+    val options = bloomPhysCols.flatMap(c => Seq(
+      s"parquet.bloom.filter.enabled#$c" -> "true",
+      s"parquet.bloom.filter.expected.ndv#$c" ->
+        BloomIndex.numItems(props).toString)).toMap
+    val root = Paths.get(tablePath).toAbsolutePath.normalize
+    // partition columns are identity-mapped by invariant
+    val written = withBucketStablePlanning(spark, bucketSpec.isDefined) {
+      withAdvisoryPartitionSize(spark,
+          if (optimizeWriteOn) Some(LakeTable.targetFileBytes(props))
+          else None) {
+        withMicrosTimestamps(spark) {
+          directWrite(physDf, root, partCols, options,
+            bucketed = bucketSpec.isDefined)
         }
       }
-      stagingNanos.add(System.nanoTime() - tStage)
-      stagingCommits.increment()
-      stagingFiles.add(walkParquet(staging).size)
-      // the empty-staging guard matters: a DML whose kept/updated
-      // frame stages zero part files would otherwise crash the read
-      // inside buildSidecars ("unable to infer schema") on a commit
-      // that is legitimately all-removes
+    }
+    try {
+      // a DML whose kept/updated frame writes no rows commits only
+      // removes: there is nothing to index
       val bloomFor: Map[String, String] =
-        if (bloomPhysCols.isEmpty || walkParquet(staging).isEmpty) Map.empty
-        else BloomIndex.buildSidecars(spark, Seq(staging.toString),
-          staging, Paths.get(tablePath),
+        if (bloomPhysCols.isEmpty || written.isEmpty) Map.empty
+        else BloomIndex.buildSidecars(spark,
+          written.map(a => root.resolve(a.path).toString), root, root,
           bloomPhysCols, partCols, BloomIndex.numItems(props),
           BloomIndex.fpp(props))
-      val adds = capStats(
-        adoptStagedFiles(spark, staging, Paths.get(tablePath),
-          bucketTag = bucketSpec.isDefined),
-        physDf.schema.fieldNames, props, mapping)
-      if (bloomFor.isEmpty) adds
-      else adds.map(a => a.copy(bloomPath =
-        // sidecars were built against the STAGED (untagged) names;
-        // adopted paths carry the bucket tag — strip it to look up
-        bloomFor.get(if (bucketSpec.isDefined) bucketUntagged(a.path)
-          else a.path)))
-    } finally deleteRecursively(staging)
+      capStats(written, physDf.schema.fieldNames, props, mapping)
+        .map(a => a.copy(bloomPath = bloomFor.get(a.path)))
+    } catch { case e: Throwable =>
+      sweepStaged(tablePath, written)
+      throw e
+    }
   }
 
-  /** Unit of staged-write work per task: one write task per this many
+  /** Write `df` as parquet straight into `root` through a
+    * [[DirectWriteProtocol]] and return the written files' AddFiles
+    * (paths relative to `root`).
+    */
+  private def directWrite(df: DataFrame, root: Path, partCols: Seq[String],
+      options: Map[String, String], bucketed: Boolean): Seq[AddFile] = {
+    val protocol = new DirectWriteProtocol(root.toString, bucketed)
+    org.apache.spark.sql.classic.graftshim.WriteShim
+      .writeParquet(df, root.toString, partCols, options, protocol)
+    protocol.added
+  }
+
+  /** Unit of write work per task: one write task per this many
     * ESTIMATED frame bytes. Defaults to 4 MiB — Spark's stock
     * `openCostInBytes`, the size below which the scan side itself
     * treats a file as pure overhead. (The session's actual
@@ -601,36 +584,6 @@ object LakeWriter {
   val EST_BYTES_PER_TASK_CONF = "spark.graft.write.estBytesPerTask"
   val DEFAULT_EST_BYTES_PER_TASK: Long = 4L * 1024 * 1024
 
-  /** Size-derived staging parallelism (r21, guide §6 small files /
-    * §1.2 per-task work): an un-shaped staged frame writes with
-    * whatever partitioning its plan produced — on a 32-core local
-    * session a 1 MB commit pays 32 task launches and 32 parquet writer
-    * opens, and leaves 32 sub-openCost shards that every later scan of
-    * the table re-pays (CommitMicroBench: 0.29 s vs 0.12 s for a tiny
-    * commit). Derive the write's task count from the frame's own
-    * optimizer size estimate instead: one task per
-    * [[EST_BYTES_PER_TASK_CONF]] bytes, `coalesce`d (no shuffle; an
-    * AQE rebalance was measured SLOWER than doing nothing at this
-    * size — its extra stage costs more than the parquet opens it
-    * saves). Self-limiting at scale: a frame estimated past
-    * cores × 4 MiB keeps natural parallelism (`coalesce(n >= current)`
-    * is a no-op), so real-data write parallelism is never reduced and
-    * file sizing at scale stays optimizeWrite's job. A caller's
-    * explicit repartition / coalesce / rebalance anywhere in the plan
-    * is a layout instruction (bucket fan-out, bloom-sidecar sharding,
-    * sorted single-file writes) and is honored unchanged.
-    *
-    * Scoped to `computeLight` callers — the machinery-synthesized DML
-    * rewrite frames (kept/updated/merge rows: reads of the table's own
-    * files plus row-level expressions), where serializing the last
-    * stage can only serialize a cheap scan. User append frames are
-    * deliberately NOT folded: a blanket version of this was measured
-    * to regress stateful streaming batch writes (state stores open
-    * per post-shuffle partition: streaming_windowed_counts
-    * 1.33 → 2.13 s) and parse-heavy ingest (pipeline_medallion
-    * 3.89 → 5.24 s) — the frame's last stage carried the gate's real
-    * compute, and the estimate cannot see compute cost.
-    */
   /** A user append qualifies for the adaptive fold only when its LAST
     * stage provably carries nothing but scan + cheap row expressions:
     * Project/Filter over a file/local/range leaf, every expression
@@ -668,6 +621,35 @@ object LakeWriter {
     }
   }
 
+  /** Size-derived write parallelism (guide §6 small files / §1.2
+    * per-task work): an un-shaped frame writes with whatever
+    * partitioning its plan produced — on a 32-core local session a
+    * 1 MB commit pays 32 task launches and 32 parquet writer opens, and
+    * leaves 32 sub-openCost shards that every later scan of the table
+    * re-pays (measured 0.29 s vs 0.12 s for a tiny commit). Derive the write's task count from the frame's own
+    * optimizer size estimate instead: one task per
+    * [[EST_BYTES_PER_TASK_CONF]] bytes, `coalesce`d (no shuffle; an
+    * AQE rebalance was measured SLOWER than doing nothing at this
+    * size — its extra stage costs more than the parquet opens it
+    * saves). Self-limiting at scale: a frame estimated past
+    * cores × 4 MiB keeps natural parallelism (`coalesce(n >= current)`
+    * is a no-op), so real-data write parallelism is never reduced and
+    * file sizing at scale stays optimizeWrite's job. A caller's
+    * explicit repartition / coalesce / rebalance anywhere in the plan
+    * is a layout instruction (bucket fan-out, bloom-sidecar sharding,
+    * sorted single-file writes) and is honored unchanged.
+    *
+    * Scoped to `computeLight` callers — the machinery-synthesized DML
+    * rewrite frames (kept/updated/merge rows: reads of the table's own
+    * files plus row-level expressions), where serializing the last
+    * stage can only serialize a cheap scan. User append frames are
+    * deliberately NOT folded: a blanket version of this was measured
+    * to regress stateful streaming batch writes (state stores open
+    * per post-shuffle partition: streaming_windowed_counts
+    * 1.33 → 2.13 s) and parse-heavy ingest (pipeline_medallion
+    * 3.89 → 5.24 s) — the frame's last stage carried the gate's real
+    * compute, and the estimate cannot see compute cost.
+    */
   private def adaptiveStageCoalesce(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{
       RebalancePartitions, Repartition, RepartitionByExpression}
@@ -774,191 +756,18 @@ object LakeWriter {
     else StructType(table.fields ++ extra.map(_.copy(nullable = true)))
   }
 
-  /** Commits gather footer stats as a Spark job instead of a driver
-    * loop only when BOTH hold — enough files to parallelize over and
-    * enough bytes that footer I/O (not the ~100 ms job launch)
-    * dominates. A micro-batch committing 30 tiny files stays on the
-    * driver; a 10 GB append distributes.
-    */
-  private val DISTRIBUTED_STATS_MIN_FILES = 8
-  /** var only so tests can exercise the distributed path cheaply. */
-  private[lake] var DISTRIBUTED_STATS_MIN_BYTES = 32L * 1024 * 1024
-
-  /** Move staged parquet files into the table root (preserving the
-    * Hive partition layout) and build their AddFile actions with
-    * footer-derived row counts and column min/max stats.
-    *
-    * Large commits run ONE Spark job that does everything per file —
-    * footer stats, empty-split cleanup, the rename into the table
-    * layout, and AddFile construction — and ships back only the
-    * actions: at a 10k-file commit the driver touches no data file
-    * and runs no per-file loop (the serial rename loop was the last
-    * driver-side O(files) step on the write path). Files are
-    * invisible to readers either way until the log commit publishes
-    * them — adoption placement is not the atomicity boundary, the
-    * version file is. Small commits keep the driver loop (job-launch
-    * overhead dominates below the thresholds).
-    */
-  private def adoptStagedFiles(
-      spark: SparkSession, staging: Path, tableRoot: Path,
-      bucketTag: Boolean = false): Seq[AddFile] = {
-    val files = walkParquet(staging)
-    val stagedBytes = files.map(f => Files.size(f)).sum
-    if (files.size >= DISTRIBUTED_STATS_MIN_FILES &&
-        stagedBytes >= DISTRIBUTED_STATS_MIN_BYTES) {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val stagingStr = staging.toString
-      val rootStr = tableRoot.toString
-      spark.sparkContext
-        .parallelize(files.map(_.toString).sorted,
-          math.min(files.size, 64))
-        .flatMap { p =>
-          adoptOne(Paths.get(p), Paths.get(stagingStr), Paths.get(rootStr),
-            q => ParquetFooters.statsWithConf(conf.value, q.toString),
-            bucketTag)
-        }
-        .collect().toSeq.sortBy(_.path)
-    } else {
-      // Small commits stay on the driver but adopt CONCURRENTLY: the
-      // per-file work is a footer read + a rename, ~8 ms each of
-      // filesystem latency, and the r21 commit micro-bench measured
-      // the serial loop at ~0.23 s of a tiny commit's ~0.57 s total —
-      // a constant the bench pays on every one of its ~100+ commits.
-      // Files are independent (distinct paths, adoptOne is already
-      // retry-idempotent for the distributed path), so a parallel
-      // stream keeps the result identical; ordering is restored by
-      // the deterministic sort the caller's actions rely on.
-      val conf = spark.sparkContext.hadoopConfiguration
-      files.asJava.parallelStream()
-        .map[Option[AddFile]](f =>
-          adoptOne(f, staging, tableRoot,
-            q => ParquetFooters.statsWithConf(conf, q.toString), bucketTag))
-        .collect(java.util.stream.Collectors.toList[Option[AddFile]])
-        .asScala.toSeq.flatten.sortBy(_.path)
-    }
-  }
-
-  /** Insert Spark's `_%05d` bucket-id suffix into a staged file's
-    * rel path — bucket id = the writer task index (`part-NNNNN`),
-    * which the staging repartition made equal to the bucket hash.
-    */
-  private[lake] def bucketTagged(rel: String): String = {
-    val slash = rel.lastIndexOf('/')
-    val (dir, name) = rel.splitAt(slash + 1)
-    val m = """part-(\d+)-.*""".r.findFirstMatchIn(name).getOrElse(
-      throw new IllegalStateException(
-        s"staged file $name carries no task index; cannot assign " +
-          "its bucket id"))
-    val tid = m.group(1).toInt
-    val dot = name.indexOf('.')
-    val (base, ext) = if (dot < 0) (name, "") else name.splitAt(dot)
-    dir + base + f"_$tid%05d" + ext
-  }
-
-  /** Inverse of [[bucketTagged]] for sidecar-map lookups: strips the
-    * tag ONLY from the end of the final segment's base name (the
-    * exact spot [[bucketTagged]] inserted it), so an `_NNNNN.`
-    * substring inside a partition directory segment is never touched,
-    * and a >5-digit tag (bucket counts past 99999 widen `%05d`) still
-    * strips.
-    */
-  private[lake] def bucketUntagged(rel: String): String = {
-    val slash = rel.lastIndexOf('/')
-    val (dir, name) = rel.splitAt(slash + 1)
-    val dot = name.indexOf('.')
-    val (base, ext) = if (dot < 0) (name, "") else name.splitAt(dot)
-    dir + base.replaceFirst("""_\d{5,}$""", "") + ext
-  }
-
-  /** Adopt one staged file: drop empty splits, else move it into the
-    * table layout and build its AddFile. Runs on executors for large
-    * commits — no driver state beyond the two base paths — so it MUST
-    * be idempotent under Spark task retry and speculation: a twin
-    * attempt may already have moved this file (or deleted an empty
-    * split), and a naive re-move would turn one transient task
-    * failure into a permanent job failure with half-adopted debris.
-    * Every landing point re-derives the same AddFile from whichever
-    * of staged/target exists.
-    */
-  private[lake] def adoptOne(f: Path, staging: Path, tableRoot: Path,
-      statsOf: Path => (Long, Map[String, String], Map[String, String],
-        Map[String, Long]),
-      bucketTag: Boolean = false): Option[AddFile] = {
-    // bucketed tables: the adoption move doubles as the bucket-id
-    // tagging (part-<taskIndex> == bucket id under the staging
-    // repartition; Spark's `_%05d` name contract) — zero extra I/O,
-    // stays distributed with the rest of adoption
-    val rel =
-      if (bucketTag) bucketTagged(staging.relativize(f).toString)
-      else staging.relativize(f).toString
-    val target = tableRoot.resolve(rel)
-    // all placement I/O rides the DataStore seam (round 17): the
-    // adoption move is the staging->final placement a cloud port
-    // implements as copy+delete (or skips by writing final keys)
-    val ds = DataStore.current
-    def build(source: Path): Option[AddFile] = {
-      val (rows, mins, maxs, nulls) = statsOf(source)
-      if (rows == 0L) { // empty output split: don't pollute the table
-        ds.deleteIfExists(source)
-        None
-      } else {
-        if (source == f) {
-          try { ds.move(f, target); () }
-          catch { // a twin attempt won the move between stat and here
-            case _: java.nio.file.NoSuchFileException
-              if ds.exists(target) => ()
-          }
-        }
-        Some(AddFile(
-          path = rel,
-          partitionValues = partitionValuesOf(rel),
-          size = Files.size(target),
-          numRecords = rows,
-          minValues = mins,
-          maxValues = maxs,
-          nullCounts = nulls))
-      }
-    }
-    if (ds.exists(f)) {
-      try build(f)
-      catch {
-        // the footer read raced a twin attempt: the twin either moved
-        // the file into the table (re-derive from the target) or
-        // deleted an empty split (nothing to adopt)
-        case _: java.io.IOException if !ds.exists(f) =>
-          if (ds.exists(target)) build(target) else None
-      }
-    }
-    else if (ds.exists(target)) build(target) // already adopted
-    else None // empty split a prior attempt already deleted
-  }
-
-  /** Run `body` with parquet timestamps written as INT64 epoch-micros.
-    * Spark's legacy INT96 default carries no usable footer statistics
-    * (parquet deems INT96 min/max unordered), so timestamp range
-    * predicates — the most common analytical filter — would never
-    * skip a lake file. Scoped to LAKE staging writes rather than set
-    * session-wide: driver-facing result parquet (Verify) must keep
-    * the session default, whose naive DuckDB reading the oracle
-    * harness depends on. Reentrant under the engine's concurrent
-    * writes (index builds overlap two lake writes): a depth count
-    * makes the first entrant set and the last restore; a concurrent
-    * write from a DIFFERENT session during the window merely misses
-    * the optimization (stages INT96, no stats) — never correctness.
-    */
-  /** Pin bucketed-scan planning while staging a BUCKETED table's
-    * write. Two individually-reasonable planner rules compose into
+  /** Pin bucketed-scan planning while writing a BUCKETED table's
+    * files. Two individually-reasonable planner rules compose into
     * silent bucket corruption on identity rewrites (compact, DV
-    * purge): the staging `repartition(n, bucketCols)` is elided
+    * purge): the write's `repartition(n, bucketCols)` is elided
     * because the source scan's bucket partitioning already satisfies
     * it, and then auto-bucketed-scan-disabling re-packs that SAME
     * scan into split-based partitions ("Bucketed: false (disabled by
     * query planner)") — task index no longer equals bucket id, and
-    * the adopted files carry wrong bucket tags that a later
+    * the written files carry wrong bucket tags that a later
     * co-located join trusts (observed: compact() of an 8-bucket
     * table wrote 4 task-packed files; the bucketed-join gate then
-    * returned empty). With auto-disabling OFF for the staged write,
+    * returned empty). With auto-disabling OFF for the write,
     * an elided shuffle implies the scan really runs
     * one-partition-per-bucket, so the task-index == bucket-id
     * contract holds on both the elided and the shuffled path.
@@ -978,7 +787,7 @@ object LakeWriter {
       }
     }
 
-  /** Pin AQE's advisory partition size around an optimizeWrite staged
+  /** Pin AQE's advisory partition size around an optimizeWrite
     * write, so the REBALANCE hint bins shuffle output toward the
     * table's target file size instead of the session default. The
     * advisory governs SHUFFLE bytes; parquet encoding + column
@@ -1004,6 +813,19 @@ object LakeWriter {
       }
   }
 
+  /** Run `body` with parquet timestamps written as INT64 epoch-micros.
+    * Spark's legacy INT96 default carries no usable footer statistics
+    * (parquet deems INT96 min/max unordered), so timestamp range
+    * predicates — the most common analytical filter — would never
+    * skip a lake file. Scoped to LAKE data writes rather than set
+    * session-wide: driver-facing result parquet (Verify) must keep
+    * the session default, whose naive DuckDB reading the oracle
+    * harness depends on. Reentrant under the engine's concurrent
+    * writes (index builds overlap two lake writes): a depth count
+    * makes the first entrant set and the last restore; a concurrent
+    * write from a DIFFERENT session during the window merely misses
+    * the optimization (writes INT96, no stats) — never correctness.
+    */
   private def withMicrosTimestamps[A](
       spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
     val key = "spark.sql.parquet.outputTimestampType"
@@ -1148,7 +970,7 @@ object LakeWriter {
         throw new ConflictingCommitException(
           s"conflicting commit: version $v of ${log.tablePath} " +
           s"touched over $EXACT_CONFLICT_MAX_THEIRS files while this " +
-          s"operation (reading version $readVersion) was staging. " +
+          s"operation (reading version $readVersion) was writing. " +
           "Re-run the operation.")
     }
     if (theirs.nonEmpty) ourPaths.foreach { p =>
@@ -1190,10 +1012,9 @@ object LakeWriter {
       throw Option(e.getCause).getOrElse(e)
     }
 
-  /** Fresh scratch dir for one commit's change-data files. Allocated
-    * before a side-thread CDC stage starts, so a failure sweep can
-    * remove the whole dir — committer crumbs (`_SUCCESS`, `.crc`)
-    * included — even if the stage died mid-write.
+  /** Fresh dir for one commit's change-data files. Allocated before a
+    * side-thread CDC stage starts, so a failure sweep can remove the
+    * whole dir even if the stage died mid-write.
     */
   private[lake] def newCdcDir(tablePath: String): Path =
     Paths.get(tablePath).toAbsolutePath.normalize
@@ -1203,7 +1024,8 @@ object LakeWriter {
     * `_change_type`) into `dir` under `_change_data/` and return the
     * CdcFile actions for the commit. One extra scan-shaped write per
     * DML — the Delta CDF trade: pay O(changes) at write time so change
-    * reads never have to diff rewritten files.
+    * reads never have to diff rewritten files. Written through the
+    * same [[DirectWriteProtocol]] as the data files.
     */
   private[lake] def stageCdc(df: DataFrame, tablePath: String,
       dir: Path): Seq[CdcFile] = {
@@ -1211,17 +1033,16 @@ object LakeWriter {
     // CDC frames are machinery-synthesized (filters/projections of the
     // DML's own touched files plus a lit change-type column) — the
     // same computeLight class as the rewrite frames, so the
-    // size-adaptive staging fold applies
-    adaptiveStageCoalesce(df).write.mode("overwrite").parquet(dir.toString)
-    walkParquet(dir).map { f =>
-      CdcFile(root.relativize(f.toAbsolutePath.normalize).toString,
-        Files.size(f))
+    // size-adaptive fold applies
+    directWrite(adaptiveStageCoalesce(df), dir, Nil, Map.empty,
+      bucketed = false).map { a =>
+      CdcFile(root.relativize(dir.resolve(a.path)).toString, a.size)
     }
   }
 
-  /** Best-effort sweep of what a FAILED write staged: the adopted data
-    * files by path, and the whole (quiescent) cdc scratch dir,
-    * committer crumbs (`_SUCCESS`, `.crc`) included. Staged files are
+  /** Best-effort sweep of what a FAILED write left: the written data
+    * files and bloom sidecars by path, and the whole (quiescent) cdc
+    * dir. Written files are
     * unreferenced by the log until the commit, so the sweep leaves the
     * table exactly as before instead of leaving untracked debris for
     * vacuum to age out. Never throws: it runs on a failure path that

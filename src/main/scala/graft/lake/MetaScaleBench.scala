@@ -110,7 +110,7 @@ object MetaScaleBench {
             Map("id" -> "0"), Map("id" -> "0"), Map("id" -> 0L)): Action
         })
     }
-    // full write path (stage + commit) against the 10⁶-file table,
+    // full write path (write + commit) against the 10⁶-file table,
     // cold cache: APPEND is metadata-light since round 15 — this leg
     // must stay O(commit); before the change it replayed the full
     // file list (seconds + GBs) per append

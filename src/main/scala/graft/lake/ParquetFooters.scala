@@ -25,9 +25,9 @@ object ParquetFooters {
     statsWithConf(spark.sparkContext.hadoopConfiguration, path)
 
   /** Executor-side variant: takes a plain Hadoop configuration so the
-    * footer read can run inside a Spark job (see
-    * `LakeWriter.adoptStagedFiles` — large commits gather stats
-    * distributed, not in a driver loop).
+    * footer read can run inside a Spark task (see
+    * [[DirectWriteProtocol]] — each write task reads the footers of the
+    * files it just wrote).
     */
   def statsWithConf(conf: org.apache.hadoop.conf.Configuration, path: String)
       : (Long, Map[String, String], Map[String, String], Map[String, Long]) = {

@@ -163,7 +163,7 @@ object SimilarityOps {
     // canonical nullable array<float>: schema enforcement must see
     // the same type on every rebuild regardless of the source frame's
     // containsNull flag. The two index tables are independent, so
-    // their writes (each a full stage/adopt/commit cycle) run
+    // their writes (each a full write/commit cycle) run
     // CONCURRENTLY — on a fused build+probe path the commits are a
     // measurable fraction of build wall-clock.
     import scala.concurrent.{Await, Future}

@@ -738,7 +738,7 @@ object LakeQueries {
         // parse_json(to_json(struct)) with the direct
         // to_variant_object(struct) encode: the JSON round-trip
         // rendered every row to text and re-parsed it just to reach
-        // the same variant value (VariantProbe: 1.12 s -> 0.27 s for
+        // the same variant value (measured 1.12 s -> 0.27 s for
         // the encode leg; variant_get extraction byte-identical, 0
         // exceptAll diff rows at sf0.1, oracle hash unchanged).
         val tW = System.nanoTime()

@@ -33,6 +33,38 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   def tablePath(name: String): String =
     tmpDir("graft-test") + "/" + name
 
+  /** Every file under the lake table at `path` (its log aside) must be
+    * named by the log — a data file some version's AddFile names
+    * (tombstoned files stay until VACUUM), its deletion vector or bloom
+    * sidecar, or a change-data file a CdcFile names — and every live
+    * file must be on disk. A failed write leaves nothing behind, and no
+    * write leaves committer crumbs (`.crc`, `_SUCCESS`, `_temporary`).
+    */
+  def assertNoStagedDebris(path: String): Unit = {
+    import graft.lake.{AddFile, CdcFile, LakeLog, LakeTable}
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
+    val logRoot = root.resolve(LakeLog.LOG_DIR)
+    val s = Files.walk(root)
+    val onDisk = try s.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && !p.startsWith(logRoot))
+      .map(p => root.relativize(p).toString).toSet
+    finally s.close()
+    val log = new LakeLog(path)
+    val named = log.listVersionFiles.map(LakeLog.versionOf)
+      .flatMap(log.readVersion).flatMap {
+        case a: AddFile => a.path +: (a.dvPath.toSeq ++ a.bloomPath)
+        case c: CdcFile => Seq(c.path)
+        case _ => Nil
+      }.toSet
+    val live = LakeTable.forPath(spark, path).snapshot().files
+      .map(_.path).toSet
+    assert(onDisk -- named === Set.empty[String],
+      s"staged debris left behind: ${(onDisk -- named).mkString(", ")}")
+    assert(live -- onDisk === Set.empty[String],
+      s"live files missing: ${(live -- onDisk).mkString(", ")}")
+  }
+
   override def afterAll(): Unit = {
     // One session is shared across suites in a forked test JVM; don't
     // stop it. Only this suite's directories go.

@@ -290,20 +290,4 @@ class LakeBucketingSuite extends SparkSuite {
     // null-equality matches nothing but must not throw
     assert(t.filter($"k" === lit(null)).count() === 0L)
   }
-
-  test("bucketUntagged strips only the final segment's trailing tag") {
-    import LakeWriter.bucketUntagged
-    // tag at end of base name: stripped
-    assert(bucketUntagged("part-00003-uuid_00003.snappy.parquet")
-      === "part-00003-uuid.snappy.parquet")
-    // _NNNNN. inside a partition DIRECTORY segment: untouched
-    assert(bucketUntagged("p=a_00001.x/part-000-u_00007.parquet")
-      === "p=a_00001.x/part-000-u.parquet")
-    // >5-digit tag (bucket counts past 99999 widen %05d): stripped
-    assert(bucketUntagged("part-0-u_123456.parquet")
-      === "part-0-u.parquet")
-    // no tag: identity
-    assert(bucketUntagged("p=1/part-0-uuid.parquet")
-      === "p=1/part-0-uuid.parquet")
-  }
 }

@@ -314,10 +314,7 @@ class LakeConstraintSuite extends SparkSuite {
       .select("id", "v").as[(Long, Double)].collect().toMap
     assert(pre.size === 20 && pre.values.forall(_ == 0.0))
     // scratch staging cleaned up after commit
-    val stray = java.nio.file.Files.list(java.nio.file.Paths.get(path))
-      .filter(_.getFileName.toString.startsWith(".staging"))
-      .count()
-    assert(stray === 0L)
+    assertNoStagedDebris(path)
   }
 
   test("MERGE persists cdc: upsert emits preimage delete + postimage insert") {

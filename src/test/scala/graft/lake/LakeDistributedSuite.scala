@@ -4,64 +4,81 @@ import graft.SparkSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The driver-side stand-ins distributed in round 2: footer stats as a
-  * Spark job on large commits, parallel vacuum deletes, distributed
-  * history() reads. Each test crosses the respective threshold so the
-  * distributed path actually runs.
+/** Work kept off the driver: footer stats read by the write tasks,
+  * parallel vacuum deletes, distributed history() reads. Each test
+  * crosses the respective threshold so the distributed path actually
+  * runs.
   */
 class LakeDistributedSuite extends SparkSuite {
   import spark.implicits._
 
-  test("large commit gathers footer stats distributed (>= 8 files)") {
+  test("write tasks gather each file's footer stats (>= 8 files)") {
     val path = tablePath("dist-stats")
-    val saved = LakeWriter.DISTRIBUTED_STATS_MIN_BYTES
-    LakeWriter.DISTRIBUTED_STATS_MIN_BYTES = 0L
-    val res = try LakeWriter.write(
-      (1L to 1000L).toDF("id").repartition(10), path)
-    finally LakeWriter.DISTRIBUTED_STATS_MIN_BYTES = saved
+    val res = LakeWriter.write((1L to 1000L)
+      .map(i => (i, if (i % 7 == 0) None else Some(s"s$i")))
+      .toDF("id", "s").repartition(10), path)
     assert(res.added.size >= 8)
-    // stats present and correct on every file
+    // every committed AddFile carries exactly its file's footer stats
     val snap = LakeTable.forPath(spark, path).snapshot()
+    assert(snap.files.map(_.path).toSet === res.added.map(_.path).toSet)
+    snap.files.foreach { a =>
+      val (rows, mins, maxs, nulls) =
+        ParquetFooters.stats(spark, Paths.get(path, a.path).toString)
+      assert(a.numRecords === rows, a.path)
+      assert(a.minValues === mins, a.path)
+      assert(a.maxValues === maxs, a.path)
+      assert(a.nullCounts === nulls, a.path)
+    }
     assert(snap.files.map(_.numRecords).sum === 1000L)
-    assert(snap.files.forall(f => f.minValues.contains("id") &&
-      f.maxValues.contains("id")))
+    assert(snap.files.map(_.nullCounts("s")).sum === 142L)
     // and data skipping still works off those stats
-    val global = snap.files.map(_.minValues("id").toLong).min
-    assert(global === 1L)
+    assert(snap.files.map(_.minValues("id").toLong).min === 1L)
   }
 
-  test("file adoption is idempotent under task retry and speculation") {
-    // the distributed adoption step runs Files.move on executors; a
-    // retried (or speculative twin) task re-visits files its first
-    // attempt already moved — every landing point must re-derive the
-    // same AddFile instead of failing the job
-    val root = Paths.get(tablePath("dist-adopt-retry"))
-    val staging = root.resolve("_staging")
-    Files.createDirectories(staging.resolve("k=1"))
-    val staged = staging.resolve("k=1/part-0.parquet")
-    Files.write(staged, Array[Byte](1, 2, 3, 4))
-    val stats = Map(staged.toString ->
-      ((4L, Map("id" -> "1"), Map("id" -> "9"), Map("id" -> 0L))))
-    def adopt() = LakeWriter.adoptOne(staged, staging, root,
-      p => stats(staged.toString))
-    val first = adopt()
-    assert(first.exists(_.path === "k=1/part-0.parquet"))
-    assert(!Files.exists(staged) &&
-      Files.exists(root.resolve("k=1/part-0.parquet")))
-    // attempt 2: staged file gone, target in place — same AddFile back
-    val second = adopt()
-    assert(second === first, "retried adoption diverged")
-    assert(Files.exists(root.resolve("k=1/part-0.parquet")))
-
-    // empty split: first attempt deletes it, the retry sees nothing —
-    // both return None, neither throws
-    val empty = staging.resolve("k=1/part-1.parquet")
-    Files.write(empty, Array[Byte](0))
-    def adoptEmpty() = LakeWriter.adoptOne(empty, staging, root,
-      _ => (0L, Map.empty, Map.empty, Map.empty))
-    assert(adoptEmpty().isEmpty)
-    assert(!Files.exists(empty))
-    assert(adoptEmpty().isEmpty)
+  test("write protocol: an aborted attempt leaves nothing, the committed one lands") {
+    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.{JobContextImpl, TaskAttemptContextImpl}
+    import org.apache.spark.internal.io.FileNameSpec
+    val root = Paths.get(tablePath("dist-attempts"))
+    // a real parquet body for each attempt to "write": task commit
+    // reads its footer
+    val src = tmpDir("dist-attempts-src")
+    (1L to 5L).toDF("id").coalesce(1).write.mode("overwrite").parquet(src)
+    val body = LakeWriter.walkParquet(Paths.get(src)).head
+    val conf = spark.sparkContext.hadoopConfiguration
+    val jobId = new JobID("attempts", 0)
+    val job = new JobContextImpl(conf, jobId)
+    val protocol = new DirectWriteProtocol(root.toString, bucketed = false)
+    protocol.setupJob(job)
+    // two attempts of task 3, each writing one file plus Hadoop's crc
+    def runAttempt(n: Int): (TaskAttemptContextImpl, java.nio.file.Path) = {
+      val ctx = new TaskAttemptContextImpl(conf,
+        new TaskAttemptID(new TaskID(jobId, TaskType.MAP, 3), n))
+      protocol.setupTask(ctx)
+      val f = Paths.get(protocol.newTaskTempFile(ctx, Some("k=1"),
+        FileNameSpec("", ".c000.snappy.parquet")))
+      Files.createDirectories(f.getParent)
+      Files.copy(body, f)
+      Files.write(f.resolveSibling(s".${f.getFileName}.crc"), Array[Byte](1))
+      (ctx, f)
+    }
+    val (first, f0) = runAttempt(0)
+    protocol.abortTask(first)
+    val (second, f1) = runAttempt(1)
+    assert(f0 != f1, "attempts of one task must not share a file name")
+    val msg = protocol.commitTask(second)
+    protocol.onTaskCommit(msg)
+    protocol.commitJob(job, Seq(msg))
+    val rel = root.relativize(f1).toString
+    assert(protocol.added.map(_.path) === Seq(rel))
+    val add = protocol.added.head
+    assert(add.numRecords === 5L && add.partitionValues === Map("k" -> "1"))
+    assert(add.minValues === Map("id" -> "1") && add.size === Files.size(f1))
+    // on disk: the committed attempt's file alone, no crc sibling
+    val s = Files.walk(root)
+    val onDisk = try s.iterator.asScala.filter(Files.isRegularFile(_))
+      .map(root.relativize(_).toString).toSet finally s.close()
+    assert(onDisk === Set(rel))
   }
 
   test("history() over 128+ commits reads the log distributed") {

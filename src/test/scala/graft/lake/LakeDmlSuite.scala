@@ -153,26 +153,6 @@ class LakeDmlSuite extends SparkSuite {
     assertNoStagedDebris(path)
   }
 
-  /** Every file under the table root (log aside) must be referenced by
-    * the current snapshot — a failed DML may leave NOTHING staged.
-    */
-  private def assertNoStagedDebris(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    val logRoot = root.resolve(LakeLog.LOG_DIR)
-    val s = java.nio.file.Files.walk(root)
-    val onDisk = try {
-      import scala.jdk.CollectionConverters._
-      s.iterator.asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p) &&
-          !p.startsWith(logRoot))
-        .map(p => root.relativize(p).toString).toSet
-    } finally s.close()
-    val live = LakeTable.forPath(spark, path).snapshot().files
-      .map(_.path).toSet
-    assert(onDisk === live,
-      s"staged debris left behind: ${(onDisk -- live).mkString(", ")}")
-  }
-
   test("failed UPDATE sweeps its staged data and CDC files") {
     val path = tablePath("dml-sweep")
     LakeWriter.write(seed, path)

@@ -274,8 +274,8 @@ class LakeObjectStoreSuite extends StoreContractSuite {
     LakeWriter.write(seed, path) // v0
     val t = LakeTable.forPath(spark, path)
     // a kill -9'd writer: files staged into the table layout, no
-    // commit, no sweep (stageAndAdopt is exactly the pre-publish step)
-    val staged = LakeWriter.stageAndAdopt(
+    // commit, no sweep (writeFiles is exactly the pre-publish step)
+    val staged = LakeWriter.writeFiles(
       Seq((999L, "z", 9.0)).toDF("id", "k", "v"), path, Nil)
     assert(staged.nonEmpty)
     // readers replay the log, not the directory: the orphan is invisible
