@@ -31,7 +31,7 @@ final class DirectWriteProtocol(root: String, bucketed: Boolean)
   /** This task attempt's files, relative to `root` (executor side). */
   @transient private var attemptFiles: ArrayBuffer[String] = _
   /** AddFiles of the tasks committed so far (driver side). */
-  @transient private lazy val committed = ArrayBuffer.empty[AddFile]
+  @transient private val committed = ArrayBuffer.empty[AddFile]
   @transient private var result: Seq[AddFile] = Nil
 
   /** The job's AddFiles, once [[commitJob]] ran. */
