@@ -20,11 +20,12 @@ import org.apache.spark.sql.types.StructType
   * [[graft.sources.ColumnarLakeFileIndex]]: discovery scans plan
   * through the distributed checkpoint scan, and `subset` fetches the
   * touched AddFiles with a path-filtered distributed pass — the
-  * driver holds O(touched chunk), never O(table). The rewrite
-  * pipeline downstream ([[StreamedRewrite.rewrite]],
-  * [[LakeTable.readFilesWithMeta]], [[LakeTable.stageDeletionVectors]])
-  * is the same for both: it receives a subset Snapshot per chunk,
-  * which carries exactly the chunk's files.
+  * driver holds O(touched chunk), never O(table). The apply step
+  * downstream ([[StreamedRewrite.rewrite]], which reads chunks
+  * through [[LakeTable.readFilesWithMeta]] and marks rows through
+  * [[LakeTable.stageDeletionVectors]]) is the same for both: it
+  * receives a subset Snapshot per chunk, which carries exactly the
+  * chunk's files.
   */
 private[lake] sealed trait DmlPlan {
   def table: LakeTable

@@ -18,8 +18,11 @@ import org.apache.spark.sql.functions._
   *  1. inner/semi join source × target to find *touched files*;
   *  2. full-outer join source × (rows of touched files only), classify
   *     each row matched / target-only / source-only, apply the clause
-  *     list in order (first clause whose condition holds wins);
-  *  3. atomically commit RemoveFile(touched) + AddFile(rewritten).
+  *     list in order (first clause whose condition holds wins) — the
+  *     winning clause is the row's keep / update / delete kind;
+  *  3. [[StreamedRewrite.rewrite]] applies those row changes, with the
+  *     inserts, copy-on-write or with deletion vectors, in one atomic
+  *     commit.
   *
   * The join condition is an arbitrary expression — non-equi and RLIKE
   * conditions (J5, `etl/05:100-107`) plan as broadcast-nested-loop
@@ -187,7 +190,7 @@ final class LakeMergeBuilder private[lake] (
     // expensive source plan would be recomputed each time.
     val src = source.withColumn(SRC, lit(true))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try executeWith(aliasTgt, src)
+    try executeStaged(aliasTgt, src)
     catch {
       // a concurrent twin of the same app committed this txn while we
       // were staging: its effect IS this merge's effect — success
@@ -206,33 +209,8 @@ final class LakeMergeBuilder private[lake] (
     finally { src.unpersist(false); () }
   }
 
-  private def executeWith(
-      aliasTgt: DataFrame => DataFrame, src: DataFrame): Unit = {
-    // The rewritten data and the persisted CDC derive from the SAME
-    // frame; when any clause expression (or the source plan) is
-    // non-deterministic, that frame is materialized to scratch parquet
-    // ONCE so a second evaluation can't diverge rand()/uuid()/
-    // current_timestamp between the data files and the CDC files
-    // (cache blocks are best-effort; a parquet stage is not).
-    // Deterministic merges — the common case — keep today's plan
-    // shape: re-evaluation is byte-identical by definition.
-    val scratches = scala.collection.mutable.Buffer.empty[java.nio.file.Path]
-    def materializeIfNonDeterministic(df: DataFrame): DataFrame =
-      if (df.queryExecution.analyzed.exists(
-          _.expressions.exists(!_.deterministic))) {
-        val dir = java.nio.file.Paths.get(table.tablePath,
-          s".staging-mrg-${java.util.UUID.randomUUID()}")
-        df.write.mode("overwrite").parquet(dir.toString)
-        scratches += dir
-        table.spark.read.parquet(dir.toString)
-      } else df
-    try executeStaged(aliasTgt, src, materializeIfNonDeterministic)
-    finally scratches.foreach(LakeWriter.deleteRecursively)
-  }
-
   private def executeStaged(
-      aliasTgt: DataFrame => DataFrame, src: DataFrame,
-      materializeIfNonDeterministic: DataFrame => DataFrame): Unit = {
+      aliasTgt: DataFrame => DataFrame, src: DataFrame): Unit = {
     val spark = table.spark
     // DML plan (VERDICT r14 #2): under the columnar conf the
     // touched-file discovery, the insert anti-join, and the touched
@@ -252,18 +230,10 @@ final class LakeMergeBuilder private[lake] (
         "MERGE with matched clauses", table.tablePath)
     val fields = plan.schema.fields.toSeq
     val condExpr = expr(condition)
-    val FILE = "__graft_file"
-    val RID = "__graft_rid"
+    import StreamedRewrite.{Changes, FILE, IDX, KIND, post}
     val SRC = "__graft_src_present"
     val IDXC = "__graft_clause"
     val MATCHED = "__graft_matched"
-    val DVFILE = "__graft_dv_file"
-    val DVIDX = "__graft_dv_idx"
-    // Merge-on-read MERGE (deletion-vector tables): clause-hit rows
-    // are soft-deleted via DV sidecars and only the UPDATED versions
-    // and inserts are written — write volume O(clause-hit rows)
-    // instead of O(touched files).
-    val dvMode = LakeTable.dvEnabled(plan.metadata)
     // Row-tracked tables ([[RowTracking]]): target-derived rewrite
     // rows (updates AND untouched keep-side rows) carry their ids
     // into the new files; merge-INSERTED rows are new logical rows
@@ -271,27 +241,6 @@ final class LakeMergeBuilder private[lake] (
     // materialized id is null, so the read-side coalesce falls
     // through to base + row_index).
     val rt = RowTracking.enabled(plan.metadata.properties)
-
-    // Single-evaluation discipline: each side's combined frame feeds up
-    // to three consumers (dup fail-fast, table rewrite, CDC). A
-    // non-deterministic frame is staged to parquet (durable, so rand()/
-    // uuid() can't diverge between consumers); a deterministic one is
-    // cached so the target×source join runs once per MERGE instead of
-    // once per consumer — a lost block recomputes byte-identically by
-    // definition. MEMORY_AND_DISK, not UPDATE's DISK_ONLY: merge
-    // rewrite frames are hot for milliseconds between the dup check
-    // and the two writes, per-block spill already bounds memory use
-    // under pressure, and the A/B on the 4-merge medallion measured
-    // DISK_ONLY ~8% slower (5.34 vs 4.95 s min-of-6).
-    val caches = scala.collection.mutable.Buffer.empty[DataFrame]
-    def evaluateOnce(df: DataFrame): DataFrame = {
-      val out = materializeIfNonDeterministic(df)
-      if (out eq df) {
-        out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        caches += out
-      }
-      out
-    }
 
     def qualTgt(name: String): Column =
       col(targetAlias.map(a => s"$a.`$name`").getOrElse(s"`$name`"))
@@ -382,12 +331,14 @@ final class LakeMergeBuilder private[lake] (
     val deleteIdxs = allClauses.zipWithIndex.collect {
       case (_: DeleteClause, i) => i + 1
     }
-    val keep =
-      if (deleteIdxs.isEmpty) lit(true)
-      else !col(IDXC).isin(deleteIdxs: _*)
     val updateIdxs = allClauses.zipWithIndex.collect {
       case (_: UpdateClause, i) => i + 1
     }
+    // the winning clause as a row-change kind
+    val kindOf = when(col(IDXC).isin(updateIdxs: _*),
+        lit(StreamedRewrite.UPDATE))
+      .when(col(IDXC).isin(deleteIdxs: _*), lit(StreamedRewrite.DELETE))
+      .otherwise(lit(StreamedRewrite.KEEP))
     // clause-applied new value for a field: the winning update
     // clause's expression, the original target value otherwise
     def newValue(f: org.apache.spark.sql.types.StructField): Column = {
@@ -401,17 +352,6 @@ final class LakeMergeBuilder private[lake] (
         acc.when(col(IDXC) === i, e)
       }.otherwise(qualTgt(f.name)).cast(f.dataType)
     }
-    def newName(n: String) = s"_graft_mrg_$n"
-    // newSide: CDC postimages (table columns only); newSideData:
-    // the rows actually written, carrying the row id on tracked
-    // tables
-    def newSide(df: DataFrame): DataFrame =
-      df.select(fields.map(f => col(s"`${newName(f.name)}`").as(f.name)): _*)
-    def newSideData(df: DataFrame): DataFrame =
-      df.select(fields.map(f => col(s"`${newName(f.name)}`").as(f.name)) ++
-        (if (rt) Seq(col(s"`${RowTracking.COL}`")) else Nil): _*)
-    def oldSide(df: DataFrame): DataFrame =
-      df.select(fields.map(f => col(s"`${f.name}`")): _*)
     // Delta semantics: error if one target row matches several source
     // rows while the outcome would be nondeterministic — any update,
     // or a conditional delete. An unconditional delete is unambiguous
@@ -423,14 +363,12 @@ final class LakeMergeBuilder private[lake] (
       case DeleteClause(c) => c.isDefined
     }
 
-    /** Touched rows of `relPaths` with (RID, DV identity) columns. */
+    /** Touched rows of `relPaths` with their (FILE, IDX) identity. */
     def tgtTouchedFor(snapT: Snapshot, relPaths: Seq[String]): DataFrame =
       aliasTgt(
         table.readFilesWithMeta(snapT, relPaths, withRowIds = rt)
-        .withColumn(RID, concat_ws("#",
-          col("_metadata.file_path"), col("_metadata.row_index")))
-        .withColumn(DVFILE, col("_metadata.file_path"))
-        .withColumn(DVIDX, col("_metadata.row_index"))
+        .withColumn(FILE, col("_metadata.file_path"))
+        .withColumn(IDX, col("_metadata.row_index"))
         .drop(graft.sources.LakeDataSource.META))
 
     def joinedFor(tgtTouched: DataFrame): DataFrame =
@@ -440,28 +378,27 @@ final class LakeMergeBuilder private[lake] (
         // By-source-only merge: no clause reads source values, so
         // only a match FLAG is needed. A plain left-outer would
         // duplicate a target row that matches k source rows (every
-        // copy kept, clause 0); semi-join + RID equi-join keeps
+        // copy kept, clause 0); semi-join + (FILE, IDX) equi-join keeps
         // exactly one copy per target row. (With matched clauses
         // present the duplicate either errors via the multi-match
         // check or is deleted, so this case is the only exposure.)
-        val matchedRids = tgtTouched.join(src, condExpr, "left_semi")
-          .select(col(RID)).withColumn(SRC, lit(true))
-        tgtTouched.join(matchedRids, Seq(RID), "left_outer")
+        val matchedRows = tgtTouched.join(src, condExpr, "left_semi")
+          .select(col(FILE), col(IDX)).withColumn(SRC, lit(true))
+        tgtTouched.join(matchedRows, Seq(FILE, IDX), "left_outer")
       }
 
-    /** The combined frame: (old values, clause-applied new values,
-      * matched flag, winning clause index) — the duplicate-match
-      * fail-fast, the rewritten data, the CDC preimage and the CDC
-      * postimage are all column-subsets of it.
+    /** The chunk's row-change frame ([[StreamedRewrite.Changes]]):
+      * old values, clause-applied new values, the winning clause as a
+      * kind, the (FILE, IDX) identity, plus the matched flag the
+      * duplicate-match check reads.
       */
-    def combinedRawFor(joined: DataFrame): DataFrame =
+    def changesFor(joined: DataFrame): DataFrame =
       joined.withColumn(IDXC, clauseIdx).select(
         fields.map(f => qualTgt(f.name).cast(f.dataType).as(f.name)) ++
-        fields.map(f => newValue(f).as(newName(f.name))) ++
-        Seq(col(RID), matched.as(MATCHED), col(IDXC)) ++
+        fields.map(f => newValue(f).as(post(f.name))) ++
+        Seq(kindOf.as(KIND), col(FILE), col(IDX), matched.as(MATCHED)) ++
         (if (rt)
-          Seq(qualTgt(RowTracking.COL).as(RowTracking.COL)) else Nil) ++
-        (if (dvMode) Seq(col(DVFILE), col(DVIDX)) else Nil): _*)
+          Seq(qualTgt(RowTracking.COL).as(RowTracking.COL)) else Nil): _*)
 
     // ---- touched-file discovery ------------------------------------------
     val matchedPathsDF: Option[DataFrame] =
@@ -477,8 +414,6 @@ final class LakeMergeBuilder private[lake] (
       .getOrElse(StreamedRewrite.noneTouched)
 
     // ---- not-matched side: anti-join → inserts ---------------------------
-    // evaluated once: the same rows feed the table write AND the CDC
-    // insert records, without re-running the anti-join
     def insertsFrame(): Option[DataFrame] =
       if (insertClauses.isEmpty) None else {
         val unmatched =
@@ -488,7 +423,7 @@ final class LakeMergeBuilder private[lake] (
           when(lit(false), lit(0))) { case (acc, (cl, i)) =>
             acc.when(clauseCond(cl.cond), lit(i + 1))
         }.otherwise(lit(0))
-        Some(evaluateOnce(
+        Some(
           unmatched.withColumn(IDXC, insertIdx)
             .filter(col(IDXC) > 0)
             .select(fields.map { f =>
@@ -500,101 +435,46 @@ final class LakeMergeBuilder private[lake] (
               values.foldLeft(when(lit(false), lit(null))) {
                 case (acc, (i, e)) => acc.when(col(IDXC) === i, e)
               }.otherwise(lit(null)).cast(f.dataType).as(f.name)
-            }: _*)))
+            }: _*))
       }
 
     // ---- staging: per touched chunk, then one commit ---------------------
-    // A RID (file, row) lives in exactly one chunk, so the per-chunk
+    // A target row lives in exactly one chunk, so the per-chunk
     // duplicate-match check is exact. The inserts are global (one
     // anti-join against the whole table) and stage with the LAST
-    // chunk's data and CDC writes — alone when no file is touched.
+    // chunk — alone when no file is touched.
     val params = Map("condition" -> condition,
       "matchedClauses" -> matchedClauses.size.toString,
       "notMatchedClauses" -> insertClauses.size.toString,
       "notMatchedBySourceClauses" -> bySourceClauses.size.toString)
-    StreamedRewrite.rewrite(table, plan, chunks, "MERGE", params, dvMode,
-      txn) { (_, paths, snapC, last, staged) =>
-      try {
-        // ONE combined frame; evaluateOnce (stage-to-parquet or cache)
-        // guarantees the target×source join runs a single time for all
-        // four consumers
-        val combined: Option[DataFrame] =
-          if (paths.isEmpty) None
-          else Some(evaluateOnce(
-            combinedRawFor(joinedFor(tgtTouchedFor(snapC, paths)))))
-        // The dup check is an agg over the shared combined frame (no
-        // second join evaluation), launched on its own thread so it
-        // OVERLAPS the rewrite write — both consumers materialize the
-        // same cache blocks under Spark's block locks. The result is
-        // awaited before the DV stage and the commit; on a dup the
-        // staged (still unreferenced) files are swept and the operation
-        // fails exactly as an eager check would.
-        val dupCheck = combined.filter(_ => ambiguous).map { c =>
-          LakeWriter.inParallel("graft-merge-dup-check") {
-            c.filter(col(MATCHED)).groupBy(col(RID))
-              .count().filter(col("count") > 1).limit(1).count()
-          }
+    StreamedRewrite.rewrite(table, plan, chunks, "MERGE", params, txn) { c =>
+      // evaluated once: the target×source join runs a single time for
+      // the duplicate check, the data, the CDC and the deletion vectors
+      val rows =
+        if (c.paths.isEmpty) None
+        else Some(c.evaluated(
+          changesFor(joinedFor(tgtTouchedFor(c.snap, c.paths)))))
+      // an agg over the evaluated frame, on its own thread so it
+      // OVERLAPS the data and CDC writes (both read the same cache
+      // blocks under Spark's block locks); its verdict lands before
+      // any deletion vector is staged — duplicate rows would write
+      // duplicate DV indices — and before the commit
+      val dupCheck = rows.filter(_ => ambiguous).map { r =>
+        LakeWriter.inParallel("graft-merge-dup-check") {
+          r.filter(col(MATCHED)).groupBy(col(FILE), col(IDX))
+            .count().filter(col("count") > 1).limit(1).count()
         }
-        // persisted CDC for the matched side: every clause-hit row's
-        // preimage as delete; update-clause rows also emit a postimage
-        // insert (the same representation changes() uses everywhere)
-        val cdcMatched = combined.map { c =>
-          val pre = oldSide(c.filter(col(IDXC) > 0))
-            .withColumn("_change_type", lit("delete"))
-          if (updateIdxs.isEmpty) pre
-          else pre.unionByName(
-            newSide(c.filter(col(IDXC).isin(updateIdxs: _*)))
-              .withColumn("_change_type", lit("insert")))
-        }
-        // copy-on-write rewrites the surviving rows; merge-on-read
-        // soft-deletes every clause-hit row and appends only the
-        // update-clause rows' new versions
-        val rewritten = combined.flatMap { c =>
-          if (!dvMode) Some(newSideData(c.filter(keep)))
-          else if (updateIdxs.isEmpty) None
-          else Some(newSideData(c.filter(col(IDXC).isin(updateIdxs: _*))))
-        }
-        val inserts = if (last) insertsFrame() else None
-        val output = (rewritten, inserts) match {
-          // allowMissingColumns: on tracked tables the rewrite side
-          // carries the id column and the insert side deliberately
-          // lacks it (fresh rows get fresh ids) — it null-fills
-          case (Some(r), Some(i)) =>
-            Some(r.unionByName(i, allowMissingColumns = true))
-          case (r, i) => r.orElse(i)
-        }
-        // the CDC write overlaps the data write on its own thread —
-        // the two stage to disjoint dirs and share the same frames, so
-        // wall time is max(data, cdc) instead of the sum
-        (cdcMatched.toSeq ++
-          inserts.map(_.withColumn("_change_type", lit("insert"))).toSeq)
-          .reduceOption(_.unionByName(_))
-          .foreach(df => staged.startCdc("graft-merge-cdc-stage")(df))
-        output.foreach { df =>
-          if (plan.metadata.constraints.nonEmpty)
-            LakeWriter.enforceConstraints(df.drop(RowTracking.COL),
-              plan.metadata.constraints, table.tablePath)
-          staged.data.append(LakeWriter.writeFiles(df, table.tablePath,
-            plan.partitionColumns, ColumnMapping.overrides(plan.metadata),
-            plan.metadata.properties, computeLight = true))
-        }
-        staged.joinCdc()
-        // the dup verdict lands BEFORE DV staging: duplicate RIDs
-        // would write duplicate DV indices and fail inside the staging
-        // job instead of with the canonical error
-        dupCheck.foreach { f =>
+      }
+      Changes(rows, updates = updateIdxs.nonEmpty,
+        inserts = if (c.last) insertsFrame().map(c.evaluated) else None,
+        verify = () => dupCheck.foreach { f =>
           if (LakeWriter.awaitTask(f) > 0)
             throw new IllegalStateException(
               "MERGE failed: a target row was matched by multiple source " +
               "rows with update/delete clauses present; merge results " +
               "would be nondeterministic. Deduplicate the source on the " +
               "merge key.")
-        }
-        if (dvMode) combined.foreach { c =>
-          staged.stageDv(snapC, paths,
-            c.filter(col(IDXC) > 0).select(col(DVFILE), col(DVIDX)))
-        }
-      } finally { caches.foreach(_.unpersist(false)); caches.clear() }
+        })
     }
   }
 

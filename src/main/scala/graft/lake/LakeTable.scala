@@ -696,13 +696,12 @@ final class LakeTable private (
     * whole files are dropped from the log without reading data — the
     * matched paths stream from the plan into the commit's tombstones,
     * so the driver never holds the matched set, and the commit
-    * conflicts exactly on those paths. Other predicates rewrite (or,
-    * with deletion vectors, mark) the touched files.
+    * conflicts exactly on those paths. Other predicates go through
+    * [[rewriteWhere]].
     */
   def delete(condition: String): Unit = {
     val plan = dmlPlan()
     LakeTable.assertNotAppendOnly(plan.metadata, "DELETE", tablePath)
-    val cond = expr(condition)
     plan.partitionOnlyPaths(condition) match {
       case Some((matched, paths)) => // metadata-only path
         if (matched == 0) return
@@ -714,91 +713,21 @@ final class LakeTable private (
           Seq(CommitInfo(now, "DELETE", Map("predicate" -> condition)))
         }
         ()
-      case None if LakeTable.dvEnabled(plan.metadata) =>
-        deleteWithDv(plan, cond, condition)
-      case None =>
-        if (plan.isEmpty) return
-        val hit = coalesce(cond, lit(false))
-        val chunks = StreamedRewrite.split(this, plan,
-          plan.withMetaDF.filter(hit).select(col("_metadata.file_path")))
-        if (chunks.count == 0) return
-        StreamedRewrite.rewrite(this, plan, chunks, "DELETE",
-          Map("predicate" -> condition)) { (_, paths, snapC, _, staged) =>
-          // readForRewrite: on row-tracked tables the KEPT rows carry
-          // their ids into the rewritten files
-          val kept = readForRewrite(snapC, paths).filter(!hit)
-          // persisted CDC: the deleted rows, so changes() never has to
-          // diff the rewritten files. Its scan overlaps the kept-rows
-          // write (two independent scans of the same touched files).
-          staged.startCdc("graft-delete-cdc-stage") {
-            readFiles(snapC, paths).filter(hit)
-              .withColumn("_change_type", lit("delete"))
-          }
-          staged.data.append(LakeWriter.writeFiles(kept, tablePath,
-            snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
-            snapC.metadata.properties, computeLight = true))
-          staged.joinCdc()
-        }
+      case None => rewriteWhere(plan, "DELETE", condition, None)
     }
   }
 
-  /** Merge-on-read DELETE: soft-delete matching rows by writing their
-    * physical row indices to [[DeletionVector]] sidecars and
-    * re-adding each touched file's log entry with the DV descriptor.
-    * I/O is O(matching rows) — at a 100 TB table where a predicate
-    * touches 1% of rows in every file, copy-on-write rewrites the
-    * whole table while this writes a few MB of index sidecars per
-    * file. The only shuffle carries (file, row_index) pairs of the
-    * DELETED rows; DV files are written from executors (one task per
-    * file group), and the driver sees only per-file descriptors.
-    * A file whose remaining live count reaches zero is removed
-    * outright instead of carrying a full-file DV.
-    */
-  private def deleteWithDv(
-      plan: DmlPlan, cond: Column, condition: String): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    if (plan.isEmpty) return
-    val fields = plan.schema.fields.toSeq
-    val FILE = "__graft_dv_file"
-    val IDX = "__graft_dv_idx"
-    // ONE full scan feeds everything: unlike copy-on-write (which
-    // needs a touched-file list up front to rewrite whole files), a DV
-    // delete only needs the MATCHING rows — so the touched set is
-    // derived from the cached hits instead of a separate discovery
-    // pass, halving the table scans per DELETE. Existing DVs are
-    // already applied by the with-meta frame, so re-deleting a
-    // soft-deleted row is impossible by construction.
-    val hits = plan.withMetaDF
-      .filter(coalesce(cond, lit(false)))
-      .select(fields.map(f => col(quoted(f.name))) ++ Seq(
-        col("_metadata.file_path").as(FILE),
-        col("_metadata.row_index").as(IDX)): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val chunks = StreamedRewrite.split(this, plan, hits.select(col(FILE)))
-      if (chunks.count > 0)
-        StreamedRewrite.rewrite(this, plan, chunks, "DELETE",
-          Map("predicate" -> condition), dvMode = true) {
-          (i, paths, snapC, _, staged) =>
-            val hitsC = hits.filter(chunks.memberOf(col(FILE), i))
-            staged.startCdc("graft-dv-delete-cdc-stage") {
-              hitsC.select(fields.map(f => col(quoted(f.name))): _*)
-                .withColumn("_change_type", lit("delete"))
-            }
-            staged.stageDv(snapC, paths, hitsC.select(col(FILE), col(IDX)))
-            staged.joinCdc()
-        }
-    } finally { hits.unpersist(false); () }
-  }
-
-  /** DV-staging core shared by merge-on-read DELETE, UPDATE and MERGE:
-    * write (or grow) one deletion-vector sidecar per file for the
-    * given (file path, row index) pairs. Only those pairs shuffle
+  /** Write-side core of deletion vectors, for every DML on a
+    * merge-on-read table ([[StreamedRewrite.rewrite]]): write (or
+    * grow) one deletion-vector sidecar per file for the given
+    * (file path, row index) pairs. Only those pairs shuffle
     * (repartition by file + in-partition sort streams each file's
     * indices into one task in order); existing DVs are merged on the
-    * executor; the driver sees only per-file descriptors. The
-    * full-dead removes and DV re-adds go to `dvSpill`, whose sweep
-    * covers the sidecars from then on; returns the DV re-add count.
+    * executor; the driver sees only per-file descriptors. A file
+    * whose remaining live count reaches zero is removed outright
+    * instead of carrying a full-file DV. The full-dead removes and DV
+    * re-adds go to `dvSpill`, whose sweep covers the sidecars from
+    * then on; returns the DV re-add count.
     */
   private[lake] def stageDeletionVectors(
       snap: Snapshot, touched: Seq[String], pairs: DataFrame,
@@ -869,106 +798,80 @@ final class LakeTable private (
     }
   }
 
-  /** `raw` evaluated exactly once for all its consumers (the staged
-    * data, the CDC pre/postimages, the DV pairs):
-    *  - deterministic expressions: a DISK_ONLY cache — a best-effort
-    *    recompute after block loss reproduces identical values, and
-    *    the rows at 2x width never pressure executor memory;
-    *  - non-deterministic ones (rand(), uuid(), current_timestamp):
-    *    staged to parquet scratch, because cache blocks are
-    *    best-effort and a recompute would silently diverge between
-    *    the data files and the CDC files.
+  /** DELETE (`set` None) or UPDATE of the rows matching `condition`,
+    * as row changes for [[StreamedRewrite.rewrite]], which applies
+    * them copy-on-write or with deletion vectors. Discovery follows
+    * the strategy:
+    *  - copy-on-write rewrites whole files, so one `_metadata` scan
+    *    names the touched files and each chunk's frame holds every row
+    *    of its files, KEEP where the predicate fails;
+    *  - with deletion vectors only the matching rows matter, so ONE
+    *    scan evaluates them once: that frame names the touched files
+    *    and every chunk's rows are its slice. Existing DVs are applied
+    *    by the scan, so a soft-deleted row is never re-deleted.
+    * Row-tracked tables carry [[RowTracking.COL]] wherever rows are
+    * written, so an updated or kept row keeps its id (same logical
+    * row, new version — Delta's row-tracking semantics).
     */
-  private def evaluatedOnce[A](raw: DataFrame)(body: DataFrame => A): A = {
-    val deterministic =
-      raw.queryExecution.analyzed.expressions.forall(_.deterministic)
-    var scratch: Option[java.nio.file.Path] = None
-    val df =
-      if (deterministic)
-        raw.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      else {
-        val dir = Paths.get(tablePath,
-          s".staging-upd-${java.util.UUID.randomUUID()}")
-        raw.write.mode("overwrite").parquet(dir.toString)
-        scratch = Some(dir)
-        spark.read.parquet(dir.toString)
-      }
-    try body(df)
-    finally {
-      if (deterministic) df.unpersist(false)
-      scratch.foreach(LakeWriter.deleteRecursively)
-    }
-  }
-
-  /** Merge-on-read UPDATE (deletion-vector tables): soft-delete the
-    * OLD versions of matching rows via DV sidecars and append only the
-    * UPDATED rows as new files. Write volume is O(matching rows) —
-    * copy-on-write rewrites every touched file wholesale, so a 1%-hit
-    * UPDATE across a 100 TB table writes ~1 TB there vs ~1% of that
-    * here plus index sidecars. Same single-evaluation discipline as
-    * copy-on-write UPDATE: one projection feeds the appended data, the
-    * CDC pre/postimage, and the DV index pairs.
-    */
-  private def updateWithDv(plan: DmlPlan, cond: Column,
-      condition: String, set: Map[String, String]): Unit = {
+  private def rewriteWhere(plan: DmlPlan, operation: String,
+      condition: String, set: Option[Map[String, String]]): Unit = {
+    import StreamedRewrite.{Changes, FILE, IDX, KEEP, KIND, post}
     if (plan.isEmpty) return
     val fields = plan.schema.fields.toSeq
-    def newName(n: String) = s"_graft_upd_$n"
-    val FILE = "__graft_dv_file"
-    val IDX = "__graft_dv_idx"
-    // Matching rows only, in ONE full scan (the touched set falls out
-    // of the materialized projection below — no separate discovery
-    // pass; see deleteWithDv): old values for CDC, SET-applied new
-    // values, (file, idx) identity for the DV. Existing DVs are
-    // applied by the scan. Row-tracked tables also carry
-    // RowTracking.COL so the updated copies keep their ids.
-    val rt = RowTracking.enabled(plan.metadata.properties)
-    val rtCols =
-      if (rt) Seq(col(quoted(RowTracking.COL))) else Nil
-    val raw = plan.withMetaDF(withRowIds = rt)
-      .filter(coalesce(cond, lit(false)))
-      .select(fields.map(f => col(quoted(f.name))) ++
-        fields.map { f =>
-          set.get(f.name).map(e => expr(e)).getOrElse(col(quoted(f.name)))
-            .cast(f.dataType).as(newName(f.name))
-        } ++ rtCols ++ Seq(
+    val hit = coalesce(expr(condition), lit(false))
+    val kind =
+      lit(if (set.isDefined) StreamedRewrite.UPDATE else StreamedRewrite.DELETE)
+    val dv = StreamedRewrite.mergeOnRead(plan)
+    val withIds = RowTracking.enabled(plan.metadata.properties) &&
+      (set.isDefined || !dv)
+    // KIND in its own projection under the postimages that read it: a
+    // non-deterministic predicate is evaluated once per row
+    def changes(scan: DataFrame, kindOf: Column): DataFrame =
+      scan.withColumn(KIND, kindOf).select(
+        fields.map(f => col(quoted(f.name))) ++
+        set.toSeq.flatMap(s => fields.map { f =>
+          s.get(f.name)
+            .map(e => when(col(KIND) === kind, expr(e))
+              .otherwise(col(quoted(f.name))))
+            .getOrElse(col(quoted(f.name)))
+            .cast(f.dataType).as(post(f.name))
+        }) ++ Seq(col(KIND),
           col("_metadata.file_path").as(FILE),
-          col("_metadata.row_index").as(IDX)): _*)
-    evaluatedOnce(raw) { projected =>
-      val chunks =
-        StreamedRewrite.split(this, plan, projected.select(col(FILE)))
+          col("_metadata.row_index").as(IDX)) ++
+        (if (withIds) Seq(col(quoted(RowTracking.COL))) else Nil): _*)
+    // a DELETE's postimage columns alias its preimage, projected over
+    // the evaluated frame
+    def withPost(df: DataFrame): DataFrame =
+      if (set.isDefined) df
+      else df.select(col("*") +:
+        fields.map(f => col(quoted(f.name)).as(post(f.name))): _*)
+    val params = Map("predicate" -> condition)
+    if (dv)
+      StreamedRewrite.withEvaluated(this,
+        changes(plan.withMetaDF(withIds).filter(hit), kind)) { hits =>
+        val chunks = StreamedRewrite.split(this, plan, hits.select(col(FILE)))
+        if (chunks.count > 0)
+          StreamedRewrite.rewrite(this, plan, chunks, operation, params) { c =>
+            Changes(Some(withPost(hits.filter(chunks.memberOf(col(FILE),
+              c.index)))), updates = set.isDefined)
+          }
+      }
+    else {
+      val chunks = StreamedRewrite.split(this, plan,
+        plan.withMetaDF.filter(hit).select(col("_metadata.file_path")))
       if (chunks.count > 0)
-        StreamedRewrite.rewrite(this, plan, chunks, "UPDATE",
-          Map("predicate" -> condition), dvMode = true) {
-          (i, paths, snapC, _, staged) =>
-            val projC = projected.filter(chunks.memberOf(col(FILE), i))
-            val updated = projC.select(
-              fields.map(f => col(quoted(newName(f.name))).as(f.name)) ++
-                rtCols: _*)
-            if (snapC.metadata.constraints.nonEmpty)
-              LakeWriter.enforceConstraints(updated.drop(RowTracking.COL),
-                snapC.metadata.constraints, tablePath)
-            staged.startCdc("graft-dv-update-cdc-stage") {
-              val pre = projC
-                .select(fields.map(f => col(quoted(f.name))): _*)
-                .withColumn("_change_type", lit("delete"))
-              // CDC carries table columns only — the row id is not part
-              // of the change-feed contract
-              val post = updated.drop(RowTracking.COL)
-                .withColumn("_change_type", lit("insert"))
-              pre.unionByName(post)
-            }
-            staged.data.append(LakeWriter.writeFiles(updated, tablePath,
-              snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
-              snapC.metadata.properties, computeLight = true))
-            staged.stageDv(snapC, paths, projC.select(col(FILE), col(IDX)))
-            staged.joinCdc()
+        StreamedRewrite.rewrite(this, plan, chunks, operation, params) { c =>
+          Changes(Some(withPost(c.evaluated(changes(
+            readFilesWithMeta(c.snap, c.paths, withIds),
+            when(hit, kind).otherwise(KEEP))))), updates = set.isDefined)
         }
     }
   }
 
   /** Predicate UPDATE: set columns from expression strings where the
-    * condition holds; only touched files are rewritten.
+    * condition holds ([[rewriteWhere]]). The SET expressions are
+    * evaluated exactly once per row, so the CDC postimage is
+    * byte-identical to the written data even for rand() or uuid().
     */
   def update(condition: String, set: Map[String, String]): Unit = {
     val plan = dmlPlan()
@@ -978,65 +881,7 @@ final class LakeTable private (
     require(identityTargets.isEmpty,
       s"cannot UPDATE identity column(s) ${identityTargets.mkString(", ")}" +
       s" of $tablePath (GENERATED ALWAYS AS IDENTITY)")
-    val cond = expr(condition)
-    if (LakeTable.dvEnabled(plan.metadata))
-      return updateWithDv(plan, cond, condition, set)
-    if (plan.isEmpty) return
-    val matchedFlag = coalesce(cond, lit(false))
-    val chunks = StreamedRewrite.split(this, plan,
-      plan.withMetaDF.filter(matchedFlag).select(col("_metadata.file_path")))
-    if (chunks.count == 0) return
-    val fields = plan.schema.fields.toSeq
-    def newName(n: String) = s"_graft_upd_$n"
-    // row-tracked tables thread RowTracking.COL through the
-    // projection so an UPDATED row keeps its id (same logical row,
-    // new version — Delta's row-tracking semantics for updates)
-    val rt = RowTracking.enabled(plan.metadata.properties)
-    val rtCols =
-      if (rt) Seq(col(quoted(RowTracking.COL))) else Nil
-    StreamedRewrite.rewrite(this, plan, chunks, "UPDATE",
-      Map("predicate" -> condition)) { (_, paths, snapC, _, staged) =>
-      // ONE evaluated projection carries the original values, the new
-      // values, and the matched flag, so the SET expressions are
-      // evaluated exactly once per row, the CDC postimage is
-      // byte-identical to the rewritten data, and the touched files
-      // are scanned once instead of twice
-      val raw = readForRewrite(snapC, paths).select(
-        fields.map(f => col(quoted(f.name))) ++
-        fields.map { f =>
-          (set.get(f.name) match {
-            case Some(e) => when(matchedFlag, expr(e))
-              .otherwise(col(quoted(f.name)))
-            case None => col(quoted(f.name))
-          }).cast(f.dataType).as(newName(f.name))
-        } ++ rtCols :+ matchedFlag.as("_graft_upd_matched"): _*)
-      evaluatedOnce(raw) { projected =>
-        val updated = projected.select(
-          fields.map(f => col(quoted(newName(f.name))).as(f.name)) ++
-            rtCols: _*)
-        if (snapC.metadata.constraints.nonEmpty)
-          LakeWriter.enforceConstraints(updated.drop(RowTracking.COL),
-            snapC.metadata.constraints, tablePath)
-        // persisted CDC: preimage (delete) + postimage (insert) of ONLY
-        // the matched rows, read back from the same materialized
-        // projection the data write consumes, on its own thread
-        staged.startCdc("graft-update-cdc-stage") {
-          val matchedRows = projected.filter(col("_graft_upd_matched"))
-          val pre = matchedRows
-            .select(fields.map(f => col(quoted(f.name))): _*)
-            .withColumn("_change_type", lit("delete"))
-          val post = matchedRows
-            .select(fields.map(f =>
-              col(quoted(newName(f.name))).as(f.name)): _*)
-            .withColumn("_change_type", lit("insert"))
-          pre.unionByName(post)
-        }
-        staged.data.append(LakeWriter.writeFiles(updated, tablePath,
-          snapC.partitionColumns, ColumnMapping.overrides(snapC.metadata),
-          snapC.metadata.properties, computeLight = true))
-        staged.joinCdc()
-      }
-    }
+    rewriteWhere(plan, "UPDATE", condition, Some(set))
   }
 
   /** ADD CONSTRAINT (Delta CHECK-constraint analog): the existing data
@@ -1559,8 +1404,8 @@ final class LakeTable private (
     * table no longer pays a full serial driver replay. The mtime
     * clause (c) is what retires EXPIRED tombstones without ever
     * enumerating them, and what sweeps untracked debris: scratch
-    * `.staging-*` dirs orphaned by a crashed MERGE/UPDATE, aged
-    * change-data files, conversion leftovers. Files of a shallow-clone
+    * `.staging-*` dirs orphaned by a crashed DML, aged change-data
+    * files, conversion leftovers. Files of a shallow-clone
     * source are referenced by absolute path and live outside this
     * table's root, so the listing never sees (and never deletes) them
     * — Delta's rule for cloned files. As with Delta, retention 0 is
@@ -2825,19 +2670,13 @@ object LakeTable {
       k.stripPrefix(PROP_GENERATED_PREFIX) -> v
     }
 
-  /** Whether DML on this snapshot's table should persist CDC files. */
-  private[lake] def cdfEnabled(snap: Snapshot): Boolean =
-    cdfEnabled(snap.metadata)
-
+  /** Whether DML on this table should persist CDC files. */
   private[lake] def cdfEnabled(meta: Metadata): Boolean =
     meta.properties.get(PROP_ENABLE_CDF).forall(_.toBoolean)
 
-  /** Whether DELETE on this snapshot's table writes deletion vectors
-    * (merge-on-read) instead of rewriting files (copy-on-write).
+  /** Whether DML on this table writes deletion vectors (merge-on-read)
+    * instead of rewriting files (copy-on-write).
     */
-  private[lake] def dvEnabled(snap: Snapshot): Boolean =
-    dvEnabled(snap.metadata)
-
   private[lake] def dvEnabled(meta: Metadata): Boolean =
     meta.properties.get(PROP_ENABLE_DV).exists(_.toBoolean)
 

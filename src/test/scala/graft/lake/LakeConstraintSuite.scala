@@ -266,55 +266,83 @@ class LakeConstraintSuite extends SparkSuite {
       !java.nio.file.Files.exists(LakeLog.resolveFile(path, p))))
   }
 
+  /** The two table kinds every non-deterministic DML case runs on. */
+  private val tableKinds = Seq(
+    "copy-on-write" -> Map.empty[String, String],
+    "deletion vectors" -> Map(LakeTable.PROP_ENABLE_DV -> "true"))
+
+  /** A one-file table of ids 1..n with v = 0.0, for each table kind. */
+  private def forEachKind(name: String, n: Long)(
+      body: (String, LakeTable) => Unit): Unit =
+    tableKinds.foreach { case (kind, props) =>
+      val path = tablePath(s"$name-${kind.replace(' ', '-')}")
+      LakeWriter.write((1L to n).map(i => (i, 0.0)).toDF("id", "v")
+        .coalesce(1), path, properties = props)
+      withClue(s"[$kind] ")(body(path, LakeTable.forPath(spark, path)))
+    }
+
   test("UPDATE cdc postimage matches table data for non-deterministic SET") {
-    val path = tablePath("cdc-nd")
-    LakeWriter.write((1L to 20L).map(i => (i, 0.0)).toDF("id", "v")
-      .coalesce(1), path)
-    val t = LakeTable.forPath(spark, path)
-    // uuid()-style SET: a second evaluation would produce different
-    // values than the ones committed to the table
-    t.update("id <= 10", Map("v" -> "rand() + id"))         // v1
-    val tableRows = t.toDF.filter("id <= 10")
-      .select("id", "v").as[(Long, Double)].collect().toMap
-    val postimages = t.changes(1)
-      .filter("_change_type = 'insert'")
-      .select("id", "v").as[(Long, Double)].collect().toMap
-    assert(postimages.keySet === tableRows.keySet)
-    // byte-identical, not merely statistically similar
-    postimages.foreach { case (id, v) => assert(v === tableRows(id)) }
-    // preimages are the original values
-    val pre = t.changes(1).filter("_change_type = 'delete'")
-      .select("id", "v").as[(Long, Double)].collect().toMap
-    assert(pre.values.forall(_ == 0.0) && pre.size === 10)
+    forEachKind("cdc-nd", 20L) { (path, t) =>
+      // rand()-valued SET: a second evaluation would produce different
+      // values than the ones committed to the table
+      t.update("id <= 10", Map("v" -> "rand() + id"))       // v1
+      val tableRows = t.toDF.filter("id <= 10")
+        .select("id", "v").as[(Long, Double)].collect().toMap
+      val postimages = t.changes(1)
+        .filter("_change_type = 'insert'")
+        .select("id", "v").as[(Long, Double)].collect().toMap
+      assert(postimages.keySet === tableRows.keySet)
+      // byte-identical, not merely statistically similar
+      postimages.foreach { case (id, v) => assert(v === tableRows(id)) }
+      // preimages are the original values
+      val pre = t.changes(1).filter("_change_type = 'delete'")
+        .select("id", "v").as[(Long, Double)].collect().toMap
+      assert(pre.values.forall(_ == 0.0) && pre.size === 10)
+      assertNoStagedDebris(path)
+    }
   }
 
   test("MERGE cdc matches table data for non-deterministic SET and INSERT") {
-    val path = tablePath("cdc-nd-merge")
-    LakeWriter.write((1L to 20L).map(i => (i, 0.0)).toDF("id", "v")
-      .coalesce(1), path)
-    val t = LakeTable.forPath(spark, path)
-    // rand()-valued update AND insert: a second evaluation would
-    // produce different values than the ones written to the table
-    t.as("t").merge(
-        (1L to 30L).map(Tuple1(_)).toDF("sid").as("s"), "t.id = s.sid")
-      .whenMatchedUpdate(Map("v" -> "rand() + t.id"))
-      .whenNotMatchedInsert(
-        Map("id" -> "s.sid", "v" -> "rand() + s.sid"))
-      .execute()                                           // v1
-    val tableRows = t.toDF.select("id", "v")
-      .as[(Long, Double)].collect().toMap
-    assert(tableRows.size === 30)
-    val postimages = t.changes(1).filter("_change_type = 'insert'")
-      .select("id", "v").as[(Long, Double)].collect().toMap
-    assert(postimages.keySet === (1L to 30L).toSet)
-    // byte-identical to the committed data, for updates AND inserts
-    postimages.foreach { case (id, v) => assert(v === tableRows(id)) }
-    // preimages: the 20 original rows
-    val pre = t.changes(1).filter("_change_type = 'delete'")
-      .select("id", "v").as[(Long, Double)].collect().toMap
-    assert(pre.size === 20 && pre.values.forall(_ == 0.0))
-    // scratch staging cleaned up after commit
-    assertNoStagedDebris(path)
+    forEachKind("cdc-nd-merge", 20L) { (path, t) =>
+      // rand()-valued update AND insert: a second evaluation would
+      // produce different values than the ones written to the table
+      t.as("t").merge(
+          (1L to 30L).map(Tuple1(_)).toDF("sid").as("s"), "t.id = s.sid")
+        .whenMatchedUpdate(Map("v" -> "rand() + t.id"))
+        .whenNotMatchedInsert(
+          Map("id" -> "s.sid", "v" -> "rand() + s.sid"))
+        .execute()                                         // v1
+      val tableRows = t.toDF.select("id", "v")
+        .as[(Long, Double)].collect().toMap
+      assert(tableRows.size === 30)
+      val postimages = t.changes(1).filter("_change_type = 'insert'")
+        .select("id", "v").as[(Long, Double)].collect().toMap
+      assert(postimages.keySet === (1L to 30L).toSet)
+      // byte-identical to the committed data, for updates AND inserts
+      postimages.foreach { case (id, v) => assert(v === tableRows(id)) }
+      // preimages: the 20 original rows
+      val pre = t.changes(1).filter("_change_type = 'delete'")
+        .select("id", "v").as[(Long, Double)].collect().toMap
+      assert(pre.size === 20 && pre.values.forall(_ == 0.0))
+      // scratch staging cleaned up after commit
+      assertNoStagedDebris(path)
+    }
+  }
+
+  test("DELETE cdc records exactly the rows a non-deterministic predicate removed") {
+    forEachKind("cdc-nd-delete", 200L) { (path, t) =>
+      t.delete("rand() < 0.5")                             // v1
+      val left = (1L to 200L).toSet --
+        t.toDF.select("id").as[Long].collect().toSet
+      assert(left.nonEmpty && left.size < 200)
+      val deletes = t.changes(1).filter("_change_type = 'delete'")
+        .select("id").as[Long].collect().toSeq
+      // exactly once each: no delete record for a surviving row, none
+      // missing for a removed one
+      assert(deletes.sorted === left.toSeq.sorted)
+      assert(t.changes(1).filter("_change_type <> 'delete'").count() === 0)
+      assertNoStagedDebris(path)
+    }
   }
 
   test("MERGE persists cdc: upsert emits preimage delete + postimage insert") {

@@ -76,6 +76,66 @@ class LakePropertySuite extends SparkSuite with TableDrivenPropertyChecks {
     }
   }
 
+  test("copy-on-write and deletion-vector tables agree under random DML") {
+    // The apply strategy must not change what a DML does: one seeded
+    // sequence of DELETE, UPDATE and MERGE (update, conditional
+    // delete, insert, by-source delete) on a copy-on-write copy and a
+    // deletion-vector copy leaves both with the same rows, and records
+    // the same change multiset, after every op.
+    forAll(Table(("seed", "tracked"), (5, false), (23, false), (61, true))) {
+      (seed, tracked) =>
+        val rnd = new scala.util.Random(seed)
+        val props = if (tracked) Map(RowTracking.PROP -> "true")
+          else Map.empty[String, String]
+        val paths = Seq("cow", "dv").map(m => tablePath(s"prop-xm-$seed-$m"))
+        val data = (1L to 60L).map(i => (i, s"k${i % 7}", (i % 11) * 1.5))
+          .toDF("id", "k", "v").coalesce(3)
+        LakeWriter.write(data, paths(0), properties = props)
+        LakeWriter.write(data, paths(1),
+          properties = props + (LakeTable.PROP_ENABLE_DV -> "true"))
+        val tables = paths.map(LakeTable.forPath(spark, _))
+        var nextId = 61L
+        def rows(t: LakeTable): Seq[String] =
+          t.toDF.select("id", "k", "v").collect().map(_.toString).sorted.toSeq
+        def changed(t: LakeTable, v: Long): Seq[String] =
+          t.changes(v, v).select("_change_type", "id", "k", "v")
+            .collect().map(_.toString).sorted.toSeq
+        (1 to 6).foreach { step =>
+          val m = 2 + rnd.nextInt(5)
+          val r = rnd.nextInt(m)
+          val (what, op): (String, LakeTable => Unit) = rnd.nextInt(3) match {
+            case 0 => (s"DELETE id % $m = $r", _.delete(s"id % $m = $r"))
+            case 1 =>
+              val d = rnd.nextInt(9)
+              (s"UPDATE id % $m = $r",
+                _.update(s"id % $m = $r",
+                  Map("v" -> s"v * 2 + $d", "k" -> "concat(k, 'u')")))
+            case _ =>
+              val hits = rnd.shuffle((1L until nextId).toList).take(8)
+              val fresh = (nextId until nextId + 3).toList
+              nextId += 3
+              val src = (hits ++ fresh).map { id =>
+                (id, s"s$step", (rnd.nextInt(20) - 5).toDouble)
+              }.toDF("id", "k", "v")
+              (s"MERGE by-source id % $m = $r", t => t.as("t")
+                .merge(src.as("s"), "t.id = s.id")
+                .whenMatchedDelete("s.v < 0")
+                .whenMatchedUpdate(Map("k" -> "s.k", "v" -> "t.v + s.v"))
+                .whenNotMatchedInsert(
+                  Map("id" -> "s.id", "k" -> "s.k", "v" -> "s.v"))
+                .whenNotMatchedBySourceDelete(s"t.id % $m = $r")
+                .execute())
+          }
+          tables.foreach(op)
+          val clue = s"seed=$seed step=$step $what"
+          val Seq(vc, vd) = paths.map(new LakeLog(_).latestVersion)
+          assert(vc === vd, clue)
+          assert(rows(tables(0)) === rows(tables(1)), clue)
+          assert(changed(tables(0), vc) === changed(tables(1), vd), clue)
+        }
+    }
+  }
+
   test("merging the same source twice is a no-op (upsert idempotence)") {
     forAll(Table("n", 10, 57, 200)) { n =>
       val path = freshTable(n)
