@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Driver-run benchmark: executes every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints the canonical ONE-JSON-line result
@@ -16,6 +18,11 @@ import org.apache.spark.sql.SparkSession
   * that is pure noise. A second JSON line {"metric":"spread",...}
   * (printed BEFORE the canonical line) carries max-min per query so
   * round-over-round comparisons can tell signal from variance.
+  *
+  * bench_full.json's per-query map also carries each gate's codegen
+  * `compiles` and `compileMs` (Spark's `CodegenMetrics`, over its
+  * timed runs): the code-generation part of Spark's per-job fixed
+  * cost.
   *
   * Optional args: query names to run (default: all), for focused
   * profiling of one gate.
@@ -149,6 +156,10 @@ object Bench {
         s"[bench] loaded ${prior.size} prior query floors from $priorFile")
 
     val queries = SparkEntry.queries
+    // Spark's per-job fixed cost, code-generation part: the classes
+    // Janino compiled during each gate's runs and the milliseconds it
+    // took (JVM-wide counters, read around the runs)
+    val codegen = scala.collection.mutable.Map.empty[String, (Long, Double)]
     val names =
       if (args.nonEmpty) SparkEntry.queryOrder.filter(args.toSet)
       else SparkEntry.queryOrder
@@ -163,6 +174,8 @@ object Bench {
       // pressure). Each query starts with an empty block store and
       // pays exactly its own cache fills.
       spark.sharedState.cacheManager.clearCache()
+      val (compiles0, compileNs0) =
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         val ok =
@@ -178,6 +191,9 @@ object Bench {
         val sec = (System.nanoTime() - t0) / 1e9
         if (ok) sec else -1.0
       }
+      codegen(name) = (
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+        (CodeGenerator.compileTime - compileNs0) / 1e6)
       val best =
         if (times.exists(_ < 0)) -1.0 else times.min
       val spread =
@@ -370,7 +386,9 @@ object Bench {
       val spreadOf = results.map(r => r._1 -> r._3).toMap
       val perQuery = adjudicated.map { case (name, sec, _) =>
         val floor = prior.get(name)
+        val (compiles, compileMs) = codegen(name)
         s""""$name":{"sec":$sec,"spread":${spreadOf(name)},${""
+          }"compiles":$compiles,"compileMs":${f"$compileMs%.1f"},${""
           }"floor":${floor.fold("null")(_.toString)},${""
           }"ratioToFloor":${
             floor.filter(_ > 0).filter(_ => sec > 0)

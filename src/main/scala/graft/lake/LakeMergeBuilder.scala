@@ -458,11 +458,14 @@ final class LakeMergeBuilder private[lake] (
       // OVERLAPS the data and CDC writes (both read the same cache
       // blocks under Spark's block locks); its verdict lands before
       // any deletion vector is staged — duplicate rows would write
-      // duplicate DV indices — and before the commit
+      // duplicate DV indices — and before the commit. A plain count of
+      // the duplicate groups, not a limit: Spark names each limit's
+      // generated counter from a JVM-wide sequence, so a limit here
+      // would compile fresh classes on every MERGE.
       val dupCheck = rows.filter(_ => ambiguous).map { r =>
         LakeWriter.inParallel("graft-merge-dup-check") {
           r.filter(col(MATCHED)).groupBy(col(FILE), col(IDX))
-            .count().filter(col("count") > 1).limit(1).count()
+            .count().filter(col("count") > 1).count()
         }
       }
       Changes(rows, updates = updateIdxs.nonEmpty,

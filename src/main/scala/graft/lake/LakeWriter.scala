@@ -1066,20 +1066,26 @@ object LakeWriter {
   /** CHECK enforcement (Delta `delta.constraints.*` semantics): a row
     * violates a constraint only when the expression evaluates to
     * FALSE — NULL/unknown satisfies, per the SQL standard. One
-    * filter + limit(1) action per constraint, run only on tables that
-    * declare constraints; the scan is the data about to be committed
-    * (already in memory/shuffle), not the whole table.
+    * aggregate job counts every constraint's violations (a `count_if`
+    * each), run only on tables that declare constraints; the scan is
+    * the data about to be committed (already in memory/shuffle), not
+    * the whole table. The first violated constraint in name order is
+    * reported. No `limit`: Spark names each limit's generated counter
+    * from a JVM-wide sequence, so a limit would compile fresh classes
+    * on every write.
     */
   private[lake] def enforceConstraints(
       df: DataFrame,
       constraints: Map[String, String],
       tablePath: String): Unit = {
-    constraints.toSeq.sortBy(_._1).foreach { case (name, exprStr) =>
-      val violating = df.filter(s"NOT coalesce(($exprStr), true)")
-        .limit(1).count()
-      if (violating > 0) throw new ConstraintViolationException(
-        s"write to $tablePath violates CHECK constraint $name " +
-        s"($exprStr)")
+    val sorted = constraints.toSeq.sortBy(_._1)
+    val counts = df.selectExpr(sorted.map { case (_, exprStr) =>
+      s"count_if(NOT coalesce(($exprStr), true))"
+    }: _*).head()
+    sorted.indices.find(counts.getLong(_) > 0).foreach { i =>
+      val (name, exprStr) = sorted(i)
+      throw new ConstraintViolationException(
+        s"write to $tablePath violates CHECK constraint $name ($exprStr)")
     }
   }
 

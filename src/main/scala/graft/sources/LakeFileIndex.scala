@@ -81,7 +81,10 @@ final class LakeFileIndex(spark: SparkSession, val snap: Snapshot)
             val idx = partitionSchema.fieldIndex(a.name)
             BoundReference(idx, partitionSchema(idx).dataType, nullable = true)
         }
-        val predicate = Predicate.create(bound, Nil)
+        // the compiled form reads its constants by reference, so one
+        // class serves every partition value of a filter's shape
+        val predicate =
+          Predicate.create(graft.plans.StableLiterals.stabilize(bound), Nil)
         predicate.initialize(0)
         afterBuckets.filter(f => predicate.eval(partitionRow(f)))
       }
